@@ -338,12 +338,6 @@ def build_ngram_index(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-#: measurement seam (round 14): force the legacy single-partition
-#: vocabulary rank window so the distributed two-phase rank can be
-#: A/B'd interleaved in one process. Never set outside experiments/.
-_FORCE_LEGACY_RANK = False
-
-
 def _ngram_df_sorted(t: DataFrame) -> DataFrame:
     """Per doc: its distinct tokens DICTIONARY-ENCODED as an ascending
     ``array<int>`` of token ids, where id = row_number of the token in
@@ -362,23 +356,15 @@ def _ngram_df_sorted(t: DataFrame) -> DataFrame:
     change any intersection size). Round 14 (VERDICT r13 #1, guide
     §2.2): the rank itself is now the distributed two-phase
     ``_rank_vocab`` — no single-partition exchange anywhere in the
-    index build; ids are bit-identical to the legacy global
-    row_number (pinned by tests and the interleaved A/B)."""
+    index build; ids are bit-identical to a global row_number over
+    (df, token) (pinned by tests/test_dedup_props.py)."""
     tok = t.select(
         "doc_id", "lang", "len_band", F.size("ts").alias("n_toks"), F.explode("ts").alias("token")
     )
     # df = docs containing the token (ts is distinct per doc)
     dfreq = tok.groupBy("token").agg(F.count("*").alias("df"))
-    if _FORCE_LEGACY_RANK:
-        from pyspark.sql.window import Window
-
-        tdict = dfreq.select(
-            "token", F.row_number().over(Window.orderBy("df", "token")).alias("tid")
-        )
-    else:
-        tdict = _rank_vocab(dfreq)
     return (
-        tok.join(tdict, "token")
+        tok.join(_rank_vocab(dfreq), "token")
         .groupBy("doc_id", "lang", "len_band", "n_toks")
         .agg(F.sort_array(F.collect_list("tid")).alias("st"))
     )

@@ -1035,7 +1035,7 @@ def add_constraint(
 ) -> dict:
     """ALTER TABLE ... ADD CONSTRAINT ... CHECK — record a SQL
     predicate every future merge batch's visible rows must satisfy
-    (enforced at write time by ``_enforce_constraints``; SQL-standard
+    (enforced at write time by ``merge._validated_touched``; SQL-standard
     semantics — NULL passes, only FALSE violates). Like Delta, the
     EXISTING table is validated first (one scan of the visible rows —
     the honest cost of promising the invariant holds), then the

@@ -8,7 +8,10 @@ admin plane (``admin``, for in-line compaction only).
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,7 +35,6 @@ from .log import (
     _healed_manifest,
     _is_missing_file_error,
     _manifest_columns,
-    _publish_version,
     _read_manifest,
     _validate_merge_args,
 )
@@ -94,22 +96,6 @@ def _lww_combine(envelopes_or_rows: DataFrame, extra_names: tuple = ()) -> DataF
 OCC_CONFLICTS = 0
 OCC_REBASES = 0
 
-#: measurement seam (round 13, widened round 14): force the legacy
-#: aggregate-then-combine staging shape — snapshot cached, constraints
-#: validated against the cache, touched buckets from a separate
-#: distinct job — on BOTH the locked and the optimistic commit paths,
-#: so the single-exchange shapes can be A/B benchmarked INTERLEAVED
-#: in one process (serial A/B is hopeless on a noisy box — BENCH.md
-#: variance band). Never set outside experiments/.
-_FORCE_LEGACY_MERGE = False
-
-#: measurement seam (round 14): force the round-13 predicate-merge
-#: reporting shape (dedicated groupBy-count job over the cached
-#: envelope; stored buckets re-read from parquet by the commit) so the
-#: observe()-based counts + persisted-pruned-read restructure can be
-#: A/B'd interleaved. Never set outside experiments/.
-_FORCE_LEGACY_PREDICATE = False
-
 
 def merge_batch_into_lake(
     batch_df: DataFrame,
@@ -159,8 +145,8 @@ def merge_batch_into_lake(
     increasing per app.
 
     ``batch_df`` must be DETERMINISTIC (re-evaluable to the same
-    rows): the single-exchange path evaluates it in two independent
-    actions (the touched-bucket distinct and the staging write), so a
+    rows): the staging evaluates it in two independent actions (the
+    touched-bucket distinct and the staging write), so a
     batch whose keys derive from ``rand()`` or a non-replayable source
     can yield a touched/written bucket mismatch, which
     ``_stage_commit`` refuses with a RuntimeError rather than commit a
@@ -233,10 +219,11 @@ def sync_snapshot_into_lake(
             # restarted sink redelivering its last snapshot must be
             # metadata-speed, never a table scan
             return {"retired": 0, "version": int(manifest["version"])}
+        live = log._read_live(spark, lake_dir, manifest) if manifest else None
         union = batch_df
         retired = 0
-        if manifest is not None:
-            live = log._read_live(spark, lake_dir, manifest)
+        gone = None
+        try:
             if live is not None:
                 gone = (
                     live.filter(F.col("last_type") != "delete")
@@ -250,47 +237,34 @@ def sync_snapshot_into_lake(
                     )
                     .persist()
                 )
-                try:
-                    retired = gone.count()
-                    if retired:
-                        # the tombstone frame mirrors the batch's FULL
-                        # schema (envelope batches carry source/tx
-                        # columns beyond the core five): everything
-                        # except the key and the retirement stamp
-                        # null-fills at the batch's own types
-                        pinned = {
-                            "pk": F.col("entity_id").alias("pk"),
-                            "event_seq": F.lit(retire_seq)
-                            .cast("bigint")
-                            .alias("event_seq"),
-                            "ts": F.lit(retire_ts)
-                            .cast(batch_df.schema["ts"].dataType)
-                            .alias("ts"),
-                            "type": F.lit("delete").alias("type"),
-                        }
-                        tomb = gone.select(
-                            *[
-                                pinned.get(
-                                    f.name,
-                                    F.lit(None).cast(f.dataType).alias(f.name),
-                                )
-                                for f in batch_df.schema.fields
-                            ]
-                        )
-                        union = batch_df.unionByName(tomb)
-                    _merge_locked(
-                        spark, union, lake_dir, n_buckets, retain_versions,
-                        extra_cols, txn,
-                    )
-                finally:
-                    gone.unpersist()
-                m = log._read_manifest(lake_dir)
-                return {"retired": retired, "version": int(m["version"])}
-        _merge_locked(
-            spark, union, lake_dir, n_buckets, retain_versions, extra_cols, txn
-        )
-        m = log._read_manifest(lake_dir)
-        return {"retired": 0, "version": int(m["version"])}
+                retired = gone.count()
+            if retired:
+                # the tombstone frame mirrors the batch's FULL schema
+                # (envelope batches carry source/tx columns beyond the
+                # core five): everything except the key and the
+                # retirement stamp null-fills at the batch's own types
+                pinned = {
+                    "pk": F.col("entity_id").alias("pk"),
+                    "event_seq": F.lit(retire_seq).cast("bigint").alias("event_seq"),
+                    "ts": F.lit(retire_ts)
+                    .cast(batch_df.schema["ts"].dataType)
+                    .alias("ts"),
+                    "type": F.lit("delete").alias("type"),
+                }
+                tomb = gone.select(
+                    *[
+                        pinned.get(f.name, F.lit(None).cast(f.dataType).alias(f.name))
+                        for f in batch_df.schema.fields
+                    ]
+                )
+                union = batch_df.unionByName(tomb)
+            m = _merge_locked(
+                spark, union, lake_dir, n_buckets, retain_versions, extra_cols, txn
+            )
+        finally:
+            if gone is not None:
+                gone.unpersist()
+        return {"retired": retired, "version": int(m["version"])}
     finally:
         try:
             os.remove(lock)
@@ -528,13 +502,11 @@ def merge_into_lake(
             when_matched, when_not_matched, when_not_matched_by_source, writable
         )
         src = source_df.withColumn("pk", F.col("pk").cast("string")).persist()
-        # ONE validation/planning pass (round 13, guide §1.2): the
-        # duplicate-key check, the NULL-stamp check (the per-row
-        # analog of the scalar _validate_stamp — an unstamped row
-        # would silently lose every LWW combine, the r10-advice
-        # defect class) and the touched-bucket set all come out of a
-        # single per-key aggregation instead of three sequential
-        # collect jobs over the cached source.
+        # ONE validation/planning pass: the duplicate-key check, the
+        # NULL-stamp check (the per-row analog of the scalar
+        # _validate_stamp — an unstamped row would silently lose
+        # every LWW combine) and the touched-bucket set all come out
+        # of a single per-key aggregation over the cached source.
         need_buckets = manifest is not None and not when_not_matched_by_source
         per_key = [F.count("*").alias("__n")]
         if stamp_cols is not None:
@@ -579,18 +551,13 @@ def merge_into_lake(
             buckets = set(vrow["__buckets"] or []) if need_buckets else None
             current_all = log._read_live(spark, lake_dir, manifest, buckets)
             if current_all is not None:
-                if not _FORCE_LEGACY_PREDICATE:
-                    # ONE scan of the stored buckets per merge (round
-                    # 14, guide §2.4/§5): the clause join AND the
-                    # commit's union both consume this pruned read —
-                    # persisting it halves the stored-side parquet I/O
-                    # per merge (the commit previously re-read the same
-                    # touched buckets from disk). Covers every bucket
-                    # the commit can touch: envelope keys are drawn
-                    # from the source keys (whose buckets prune this
-                    # read) or, with by-source clauses, from the
-                    # full-table read. Moves no enforcement point.
-                    current_all = current_all.persist()
+                # ONE scan of the stored buckets per merge: the clause
+                # join AND the commit's union both consume this pruned
+                # read, persisted. It covers every bucket the commit
+                # can touch: envelope keys are drawn from the source
+                # keys (whose buckets prune this read) or, with
+                # by-source clauses, from the full-table read.
+                current_all = current_all.persist()
                 # matched = a VISIBLE live row; tombstoned entities are
                 # NOT MATCHED (their re-insert goes through insert clauses)
                 target = current_all.filter(F.col("last_type") != "delete")
@@ -656,9 +623,8 @@ def merge_into_lake(
                 fire = fire & F.expr(cond)
             action = F.when(fire, tag) if action is None else action.when(fire, tag)
         if action is None:
-            m = log._read_manifest(lake_dir)
             return {
-                "version": int(m["version"]) if m else 0,
+                "version": int(manifest["version"]) if manifest else 0,
                 "updated": 0,
                 "deleted": 0,
                 "inserted": 0,
@@ -725,68 +691,38 @@ def merge_into_lake(
             )
             .persist()
         )
-        # the cache has exactly two consumers either way: the commit's
-        # touched-bucket/validation action and the staging write (and,
-        # on the legacy seam, the counting job) — without it the clause
-        # join would run once per consumer.
+        # the cache has exactly two consumers: the commit's
+        # touched-bucket/validation action and the staging write —
+        # without it the clause join would run once per consumer.
+        # The per-clause outcome counts ride the commit's first action
+        # as observe() metrics (counting is reporting, not
+        # enforcement). An envelope no clause fired on touches no
+        # bucket, so _merge_locked commits nothing; the metrics are
+        # still populated, because with the writer lock held and the
+        # txn marker already checked, _merge_locked always runs its
+        # touched-set action.
+        from pyspark.sql import Observation
+
         kinds = {t: k for _g, t, k, _c, _s in live_plan}
         kind_of = {"update": "updated", "delete": "deleted", "insert": "inserted"}
+        obs = Observation()
+        observed = envelope.observe(
+            obs,
+            *[F.count(F.when(F.col("__action") == t, 1)).alias(t) for t in kinds],
+        )
+        m = _merge_locked(
+            spark,
+            observed.drop("__action"),
+            lake_dir,
+            n_buckets,
+            retain_versions,
+            tuple(carried),
+            txn,
+            current=current_all,
+        )
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
-        if _FORCE_LEGACY_PREDICATE:
-            by_tag = {
-                r["__action"]: int(r["n"])
-                for r in envelope.groupBy("__action")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            for tag, n in by_tag.items():
-                counts[kind_of[kinds[tag]]] += n
-            if sum(counts.values()):
-                _merge_locked(
-                    spark,
-                    envelope.drop("__action"),
-                    lake_dir,
-                    n_buckets,
-                    retain_versions,
-                    tuple(carried),
-                    txn,
-                )
-        else:
-            # round 14 (guide §1.2, VERDICT r13 #2): the per-clause
-            # outcome counts ride the commit's OWN first action as
-            # observe() metrics instead of a dedicated groupBy/collect
-            # job — one fewer Spark job per merge (per TRIGGER on the
-            # streaming predicate sinks), with the refuse-before-write
-            # point unmoved. Counting is reporting, not enforcement.
-            # An empty envelope commits nothing inside _merge_locked
-            # (empty touched set), matching the legacy skip; the
-            # metrics are always populated because _merge_locked runs
-            # at least one action here (this function holds the writer
-            # lock and already consumed the txn marker check, so its
-            # early returns are unreachable).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            observed = envelope.observe(
-                obs,
-                *[
-                    F.count(F.when(F.col("__action") == t, 1)).alias(t)
-                    for t in kinds
-                ],
-            )
-            _merge_locked(
-                spark,
-                observed.drop("__action"),
-                lake_dir,
-                n_buckets,
-                retain_versions,
-                tuple(carried),
-                txn,
-                current=current_all,
-            )
-            for tag, n in obs.get.items():
-                counts[kind_of[kinds[tag]]] += int(n)
-        m = log._read_manifest(lake_dir)
+        for tag, n in obs.get.items():
+            counts[kind_of[kinds[tag]]] += int(n)
         return {"version": int(m["version"]) if m else 0, **counts}
     finally:
         for df in (src, envelope, current_all):
@@ -842,14 +778,13 @@ def _resolve_base(lake_dir: str, n_buckets: int | None, adopt_legacy: bool):
 
 def _snapshot_shape(envelopes: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """Envelope rows projected to the snapshot column shape WITHOUT
-    the per-entity aggregation — the raw-row side of the single-
-    exchange merge (round 13): because the LWW combine is associative
-    and idempotent over its (last_ts, last_seq) comparator,
-    ``_lww_combine(current ∪ raw_rows)`` equals
-    ``_lww_combine(current ∪ snapshot_stream(raw))`` row for row, and
-    feeding raw rows lets ONE hash aggregation (with map-side partial
-    aggregation collapsing in-batch duplicates before the exchange —
-    guide §2.3) replace the old two-step aggregate-then-combine."""
+    the per-entity aggregation — the raw-row side of the merge:
+    because the LWW combine is associative and idempotent over its
+    (last_ts, last_seq) comparator, ``_lww_combine(current ∪ raw_rows)``
+    equals ``_lww_combine(current ∪ snapshot_stream(raw))`` row for
+    row, so ONE hash aggregation (map-side partial aggregation
+    collapses in-batch duplicates before the exchange) does the
+    in-batch LWW and the combine with the stored rows together."""
     return envelopes.select(
         F.col("pk").alias("entity_id"),
         F.col("event_seq").alias("last_seq"),
@@ -864,56 +799,35 @@ def _merged_for_batch(
     spark,
     lake_dir: str,
     manifest: dict | None,
-    updates,
-    n_buckets: int,
+    updates: DataFrame,
+    touched: list,
     all_extras=(),
-    touched: list | None = None,
     current=None,
 ):
-    """Shared merge compute: the touched-bucket list (metadata-sized
-    collect) and the LWW combine of the affected buckets' current
-    rows with the batch — everything about a merge EXCEPT the commit
-    protocol, so the locked/optimistic twins differ only in locking.
+    """The LWW combine of the ``touched`` buckets' stored rows with the
+    batch's snapshot-shaped ``updates`` — the frame the staging write
+    consumes (its only consumer, so ``updates`` is never persisted).
     ``all_extras`` is the POST-merge schema epoch (manifest columns +
     any accreted by this batch); both sides null-fill to it before
     combining.
 
-    ``touched`` pre-computed (round 13): callers on the single-
-    exchange path derive the touched buckets from the RAW batch (a
-    partial-aggregated distinct over ≤n_buckets ints — no wide
-    shuffle, no cache) and pass them in; ``updates`` then need not be
-    persisted, because exactly one downstream action (the staging
-    write) consumes it. When ``touched`` is None the legacy contract
-    holds: ``updates`` must already be persisted by the caller (the
-    legacy-seam constraint path, which reuses it across the validation
-    aggregate and the staging write).
-
-    ``current`` pre-read (round 14): the predicate merge already holds
-    a persisted read of the live buckets covering every bucket this
-    batch can touch, read under the SAME ``manifest``; filtering it to
-    ``touched`` replaces the commit's second parquet scan of the same
-    buckets. ``None`` = read the touched buckets from the manifest
-    (every other caller)."""
+    ``current``: the predicate merge already holds a persisted read of
+    the live buckets covering every bucket this batch can touch, read
+    under the SAME ``manifest``; filtering it to ``touched`` saves a
+    second parquet scan of the same buckets. ``None`` = read the
+    touched buckets from the manifest (every other caller)."""
     all_extras = list(all_extras)
-    if touched is None:
-        touched = sorted(
-            r["bucket"] for r in updates.select("bucket").distinct().collect()
-        )
-    if not touched:
-        return [], None
     if current is not None:
         current = current.filter(F.col("bucket").isin([int(b) for b in touched]))
     elif manifest:
         current = log._read_live(spark, lake_dir, manifest, set(touched))
     names = tuple(c["name"] for c in all_extras)
     updates = _align_extras(updates, all_extras)
-    if current is not None:
-        merged = _lww_combine(
-            _align_extras(current, all_extras).unionByName(updates), names
-        )
-    else:
-        merged = _lww_combine(updates, names)
-    return touched, merged
+    if current is None:
+        return _lww_combine(updates, names)
+    return _lww_combine(
+        _align_extras(current, all_extras).unionByName(updates), names
+    )
 
 
 def _touched_of_raw(batch_df: DataFrame, n_buckets: int) -> list:
@@ -1076,6 +990,85 @@ def _evolved_schema_from_types(
     return evolved_base + new_cols, bool(new_cols) or bool(widened)
 
 
+def _version_of(manifest: dict | None) -> int:
+    return manifest["version"] if manifest else 0
+
+
+class _Staged(NamedTuple):
+    """A merge staged against ``base``: everything its flip needs.
+    ``commit_rel`` is None when there is nothing to flip (a replayed
+    txn, or a batch that touches no bucket)."""
+
+    base: dict | None
+    n_buckets: int
+    touched: list
+    commit_rel: str | None = None
+    extra: dict | None = None
+
+
+def _stage_merge(
+    spark,
+    batch_df: DataFrame,
+    lake_dir: str,
+    n_buckets: int | None,
+    extra_cols: tuple,
+    txn: tuple | None,
+    locked: bool,
+    current=None,
+) -> _Staged:
+    """The one staging pipeline of every lake MERGE, locked or
+    optimistic — Delta's OptimisticTransaction shape: stage, validate,
+    then (in the caller) flip. Resolves the base manifest, skips a
+    replayed txn, derives the touched buckets, LWW-combines their
+    stored rows with the batch and writes the result into a fresh
+    commit dir. Touches no manifest.
+
+    ``locked``: the caller holds the writer lock across staging AND
+    flip, so the base cannot move — a pre-manifest legacy layout is
+    adopted, and the commit dir takes the plain name ``commits/<v>``
+    (GC reclaims a crashed one at once). Unlocked staging refuses
+    legacy layouts and names its dir ``commits/<v>.<nonce>``: writers
+    never collide, and GC's staging grace spares it until the flip.
+
+    One exchange, no cache: raw batch rows flow into the staging
+    write's one hash aggregation. The touched set comes from a
+    partial-aggregated distinct over the raw batch — or, on a
+    constrained table, from the same job as the CHECK validation
+    (``_validated_touched``), which refuses before anything is
+    written.
+
+    ``current``: an already-read live frame covering every bucket the
+    batch can touch, read under the manifest this merge resolves (the
+    predicate merge's persisted pruned read; see
+    ``_merged_for_batch``)."""
+    base, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=locked)
+    if _txn_already_applied(base, txn):
+        return _Staged(base, n_buckets, [])  # replayed batch: the marker makes it FREE
+    bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets)).cast("int")
+    updates = _snapshot_shape(batch_df, extra_cols).withColumn("bucket", bucket_col)
+    all_extras, evolved = _evolved_schema(base, updates, extra_cols)
+    cons = (base or {}).get("constraints", {})
+    if cons:
+        touched = _validated_touched(updates, all_extras, cons)
+    else:
+        touched = _touched_of_raw(batch_df, n_buckets)
+    if not touched:
+        return _Staged(base, n_buckets, [])
+    merged = _merged_for_batch(
+        spark, lake_dir, base, updates, touched, all_extras, current
+    )
+    commit_rel = f"commits/{_version_of(base) + 1:010d}"
+    if not locked:
+        commit_rel += f".{uuid.uuid4().hex[:8]}"
+    try:
+        log._stage_commit(lake_dir, merged, touched, commit_rel)
+    except Exception:
+        shutil.rmtree(os.path.join(lake_dir, commit_rel), ignore_errors=True)
+        raise
+    extra = {"columns": all_extras} if evolved else None
+    return _Staged(base, n_buckets, touched, commit_rel, extra)
+
+
 def _merge_locked(
     spark,
     batch_df: DataFrame,
@@ -1085,80 +1078,25 @@ def _merge_locked(
     extra_cols: tuple = (),
     txn: tuple | None = None,
     current=None,
-) -> None:
-    """``current``: optional ALREADY-READ live frame covering at least
-    every bucket this batch touches, read under the manifest this
-    merge commits against (the predicate merge passes its persisted
-    pruned read — see ``_merged_for_batch``). ``None`` everywhere
-    else."""
-    manifest, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=True)
-    if _txn_already_applied(manifest, txn):
-        return  # replayed batch: the marker makes the no-op FREE
-    bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets)).cast("int")
-    cons = (manifest or {}).get("constraints", {})
-    if _FORCE_LEGACY_MERGE:
-        # legacy aggregate-then-combine shape (rounds ≤12; kept as the
-        # interleaved-A/B seam): aggregate the batch into a cached
-        # snapshot, validate constraints against the cache, derive the
-        # touched buckets in a separate distinct job, combine the cache
-        # with the stored rows in a second aggregation.
-        updates = snapshot_stream(batch_df, extra_cols).withColumn(
-            "bucket", bucket_col
-        )
-        all_extras, evolved = _evolved_schema(manifest, updates, extra_cols)
-        updates = updates.persist()
-        try:
-            _enforce_constraints(manifest, updates, all_extras)
-            touched, merged = _merged_for_batch(
-                spark, lake_dir, manifest, updates, n_buckets, all_extras
-            )
-            if not touched:
-                return
-            _publish_version(
-                lake_dir,
-                manifest,
-                merged,
-                touched,
-                n_buckets,
-                retain_versions,
-                extra={"columns": all_extras} if evolved else None,
-                txn=txn,
-            )
-        finally:
-            updates.unpersist()
-        return
-    # Single-exchange merge (round 13; constraint path joined in round
-    # 14 — guide §2.3/§2.4): no cache, raw rows flow into the staging
-    # write's ONE hash aggregation (map-side partial aggregation
-    # collapses in-batch duplicates before the exchange; the LWW max
-    # is associative/idempotent, so the result is row-identical to the
-    # legacy aggregate-then-combine). Touched buckets come from a
-    # partial-aggregated distinct over the raw batch — or, on
-    # constrained tables, ride the SAME job as the CHECK validation
-    # (one per-key aggregation computes the batch's LWW winners, the
-    # violation counts over the visible winners, and the touched
-    # set; refusal still happens before any staging work, so the
-    # refuse-before-commit point is unmoved).
-    updates = _snapshot_shape(batch_df, extra_cols).withColumn("bucket", bucket_col)
-    all_extras, evolved = _evolved_schema(manifest, updates, extra_cols)
-    if cons:
-        touched = _validated_touched(updates, all_extras, cons)
-    else:
-        touched = _touched_of_raw(batch_df, n_buckets)
-    if not touched:
-        return
-    touched, merged = _merged_for_batch(
-        spark, lake_dir, manifest, updates, n_buckets, all_extras,
-        touched=touched, current=current,
+) -> dict | None:
+    """Stage and flip one MERGE while the caller holds the writer
+    lock: the flip lands on the very base the staging read, so no
+    rebase ever fires. Returns the committed manifest, or the base
+    when nothing committed. ``current``: see ``_stage_merge``."""
+    staged = _stage_merge(
+        spark, batch_df, lake_dir, n_buckets, extra_cols, txn,
+        locked=True, current=current,
     )
-    _publish_version(
+    if staged.commit_rel is None:
+        return staged.base
+    return _flip_version(
         lake_dir,
-        manifest,
-        merged,
-        touched,
-        n_buckets,
+        staged.base,
+        staged.commit_rel,
+        staged.touched,
+        staged.n_buckets,
         retain_versions,
-        extra={"columns": all_extras} if evolved else None,
+        extra=staged.extra,
         txn=txn,
     )
 
@@ -1206,19 +1144,16 @@ def _txn_already_applied(manifest: dict | None, txn: tuple | None) -> bool:
 
 
 def _validated_touched(updates: DataFrame, all_extras, cons: dict) -> list:
-    """CHECK validation and the touched-bucket set in ONE job (round
-    14, guide §1.2/§2.3 — VERDICT r13 #5): a fresh per-key LWW
-    aggregation of the raw snapshot-shaped batch rows computes the
-    batch's winners (row-identical to the legacy cached snapshot —
-    the combine is the module's semilattice), the violation counts
-    over the VISIBLE winners, and the distinct bucket set, in one
-    pass. Raises before any staging work — the refuse-before-commit
-    enforcement point is unmoved; only the snapshot cache and the
-    separate touched-bucket job are gone. Tombstones are exempt from
-    the CHECKs (payload nulled by design — the outer CASE guards the
-    expression from ever evaluating on them) but still contribute
-    their buckets. SQL-standard CHECK semantics: NULL (unknown)
-    passes, only FALSE violates."""
+    """CHECK constraints at write time (Delta's enforcement point)
+    and the touched-bucket set, in ONE job over the batch (never the
+    table): a per-key LWW aggregation of the raw snapshot-shaped batch
+    rows computes the batch's winners, the violation counts over the
+    VISIBLE winners, and the distinct bucket set. Raises before any
+    staging work — a refused batch writes nothing. Tombstones are
+    exempt from the CHECKs (payload nulled by design — the outer CASE
+    guards the expression from ever evaluating on them) but still
+    contribute their buckets. SQL-standard CHECK semantics: NULL
+    (unknown) passes, only FALSE violates."""
     names = tuple(c["name"] for c in all_extras)
     winners = _lww_combine(_align_extras(updates, all_extras), names)
     aggs = [
@@ -1237,32 +1172,6 @@ def _validated_touched(updates: DataFrame, all_extras, cons: dict) -> list:
             f"({ {n: cons[n] for n in bad} }); commit refused, table unchanged"
         )
     return sorted(row["__buckets"] or [])
-
-
-def _enforce_constraints(manifest: dict | None, updates: DataFrame, all_extras) -> None:
-    """CHECK constraints at write time (Delta's enforcement point):
-    every VISIBLE row of the batch must satisfy every recorded
-    constraint — one aggregate job over the batch (never the table),
-    zero cost when the table has no constraints. SQL-standard CHECK
-    semantics: NULL (unknown) passes, only FALSE violates. Tombstones
-    are exempt (their payload is nulled by design)."""
-    cons = (manifest or {}).get("constraints", {})
-    if not cons:
-        return
-    vis = _align_extras(updates, all_extras).filter(F.col("last_type") != "delete")
-    aggs = [
-        F.sum(
-            F.when(~F.coalesce(F.expr(e), F.lit(True)), 1).otherwise(0)
-        ).alias(n)
-        for n, e in sorted(cons.items())
-    ]
-    row = vis.agg(*aggs).first()
-    bad = {n: int(row[n]) for n in sorted(cons) if row[n]}
-    if bad:
-        raise ConstraintViolationError(
-            f"merge batch violates CHECK constraint(s) {bad} "
-            f"({ {n: cons[n] for n in bad} }); commit refused, table unchanged"
-        )
 
 
 #: one-shot guard for the cross-process race barrier below
@@ -1319,9 +1228,7 @@ def _occ_conflicts(base: dict | None, cur: dict | None, touched: list, n_buckets
     interleaved compaction (pure physical rewrite) never forces a
     recompute. A layout change (rebucket) always conflicts: bucket
     ids are not comparable across layouts."""
-    base_v = base["version"] if base else 0
-    cur_v = cur["version"] if cur else 0
-    if cur_v == base_v:
+    if _version_of(cur) == _version_of(base):
         return False
     if cur is None or cur["n_buckets"] != n_buckets:
         return True
@@ -1405,98 +1312,47 @@ def merge_batch_optimistic(
     moved manifest never clobbers a sibling app's watermark.
 
     ``batch_df`` must be DETERMINISTIC (re-evaluable) — same contract
-    and same reason as ``merge_batch_into_lake``: the single-exchange
-    staging evaluates it in independent actions."""
+    and same reason as ``merge_batch_into_lake``: the staging
+    (``_stage_merge``, shared with the locked writer) evaluates it in
+    independent actions."""
     _validate_merge_args(n_buckets, retain_versions)
     _validate_extra_cols(extra_cols)
     _validate_txn(txn)
-    import shutil
-    import uuid
-
     spark = batch_df.sparkSession
-    snap = snapshot_stream(batch_df, extra_cols)
-    #: staging carried across attempts: (base, nb, touched, commit_rel,
-    #: all_extras, evolved) — a lock timeout with an UNCHANGED manifest
-    #: keeps the staged result (re-running the identical Spark job buys
-    #: nothing)
+    #: staging carried across attempts: a lock timeout with an
+    #: UNCHANGED manifest keeps the staged result (re-running the
+    #: identical Spark job buys nothing)
     pending = None
     try:
         for attempt in range(max_attempts):
-            live = _read_manifest(lake_dir)
-            if pending is not None and (live["version"] if live else 0) == (
-                pending[0]["version"] if pending[0] else 0
-            ):
-                base, nb, touched, commit_rel, all_extras, evolved = pending
+            live_v = _version_of(_read_manifest(lake_dir))
+            if pending is not None and live_v == _version_of(pending.base):
+                staged, pending = pending, None
             else:
                 if pending is not None:
                     shutil.rmtree(
-                        os.path.join(lake_dir, pending[3]), ignore_errors=True
+                        os.path.join(lake_dir, pending.commit_rel), ignore_errors=True
                     )
-                pending = None
-                base, nb = _resolve_base(lake_dir, n_buckets, adopt_legacy=False)
-                if _txn_already_applied(base, txn):
-                    return base  # replayed batch: skip, zero Spark work
-                bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(nb)).cast("int")
-                cons = (base or {}).get("constraints", {})
-                legacy = _FORCE_LEGACY_MERGE
-                if legacy:
-                    # legacy shape (A/B seam, both constraint states):
-                    # cached snapshot, separate validation + touched jobs
-                    updates = snap.withColumn("bucket", bucket_col).persist()
-                else:
-                    # single-exchange staging (round 13; constraints
-                    # joined round 14 — see _merge_locked): raw rows, no
-                    # cache; the staging write's one aggregation does
-                    # in-batch LWW and combine together; constrained
-                    # tables fuse validation + touched into one job
-                    updates = _snapshot_shape(batch_df, extra_cols).withColumn(
-                        "bucket", bucket_col
-                    )
-                all_extras, evolved = _evolved_schema(base, updates, extra_cols)
-                commit_rel = None
+                    pending = None
                 try:
-                    if legacy:
-                        _enforce_constraints(base, updates, all_extras)
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras
-                        )
-                    elif cons:
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras,
-                            touched=_validated_touched(updates, all_extras, cons),
-                        )
-                    else:
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras,
-                            touched=_touched_of_raw(batch_df, nb),
-                        )
-                    if not touched:
-                        return base
-                    commit_rel = (
-                        f"commits/{(base['version'] if base else 0) + 1:010d}"
-                        f".{uuid.uuid4().hex[:8]}"
+                    staged = _stage_merge(
+                        spark, batch_df, lake_dir, n_buckets, extra_cols, txn,
+                        locked=False,
                     )
-                    log._stage_commit(lake_dir, merged, touched, commit_rel)
                 except Exception as exc:
-                    if commit_rel is not None:
-                        shutil.rmtree(
-                            os.path.join(lake_dir, commit_rel), ignore_errors=True
-                        )
                     # retry ONLY the documented GC-vs-read race: the
-                    # manifest moved AND the failure is a missing-file
-                    # error. A deterministic staging failure (schema /
-                    # analysis bug, bad input) re-raises immediately —
-                    # retrying it max_attempts times would surface as
+                    # manifest moved since this attempt began AND the
+                    # failure is a missing-file error. A deterministic
+                    # staging failure (schema / analysis bug, bad
+                    # input) re-raises immediately — retrying it
+                    # max_attempts times would surface as
                     # CommitConflictError and mask the root cause.
-                    live_now = _read_manifest(lake_dir)
-                    if (live_now["version"] if live_now else 0) != (
-                        base["version"] if base else 0
-                    ) and _is_missing_file_error(exc):
+                    moved = _version_of(_read_manifest(lake_dir)) != live_v
+                    if moved and _is_missing_file_error(exc):
                         continue
                     raise
-                finally:
-                    if legacy:
-                        updates.unpersist()
+                if staged.commit_rel is None:
+                    return staged.base  # replayed txn or empty batch
             if _race_hook is not None:
                 _race_hook(attempt)
             _env_race_barrier(attempt)
@@ -1509,7 +1365,7 @@ def merge_batch_optimistic(
                 # The staging is KEPT — if the holder commits nothing
                 # new on our buckets, the next attempt reuses it
                 # instead of re-running the identical merge job.
-                pending = (base, nb, touched, commit_rel, all_extras, evolved)
+                pending = staged
                 continue
             try:
                 cur = _healed_manifest(lake_dir)
@@ -1518,9 +1374,8 @@ def merge_batch_optimistic(
                     # version mid-race: applying ours on top would be
                     # the exact double apply the marker exists to stop
                     shutil.rmtree(
-                        os.path.join(lake_dir, commit_rel), ignore_errors=True
+                        os.path.join(lake_dir, staged.commit_rel), ignore_errors=True
                     )
-                    pending = None
                     return cur
                 # the staging must still exist before its pointers are
                 # published: a stage-to-flip gap longer than the GC
@@ -1529,22 +1384,21 @@ def merge_batch_optimistic(
                 # committer's GC collect it — flipping then would
                 # commit dangling bucket pointers. Treat a missing
                 # staging as a conflict and recompute.
-                staged_alive = os.path.isdir(os.path.join(lake_dir, commit_rel))
-                if staged_alive and not _occ_conflicts(base, cur, touched, nb):
-                    pending = None
-                    if (cur["version"] if cur else 0) != (
-                        base["version"] if base else 0
-                    ):
+                staged_alive = os.path.isdir(os.path.join(lake_dir, staged.commit_rel))
+                if staged_alive and not _occ_conflicts(
+                    staged.base, cur, staged.touched, staged.n_buckets
+                ):
+                    if _version_of(cur) != _version_of(staged.base):
                         global OCC_REBASES
                         OCC_REBASES += 1
                     return _flip_version(
                         lake_dir,
                         cur,
-                        commit_rel,
-                        touched,
-                        nb,
+                        staged.commit_rel,
+                        staged.touched,
+                        staged.n_buckets,
                         retain_versions,
-                        extra={"columns": all_extras} if evolved else None,
+                        extra=staged.extra,
                         txn=txn,
                     )
             finally:
@@ -1557,11 +1411,10 @@ def merge_batch_optimistic(
             # recompute against the manifest it produced
             global OCC_CONFLICTS
             OCC_CONFLICTS += 1
-            pending = None
-            shutil.rmtree(os.path.join(lake_dir, commit_rel), ignore_errors=True)
+            shutil.rmtree(os.path.join(lake_dir, staged.commit_rel), ignore_errors=True)
     finally:
         if pending is not None:
-            shutil.rmtree(os.path.join(lake_dir, pending[3]), ignore_errors=True)
+            shutil.rmtree(os.path.join(lake_dir, pending.commit_rel), ignore_errors=True)
     raise CommitConflictError(
         f"optimistic merge into {lake_dir} lost {max_attempts} straight races "
         "to concurrent data-changing commits or held flip locks on its buckets"

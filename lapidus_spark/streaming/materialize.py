@@ -104,7 +104,6 @@ from lapidus_spark.lake.log import (  # noqa: F401
     _write_history,
 )
 from lapidus_spark.lake.merge import (  # noqa: F401
-    _enforce_constraints,
     _evolved_schema,
     _lww_combine,
     _merge_locked,

@@ -19,6 +19,8 @@ bucket-pruned.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -192,6 +194,41 @@ def test_constraint_violation_refuses_whole_commit(spark, tmp_path):
         )
     assert M._read_manifest(lake)["version"] == v0  # table unchanged
     assert _visible(spark, lake)["k0002"]["qty"] == 2
+
+
+@pytest.mark.parametrize("constrained", [False, True])
+def test_all_clauses_miss_commits_nothing(spark, tmp_path, constrained):
+    """No clause fires on any source row: the envelope is empty, its
+    touched set is empty, and the merge commits nothing — zero counts,
+    the version unchanged, no new commit dir — on a constrained lake
+    (touched set from the CHECK validation job) and an unconstrained
+    one (touched set from the raw-batch distinct)."""
+    lake = str(tmp_path / "lake")
+    _build(spark, lake)
+    if constrained:
+        M.add_constraint(spark, lake, "qty_pos", "qty >= 0")
+    v0 = M._read_manifest(lake)["version"]
+    commits = set(os.listdir(os.path.join(lake, "commits")))
+    out = M.merge_into_lake(
+        _source(
+            spark,
+            [("k0001", "x", 1), ("k0999", "y", 2)],  # one matched, one not
+            "pk string, item string, qty int",
+        ),
+        lake,
+        stamp_seq=10_000,
+        stamp_ts=STAMP_TS,
+        when_matched=(
+            {"condition": "source.qty > 100", "update": {"item": "source.item"}},
+        ),
+        when_not_matched=(
+            {"condition": "source.qty > 100", "insert": {"qty": "source.qty"}},
+        ),
+        retain_versions=4,
+    )
+    assert out == {"version": v0, "updated": 0, "deleted": 0, "inserted": 0}
+    assert M._read_manifest(lake)["version"] == v0
+    assert set(os.listdir(os.path.join(lake, "commits"))) == commits
 
 
 def test_set_on_new_extra_column_evolves_schema(spark, tmp_path):

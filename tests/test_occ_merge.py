@@ -46,25 +46,64 @@ def _oneshot(spark, tmp_path, name="oneshot"):
     return _rows(spark, lake)
 
 
-def test_occ_uncontended_equals_locked(spark, tmp_path):
+@pytest.mark.parametrize("case", ["plain", "constraint", "evolve", "txn"])
+def test_occ_uncontended_equals_locked(spark, tmp_path, case):
     """With no concurrent writer, the optimistic merge commits on its
-    first attempt and produces the same versions and snapshot as the
-    locked path."""
-    from lapidus_spark.streaming.materialize import (
-        _read_manifest,
-        merge_batch_optimistic,
-    )
+    first attempt and matches the locked path step for step —
+    versions, snapshot, manifest ``columns`` and ``txns`` — because
+    both stage through the same pipeline. Cases: a plain lake; a
+    lake with a CHECK constraint (validated, and a violating batch
+    refused by both); a batch whose ``extra_cols`` evolve the schema;
+    and ``txn=`` markers whose replay is skipped by both."""
+    import lapidus_spark.streaming.materialize as M
 
     env = _env(spark)
-    lake = str(tmp_path / "lake")
-    m1 = merge_batch_optimistic(env.filter(F.col("event_seq") % 2 == 0), lake)
-    m2 = merge_batch_optimistic(env.filter(F.col("event_seq") % 2 == 1), lake)
-    assert (m1["version"], m2["version"]) == (1, 2)
-    assert _read_manifest(lake)["version"] == 2
-    assert _rows(spark, lake) == _oneshot(spark, tmp_path)
-    # commit dirs carry the nonce suffix (collision-free staging)
-    for rel in m2["buckets"].values():
-        assert "." in rel.split("/")[1]
+    halves = [env.filter(F.col("event_seq") % 2 == i) for i in range(2)]
+    steps = [(halves[0], {}), (halves[1], {})]
+    if case == "evolve":
+        qty = (F.col("event_seq") % 7).cast("int").alias("qty")
+        steps[1] = (halves[1].select("*", qty), {"extra_cols": ("qty",)})
+    elif case == "txn":
+        steps = [
+            (halves[0], {"txn": ("app", 1)}),
+            (halves[1], {"txn": ("app", 2)}),
+            (halves[1], {"txn": ("app", 2)}),  # replay: skipped
+            (halves[0], {"txn": ("app", 1)}),  # older replay: skipped
+        ]
+
+    def run(lake, merge):
+        versions = []
+        for i, (batch, kw) in enumerate(steps):
+            merge(batch, lake, **kw)
+            if case == "constraint" and i == 0:
+                M.add_constraint(spark, lake, "seq_pos", "last_seq >= 0")
+                bad = (
+                    env.filter(F.col("type") == "insert")
+                    .orderBy("event_seq")
+                    .limit(1)
+                    .withColumn("event_seq", F.lit(-1).cast("bigint"))
+                )
+                v = M._read_manifest(lake)["version"]
+                with pytest.raises(M.ConstraintViolationError, match="seq_pos"):
+                    merge(bad, lake)
+                assert M._read_manifest(lake)["version"] == v
+            versions.append(M._read_manifest(lake)["version"])
+        m = M._read_manifest(lake)
+        snap = M.read_lake_snapshot(spark, lake)
+        rows = sorted(map(tuple, snap.select(*sorted(snap.columns)).collect()))
+        return versions, m.get("columns"), m.get("txns"), rows, m
+
+    *locked, m_locked = run(str(tmp_path / "locked"), M.merge_batch_into_lake)
+    *occ, m_occ = run(str(tmp_path / "occ"), M.merge_batch_optimistic)
+    assert occ == locked
+    if case == "plain":
+        assert locked[0] == [1, 2]
+        assert _rows(spark, str(tmp_path / "occ")) == _oneshot(spark, tmp_path)
+    # only the commit dir names differ: the optimistic staging carries
+    # the nonce suffix (collision-free), the locked one does not
+    for m, nonce in ((m_occ, True), (m_locked, False)):
+        for rel in m["buckets"].values():
+            assert ("." in rel.split("/")[1]) == nonce
 
 
 def test_occ_rebase_across_disjoint_commit(spark, tmp_path):
