@@ -833,21 +833,27 @@ def _live_paths(lake_dir: str, manifest: dict | None, buckets=None) -> tuple[lis
 
 _LAKE_COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "bucket"]
 
+#: the footer key under which Spark's parquet writer stores the
+#: written DataFrame's schema as JSON (``ParquetReadSupport.
+#: SPARK_METADATA_KEY``); its schema inference reads it back first
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def _epoch_envelope_types(spark, lake_dir: str, manifest: dict | None):
     """Physical ``(last_ts, item)`` types of the lake's current epoch,
-    probed from ONE live footer (driver-side, metadata-only). A merge
-    whose pruned bucket read comes back empty (every source key hashes
-    to a never-written bucket) still must stamp its emitted rows with
-    the TABLE's timestamp precision — defaulting to NTZ against an
-    LTZ-epoch lake would commit a mixed physical timestamp type that
-    later full-table reads cannot union. Returns ``None`` only when
-    the lake has no live files at all (then there IS no epoch yet and
-    the caller's default applies)."""
+    probed from ONE live footer (``_footer_schema``: driver-side,
+    metadata-only; Spark inference only for footers without Spark's
+    schema key). A merge whose pruned bucket read comes back empty
+    (every source key hashes to a never-written bucket) still must
+    stamp its emitted rows with the TABLE's timestamp precision —
+    defaulting to NTZ against an LTZ-epoch lake would commit a mixed
+    physical timestamp type that later full-table reads cannot union.
+    Returns ``None`` only when the lake has no live files at all (then
+    there IS no epoch yet and the caller's default applies)."""
     legacy, commits = _live_paths(lake_dir, manifest, None)
     for path in [*commits, *legacy]:
         try:
-            schema = spark.read.parquet(path).schema
+            schema = _footer_schema(path) or spark.read.parquet(path).schema
         except Exception:
             continue  # vacuum-raced or empty dir: probe the next one
         if "last_ts" in schema.names and "item" in schema.names:
@@ -919,24 +925,57 @@ def _align_extras(df: DataFrame, extras: list[dict]) -> DataFrame:
     return df.select(*_LAKE_COLS, *aligned)
 
 
-def _read_commit_files(spark, manifest: dict | None, paths: list[str]) -> DataFrame:
-    """The ONE reader for commit-dir parquet (shared by ``_read_live``
-    and the zone-map-pruned point/time reads). Epochs with accreted
-    columns read under an EXPLICIT requested schema — core column
-    types probed from one footer, extras at their manifest epoch
-    types — because the epoch may contain TYPE-WIDENED columns
-    (int→bigint, float→double, decimal precision growth): parquet
-    ``mergeSchema`` cannot merge mixed-width footers at all, while
-    Spark 4's reader widening promotion reads narrower files up to
-    the requested type, and files predating an accretion null-fill.
-    Cost: ONE footer probe (driver-side) instead of mergeSchema's
-    all-footers merge — strictly cheaper at any file count."""
-    extras = _manifest_columns(manifest)
-    if not extras:
-        return spark.read.parquet(*paths)
+def _footer_schema(path: str):
+    """The Spark schema of the parquet at ``path`` (a data file, or a
+    commit dir — then its first data file by name), read on the driver
+    from ONE footer: the schema Spark itself stored under
+    ``_SPARK_ROW_METADATA`` at write time, made nullable as Spark's
+    file relation makes every inferred data schema. Spark's own
+    inference prefers that same key when present, so this equals
+    ``spark.read.parquet(path).schema`` without the inference job.
+    Returns ``None`` when the footer carries no Spark key (Arrow-
+    written ``format("lake")`` files, foreign files) or the dir holds
+    no data file — callers then keep Spark's inference. A missing
+    path raises ``FileNotFoundError`` (never a silent fallback), so
+    ``_is_missing_file_error`` still classifies the GC-vs-read race."""
+    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    core = spark.read.parquet(paths[0]).schema  # one footer
+    if os.path.isdir(path):
+        names = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+        if not names:
+            return None
+        path = os.path.join(path, names[0])
+    stored = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is None:
+        return None
+    return StructType.fromJson(json.loads(stored)).toNullable()
+
+
+def _read_commit_files(spark, manifest: dict | None, paths: list[str]) -> DataFrame:
+    """The ONE reader for commit-dir parquet (shared by ``_read_live``
+    and the zone-map-pruned point/time reads). Reads under an EXPLICIT
+    requested schema taken from the first path's footer
+    (``_footer_schema``), so building the read launches no Spark
+    schema-inference job; footers without Spark's schema key keep
+    Spark's inference. Epochs with accreted columns add the extras at
+    their manifest epoch types, because the epoch may contain
+    TYPE-WIDENED columns (int→bigint, float→double, decimal precision
+    growth): parquet ``mergeSchema`` cannot merge mixed-width footers
+    at all, while Spark 4's reader widening promotion reads narrower
+    files up to the requested type, and files predating an accretion
+    null-fill. Cost: ONE driver-side footer read instead of a Spark
+    job (or mergeSchema's all-footers merge) — strictly cheaper at
+    any file count."""
+    extras = _manifest_columns(manifest)
+    core = _footer_schema(paths[0])  # one footer
+    if not extras:
+        read = spark.read if core is None else spark.read.schema(core)
+        return read.parquet(*paths)
+    from pyspark.sql.types import StructType
+
+    if core is None:
+        core = spark.read.parquet(paths[0]).schema
     core_fields = [f for f in core.fields if f.name in set(_LAKE_COLS)]
     # request every name each column has ever been written under (the
     # current logical name AND rename aliases), all at the epoch type:

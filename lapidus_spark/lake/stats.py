@@ -604,18 +604,18 @@ def lake_point_read(
     spark, lake_dir: str, keys: list, version: int | None = None
 ) -> DataFrame:
     """Pruned point read: hash the requested keys to their buckets
-    under the manifest's pinned layout (a metadata-sized computation
-    on the key list itself — the one driver-side step, proportional
-    to the keys you asked for, never the table) and read ONLY those
-    bucket directories, then filter to the keys. This is the lookup
-    path a serving layer uses: at 100 TB a k-key read opens
-    ≤k·(table/B) bytes regardless of table size, and stays correct
-    across ``rebucket_lake`` layout changes because the manifest is
-    resolved ONCE and both the bucket computation and the read use
-    that same manifest (a rebucket committing between two separate
-    resolutions could otherwise prune under the wrong layout). Keys
-    hashing to never-written buckets simply contribute no rows —
-    the normal missing-key lookup outcome.
+    under the manifest's pinned layout (pure-Python XXH64 on the
+    driver, pinned bit-for-bit to Spark's ``pmod(xxhash64, n)`` —
+    proportional to the keys you asked for, never the table, and no
+    Spark job) and read ONLY those bucket directories, then filter to
+    the keys. This is the lookup path a serving layer uses: at 100 TB
+    a k-key read opens ≤k·(table/B) bytes regardless of table size,
+    and stays correct across ``rebucket_lake`` layout changes because
+    the manifest is resolved ONCE and both the bucket computation and
+    the read use that same manifest (a rebucket committing between two
+    separate resolutions could otherwise prune under the wrong
+    layout). Keys hashing to never-written buckets simply contribute
+    no rows — the normal missing-key lookup outcome.
 
     Below the bucket pruning sits FILE pruning: buckets last written
     by a clustered compaction carry per-file entity_id zone maps in
@@ -624,20 +624,15 @@ def lake_point_read(
     key touches ≤1 file of its bucket no matter how many the valve
     split it into. Buckets without stats (fresh merges) read whole,
     conservative."""
+    from lapidus_spark.sources.lake_batch import _bucket_of
+
     manifest = _manifest_at(lake_dir, version)
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest for point reads")
     key_strs = [str(k) for k in keys]
     bucket_keys: dict[int, list] = {}
-    if key_strs:
-        kdf = spark.createDataFrame([(k,) for k in key_strs], "entity_id string")
-        for r in kdf.select(
-            "entity_id",
-            F.pmod(F.xxhash64("entity_id"), F.lit(manifest["n_buckets"]))
-            .cast("int")
-            .alias("b"),
-        ).collect():
-            bucket_keys.setdefault(r["b"], []).append(r["entity_id"])
+    for k in key_strs:
+        bucket_keys.setdefault(_bucket_of(k, manifest["n_buckets"]), []).append(k)
     zone_maps = manifest.get("file_stats", {})
     plain, pruned_files = set(), []
     for b, b_keys in bucket_keys.items():

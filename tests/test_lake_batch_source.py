@@ -76,9 +76,12 @@ def _rows(df, cols=SNAP_COLS):
 
 
 def test_xxhash64_matches_spark(spark):
-    """The planner's pure-Python xxhash64 (bucket pruning) must equal
-    Spark's ``F.xxhash64`` bit-for-bit — ASCII, empty, multi-byte
-    UTF-8, and >32-byte inputs, plus the pmod bucket assignment."""
+    """The planner's pure-Python xxhash64 (bucket pruning, point-read
+    routing) must equal Spark's ``F.xxhash64`` bit-for-bit — ASCII,
+    empty, multi-byte UTF-8, and >32-byte inputs, plus the pmod bucket
+    assignment under every pinned layout width (1, odd, powers of
+    two)."""
+    widths = (1, 7, 8, 16, 64)
     keys = (
         [f"k{i:04d}" for i in range(200)]
         + ["", "a", "ab", "abc", "abcd", "hello world", "日本語テスト", "ünïcødé"]
@@ -89,13 +92,17 @@ def test_xxhash64_matches_spark(spark):
         .select(
             "pk",
             F.xxhash64("pk").alias("h"),
-            F.pmod(F.xxhash64("pk"), F.lit(16)).cast("int").alias("b"),
+            *[
+                F.pmod(F.xxhash64("pk"), F.lit(n)).cast("int").alias(f"b{n}")
+                for n in widths
+            ],
         )
         .collect()
     )
     for r in rows:
         assert _xxh64(r["pk"].encode("utf-8")) == r["h"], r["pk"]
-        assert _bucket_of(r["pk"], 16) == r["b"], r["pk"]
+        for n in widths:
+            assert _bucket_of(r["pk"], n) == r[f"b{n}"], (r["pk"], n)
 
 
 def test_snapshot_matches_helper(spark, tmp_path):
