@@ -907,7 +907,12 @@ def _align_extras(df: DataFrame, extras: list[dict]) -> DataFrame:
     RENAMED columns (files written before a rename carry the former
     name — ``aliases``; coalesce is exact because each file has the
     column under exactly one name), then project the canonical column
-    order. The cast is a no-op when types already match."""
+    order. The cast is a no-op when types already match; a frame
+    already in the canonical shape of an extra-less epoch is returned
+    as is (no projection to analyze — both sides of every unevolved
+    merge)."""
+    if not extras and df.columns == _LAKE_COLS:
+        return df
     have = set(df.columns)
     aligned = []
     for c in extras:
@@ -1218,7 +1223,7 @@ def _stage_commit(
     a manifest flip references it, and GC's grace window protects it
     from a concurrent committer's cleanup meanwhile."""
     commit_abs = os.path.join(lake_dir, commit_rel)
-    writer = rows.withColumn(_PARTITION_COL, F.col("bucket")).write.mode("overwrite")
+    writer = rows.selectExpr("*", f"bucket AS {_PARTITION_COL}").write.mode("overwrite")
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.partitionBy(_PARTITION_COL).parquet(commit_abs)

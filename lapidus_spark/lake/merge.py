@@ -13,7 +13,7 @@ import uuid
 from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
@@ -66,24 +66,16 @@ def _lww_combine(envelopes_or_rows: DataFrame, extra_names: tuple = ()) -> DataF
     entity_id, winner by (last_ts, last_seq). A semilattice join —
     commutative, associative, idempotent — which is what makes the
     merge correct under ANY batch arrival order and under replays.
-    Accreted extra columns ride the winner's struct."""
+    Accreted extra columns ride the winner's struct, which ``last.*``
+    expands in order: ``_LAKE_COLS``, then the extras."""
+    fields = ", ".join(
+        ["last_seq", "last_ts", "last_type", "item", "bucket"]
+        + [f"`{c}`" for c in extra_names]
+    )
     return (
         envelopes_or_rows.groupBy("entity_id")
-        .agg(
-            F.max_by(
-                F.struct("last_seq", "last_ts", "last_type", "item", "bucket", *extra_names),
-                F.struct("last_ts", "last_seq"),
-            ).alias("last")
-        )
-        .select(
-            "entity_id",
-            F.col("last.last_seq").alias("last_seq"),
-            F.col("last.last_ts").alias("last_ts"),
-            F.col("last.last_type").alias("last_type"),
-            F.col("last.item").alias("item"),
-            F.col("last.bucket").alias("bucket"),
-            *[F.col(f"last.{c}").alias(c) for c in extra_names],
-        )
+        .agg(F.expr(f"max_by(struct({fields}), struct(last_ts, last_seq)) AS last"))
+        .select("entity_id", "last.*")
     )
 
 
@@ -146,7 +138,7 @@ def merge_batch_into_lake(
 
     ``batch_df`` must be DETERMINISTIC (re-evaluable to the same
     rows): the staging evaluates it in two independent actions (the
-    touched-bucket distinct and the staging write), so a
+    observed touched-bucket scan and the staging write), so a
     batch whose keys derive from ``rand()`` or a non-replayable source
     can yield a touched/written bucket mismatch, which
     ``_stage_commit`` refuses with a RuntimeError rather than commit a
@@ -528,9 +520,7 @@ def merge_into_lake(
             ]
         if need_buckets:
             aggs.append(
-                F.collect_set(
-                    F.pmod(F.xxhash64("pk"), F.lit(n_buckets)).cast("int")
-                ).alias("__buckets")
+                F.collect_set(F.expr(_bucket_sql("pk", n_buckets))).alias("__buckets")
             )
         vrow = g.agg(*aggs).first()
         if vrow["max_n"] is not None and int(vrow["max_n"]) > 1:
@@ -776,7 +766,9 @@ def _resolve_base(lake_dir: str, n_buckets: int | None, adopt_legacy: bool):
     return manifest, n_buckets
 
 
-def _snapshot_shape(envelopes: DataFrame, extra_cols: tuple = ()) -> DataFrame:
+def _snapshot_shape(
+    envelopes: DataFrame, n_buckets: int, extra_cols: tuple = ()
+) -> DataFrame:
     """Envelope rows projected to the snapshot column shape WITHOUT
     the per-entity aggregation — the raw-row side of the merge:
     because the LWW combine is associative and idempotent over its
@@ -784,15 +776,29 @@ def _snapshot_shape(envelopes: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     equals ``_lww_combine(current ∪ snapshot_stream(raw))`` row for
     row, so ONE hash aggregation (map-side partial aggregation
     collapses in-batch duplicates before the exchange) does the
-    in-batch LWW and the combine with the stored rows together."""
-    return envelopes.select(
-        F.col("pk").alias("entity_id"),
-        F.col("event_seq").alias("last_seq"),
-        F.col("ts").alias("last_ts"),
-        F.col("type").alias("last_type"),
+    in-batch LWW and the combine with the stored rows together.
+
+    The bucket rides the same projection, so an unevolved batch
+    already has ``_LAKE_COLS`` in order and ``_align_extras`` passes
+    it through untouched."""
+    return envelopes.selectExpr(
+        "pk AS entity_id",
+        "event_seq AS last_seq",
+        "ts AS last_ts",
+        "type AS last_type",
         "item",
-        *extra_cols,
+        *[f"`{c}`" for c in extra_cols],
+        f"{_bucket_sql('pk', n_buckets)} AS bucket",
     )
+
+
+def _bucket_sql(key: str, n_buckets: int) -> str:
+    """The stored bucket of a key column, ``pmod(xxhash64(key), n)``
+    as an int — never NULL, since ``xxhash64(NULL)`` is the seed.
+    SQL text rather than a Column: every merge rebuilds its staging
+    plan, and each Column-API call costs several py4j round trips
+    where a SQL string is parsed in one."""
+    return f"CAST(pmod(xxhash64({key}), {int(n_buckets)}) AS INT)"
 
 
 def _merged_for_batch(
@@ -834,19 +840,23 @@ def _touched_of_raw(batch_df: DataFrame, n_buckets: int) -> list:
     """Touched-bucket list straight from the raw envelope batch: the
     bucket is a pure function of ``pk`` (the identical
     pmod(xxhash64(pk), n) the snapshot rows carry), and aggregation
-    preserves the key set, so the distinct set over raw rows equals
-    the distinct set over the aggregated snapshot. The job is a scan
-    plus a distinct over at most ``n_buckets`` integers — map-side
-    partial aggregation reduces every task's output to ≤ n_buckets
-    rows before the (tiny) exchange."""
-    return sorted(
-        r["bucket"]
-        for r in batch_df.select(
-            F.pmod(F.xxhash64("pk"), F.lit(n_buckets)).cast("int").alias("bucket")
-        )
-        .distinct()
-        .collect()
+    preserves the key set, so the bucket set over raw rows equals
+    the set over the aggregated snapshot.
+
+    ONE Spark job with no exchange: a ``noop`` write of the bucket
+    projection, observed with ``collect_set`` — each task folds its
+    buckets into a set and Spark merges the per-task sets when
+    the job ends. ``collect_set`` drops only NULLs, and the bucket is
+    never NULL, so the set is exactly the distinct buckets."""
+    obs = Observation()
+    (
+        batch_df.selectExpr(f"{_bucket_sql('pk', n_buckets)} AS bucket")
+        .observe(obs, F.collect_set("bucket").alias("buckets"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
+    return sorted(obs.get["buckets"])
 
 
 def _validate_extra_cols(extra_cols: tuple) -> None:
@@ -1031,11 +1041,11 @@ def _stage_merge(
     never collide, and GC's staging grace spares it until the flip.
 
     One exchange, no cache: raw batch rows flow into the staging
-    write's one hash aggregation. The touched set comes from a
-    partial-aggregated distinct over the raw batch — or, on a
-    constrained table, from the same job as the CHECK validation
-    (``_validated_touched``), which refuses before anything is
-    written.
+    write's one hash aggregation. The touched set comes from one
+    observed scan of the raw batch (``_touched_of_raw``, no exchange)
+    — or, on a constrained table, from the CHECK validation's
+    aggregation (``_validated_touched``), which refuses before
+    anything is written.
 
     ``current``: an already-read live frame covering every bucket the
     batch can touch, read under the manifest this merge resolves (the
@@ -1044,8 +1054,7 @@ def _stage_merge(
     base, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=locked)
     if _txn_already_applied(base, txn):
         return _Staged(base, n_buckets, [])  # replayed batch: the marker makes it FREE
-    bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets)).cast("int")
-    updates = _snapshot_shape(batch_df, extra_cols).withColumn("bucket", bucket_col)
+    updates = _snapshot_shape(batch_df, n_buckets, extra_cols)
     all_extras, evolved = _evolved_schema(base, updates, extra_cols)
     cons = (base or {}).get("constraints", {})
     if cons:
@@ -1145,10 +1154,12 @@ def _txn_already_applied(manifest: dict | None, txn: tuple | None) -> bool:
 
 def _validated_touched(updates: DataFrame, all_extras, cons: dict) -> list:
     """CHECK constraints at write time (Delta's enforcement point)
-    and the touched-bucket set, in ONE job over the batch (never the
-    table): a per-key LWW aggregation of the raw snapshot-shaped batch
-    rows computes the batch's winners, the violation counts over the
-    VISIBLE winners, and the distinct bucket set. Raises before any
+    and the touched-bucket set, in ONE action over the batch (never
+    the table): a per-key LWW aggregation of the raw snapshot-shaped
+    batch rows computes the batch's winners, the violation counts over
+    the VISIBLE winners, and the distinct bucket set. AQE runs that
+    action as three Spark jobs — one per exchange (the per-key
+    combine, the global aggregate) and the result. Raises before any
     staging work — a refused batch writes nothing. Tombstones are
     exempt from the CHECKs (payload nulled by design — the outer CASE
     guards the expression from ever evaluating on them) but still

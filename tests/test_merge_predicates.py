@@ -202,7 +202,7 @@ def test_all_clauses_miss_commits_nothing(spark, tmp_path, constrained):
     touched set is empty, and the merge commits nothing — zero counts,
     the version unchanged, no new commit dir — on a constrained lake
     (touched set from the CHECK validation job) and an unconstrained
-    one (touched set from the raw-batch distinct)."""
+    one (touched set from the observed raw-batch scan)."""
     lake = str(tmp_path / "lake")
     _build(spark, lake)
     if constrained:

@@ -237,3 +237,36 @@ def test_sync_validates_retire_ts(spark, tmp_path):
             )
     # lake untouched: the validation fires before any commit
     assert set(_visible(spark, lake)) == {f"k{i:04d}" for i in range(6)}
+
+
+def test_retirement_scan_reads_only_keys_and_types(spark, tmp_path, monkeypatch):
+    """The retirement anti-join reads every live bucket, so its scan
+    must carry no payload: the lake-side ``FileScan`` of the frame the
+    sync hands to the merge reads ``entity_id`` and ``last_type``,
+    never ``item``."""
+    from lapidus_spark.lake import merge
+
+    lake = str(tmp_path / "lake")
+    M.merge_batch_into_lake(_env(spark, range(12)), lake, n_buckets=4)
+    seen = []
+    real = merge._merge_locked
+
+    def capture(spark_, batch_df, *args, **kwargs):
+        seen.append(batch_df._jdf.queryExecution().executedPlan().toString())
+        return real(spark_, batch_df, *args, **kwargs)
+
+    monkeypatch.setattr(merge, "_merge_locked", capture)
+    res = M.sync_snapshot_into_lake(
+        _env(spark, range(8), seq_base=1000),
+        lake,
+        retire_seq=10_000,
+        retire_ts=RETIRE_TS,
+        n_buckets=4,
+    )
+    assert res["retired"] == 4
+    (plan,) = seen
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert scans, plan
+    for scan in scans:
+        read_schema = scan.split("ReadSchema: ", 1)[1]
+        assert "entity_id" in read_schema and "item" not in read_schema, scan
