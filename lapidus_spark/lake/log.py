@@ -958,8 +958,8 @@ def _footer_schema(path: str):
 
 
 def _read_commit_files(spark, manifest: dict | None, paths: list[str]) -> DataFrame:
-    """The ONE reader for commit-dir parquet (shared by ``_read_live``
-    and the zone-map-pruned point/time reads). Reads under an EXPLICIT
+    """The ONE reader for commit-dir parquet (``_read_live``'s bucket
+    dirs and zone-map-kept files alike). Reads under an EXPLICIT
     requested schema taken from the first path's footer
     (``_footer_schema``), so building the read launches no Spark
     schema-inference job; footers without Spark's schema key keep
@@ -996,12 +996,17 @@ def _read_commit_files(spark, manifest: dict | None, paths: list[str]) -> DataFr
     return spark.read.schema(schema).parquet(*paths)
 
 
-def _read_live(spark, lake_dir: str, manifest: dict, buckets=None) -> DataFrame | None:
+def _read_live(
+    spark, lake_dir: str, manifest: dict, buckets=None, files=()
+) -> DataFrame | None:
     """Manifest-resolved read of the live table (optionally pruned to
     ``buckets`` — path-level pruning, stronger than a pushed filter:
-    unreferenced and orphaned files are never opened at all). Columns
-    follow THIS manifest's schema epoch: accreted columns are
-    null-filled for files older than their evolution.
+    unreferenced and orphaned files are never opened at all), plus
+    ``files``: the kept files of zone-map-pruned buckets
+    (``stats._plan_files``), read in the SAME scan as the whole bucket
+    dirs and masked by the same deletion vectors. Columns follow THIS
+    manifest's schema epoch: accreted columns are null-filled for
+    files older than their evolution. ``None`` when nothing is read.
 
     Evolved epochs read under an EXPLICIT requested schema (see
     ``_read_commit_files``): a partial-bucket evolution leaves the
@@ -1012,6 +1017,7 @@ def _read_live(spark, lake_dir: str, manifest: dict, buckets=None) -> DataFrame 
     ``mergeSchema`` cannot merge at all; the explicit schema handles
     both (missing columns null-fill, narrower files widen up)."""
     legacy, commits = _live_paths(lake_dir, manifest, buckets)
+    commits += files
     extras = _manifest_columns(manifest)
     parts = []
     if legacy:
@@ -1036,8 +1042,8 @@ def _dv_entries(manifest: dict | None) -> list:
     last_ts_iso]`` across all buckets of a manifest. Safe to apply
     globally (not per bucket): entity→bucket is functional under the
     pinned layout, so an entry can only ever match rows in its own
-    bucket — a global mask is identical to a per-bucket one and lets
-    partial reads (point/time pruned files) reuse it unchanged."""
+    bucket — a global mask is identical to a per-bucket one, so one
+    scan mixing whole buckets and zone-map-kept files masks once."""
     return [
         e
         for entries in (manifest or {}).get("deletion_vectors", {}).values()

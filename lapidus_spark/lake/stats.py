@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from . import log
 from .log import (
     HISTORY_DIR,
-    _align_extras,
     _bucket_content_changed,
     _delta_path,
     _epoch_iso,
@@ -425,11 +424,137 @@ def _load_bloom_index(lake_dir: str, bucket_rel: str) -> dict:
     }
 
 
-def _file_key_range(entry) -> tuple:
-    """A zone-map entry's entity_id [min, max] — handles both the
-    current dict form and the pre-round-9 bare-list form carried by
-    migrated format-1 manifests."""
-    return tuple(entry["entity_id"] if isinstance(entry, dict) else entry)
+def _naive_utc(v, what: str = "time bound"):
+    """A datetime (naive = UTC) or ISO-string time bound as a naive-UTC
+    datetime — the one normalization every time comparison uses (the
+    recorded ``last_ts`` stats are naive-UTC ISO strings, ``_ts_iso``).
+    Anything else is a ``ValueError`` naming the bad bound."""
+    from datetime import datetime, timezone
+
+    if isinstance(v, str):
+        try:
+            v = datetime.fromisoformat(v)
+        except ValueError:
+            raise ValueError(f"{what} {v!r} is not an ISO timestamp") from None
+    if not isinstance(v, datetime):
+        raise ValueError(
+            f"{what} {v!r} must be a datetime or an ISO timestamp string"
+        )
+    if v.tzinfo is not None:
+        v = v.astimezone(timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def _ts_or_none(v):
+    """``_naive_utc`` for pruning: an unusable value is None (an open
+    end, or a conjunct that cannot prune) instead of an error."""
+    try:
+        return _naive_utc(v)
+    except ValueError:
+        return None
+
+
+def _file_may_match(entry, ranges: dict, sets: dict, fblooms: dict) -> bool:
+    """The zone-map/Bloom rule for ONE file: False only when its
+    recorded stats PROVE no row satisfies the conjunction — a range
+    disjoint from the file's [min, max], a value set with no member
+    inside it, or a value set whose every member misses the file's
+    Bloom filter (each miss is proof of absence). An unmapped column
+    or a bound that cannot compare with the stat keeps the file.
+    NULL-safe: NULL never satisfies a range or a set predicate."""
+    if not isinstance(entry, dict):
+        entry = {"entity_id": entry}  # pre-round-9 bare-list form
+
+    def stat(col):
+        rng = entry.get(col)
+        if rng is None or col != "last_ts":
+            return rng
+        mn, mx = (_ts_or_none(x) for x in rng)  # ISO stats
+        return None if mn is None or mx is None else (mn, mx)
+
+    for col, (lo, hi) in ranges.items():
+        rng = stat(col)
+        try:
+            if rng is not None and (
+                (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo)
+            ):
+                return False
+        except TypeError:
+            pass
+    for col, vs in sets.items():
+        if col in fblooms and not any(
+            _bloom_might_contain(fblooms[col], v) for v in vs
+        ):
+            return False
+        rng = stat(col)
+        try:
+            if rng is not None and not any(rng[0] <= v <= rng[1] for v in vs):
+                return False
+        except TypeError:
+            pass
+    return True
+
+
+def _plan_files(lake_dir: str, manifest: dict, ranges: dict, value_sets: dict) -> dict:
+    """The ONE file-pruning planner behind every pruned lake read
+    (point, skip, time-window and ``format("lake")``): driver-side,
+    metadata only. Takes conjunctive ``{col: (lo, hi)}`` ranges
+    (inclusive, None = open end) and ``{col: values}`` sets (an
+    equality range is a one-value set) and returns, per wanted bucket
+    in probe order, ``None`` (read the whole bucket dir) or the kept
+    file paths.
+
+    - An ``entity_id`` set routes to the buckets its keys hash to
+      (``lake_batch._bucket_of``, the pinned layout); each bucket is
+      pruned against its RESIDENT keys only — a foreign key cannot
+      live there. Without one, every manifest bucket is wanted.
+    - A legacy ``bucket=`` pointer, or a bucket without ``file_stats``
+      (fresh merges), reads whole.
+    - Each recorded file passes ``_file_may_match``; the commit dir's
+      Bloom sidecar is read only when a set probes a column that can
+      carry a filter (never ``entity_id`` or ``last_ts``).
+
+    Pruning is I/O-only: every reader re-applies its exact predicate
+    to the rows, so a kept file is never wrong, only extra bytes."""
+    from lapidus_spark.sources.lake_batch import _bucket_of
+
+    sets = {c: list(vs) for c, vs in value_sets.items()}
+    for c, (lo, hi) in ranges.items():
+        if lo is not None and lo == hi and c not in sets:
+            sets[c] = [lo]
+    ranges = dict(ranges)
+    if "last_ts" in ranges:
+        ranges["last_ts"] = tuple(_ts_or_none(v) for v in ranges["last_ts"])
+    if "last_ts" in sets:
+        ts = [_ts_or_none(v) for v in sets.pop("last_ts")]
+        if None not in ts:
+            sets["last_ts"] = ts
+    if "entity_id" in sets:
+        n = int(manifest["n_buckets"])
+        resident: dict[str, list] = {}
+        for k in sets["entity_id"]:
+            resident.setdefault(str(_bucket_of(str(k), n)), []).append(k)
+    else:
+        resident = {b: None for b in manifest["buckets"]}
+    bloom_cols = set(sets) - {"entity_id", "last_ts"}
+    zone_maps = manifest.get("file_stats", {})
+    plan: dict = {}
+    for b, keys in resident.items():
+        rel = manifest["buckets"].get(b)
+        if rel is None:
+            continue  # never-written bucket: no rows
+        stats = zone_maps.get(b)
+        if stats is None or rel.startswith("bucket="):
+            plan[b] = None
+            continue
+        b_sets = sets if keys is None else {**sets, "entity_id": keys}
+        blooms = _load_bloom_index(lake_dir, rel) if bloom_cols else {}
+        plan[b] = [
+            os.path.join(lake_dir, rel, f)
+            for f, entry in sorted(stats.items())
+            if _file_may_match(entry, ranges, b_sets, blooms.get(f, {}))
+        ]
+    return plan
 
 
 def lake_version_at(lake_dir: str, ts) -> int:
@@ -600,6 +725,23 @@ def _snapshot_schema(extras: list[dict]) -> str:
     return _SNAPSHOT_SCHEMA + "".join(f", {c['name']} {c['type']}" for c in extras)
 
 
+def _planned_scan(spark, lake_dir: str, manifest: dict, plan: dict) -> DataFrame:
+    """ONE scan of a ``_plan_files`` plan: whole buckets and kept files
+    go through one ``log._read_live`` (one file scan, one epoch
+    alignment, one deletion-vector mask); an empty plan is the empty
+    frame under the manifest's epoch."""
+    df = log._read_live(
+        spark,
+        lake_dir,
+        manifest,
+        {int(b) for b, files in plan.items() if files is None},
+        [f for files in plan.values() if files for f in files],
+    )
+    if df is None:
+        return spark.createDataFrame([], _snapshot_schema(_manifest_columns(manifest)))
+    return df
+
+
 def lake_point_read(
     spark, lake_dir: str, keys: list, version: int | None = None
 ) -> DataFrame:
@@ -623,60 +765,15 @@ def lake_point_read(
     range overlaps a requested key are opened — after an OPTIMIZE, a
     key touches ≤1 file of its bucket no matter how many the valve
     split it into. Buckets without stats (fresh merges) read whole,
-    conservative."""
-    from lapidus_spark.sources.lake_batch import _bucket_of
-
+    conservative. Both steps are ``_plan_files``, the rule every pruned
+    read shares."""
     manifest = _manifest_at(lake_dir, version)
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest for point reads")
     key_strs = [str(k) for k in keys]
-    bucket_keys: dict[int, list] = {}
-    for k in key_strs:
-        bucket_keys.setdefault(_bucket_of(k, manifest["n_buckets"]), []).append(k)
-    zone_maps = manifest.get("file_stats", {})
-    plain, pruned_files = set(), []
-    for b, b_keys in bucket_keys.items():
-        stats = zone_maps.get(str(b))
-        rel = manifest["buckets"].get(str(b))
-        if stats is None or rel is None or rel.startswith("bucket="):
-            plain.add(b)  # no stats (or legacy layout): whole bucket
-            continue
-        # prune each bucket's files against ITS OWN resident keys
-        # only — a foreign key's range overlap in another bucket is
-        # meaningless (the key cannot live there) and testing it
-        # would open up to |keys| files per bucket instead of ≤1 per
-        # resident key.
-        for f, entry in sorted(stats.items()):
-            mn, mx = _file_key_range(entry)
-            if any(mn <= k <= mx for k in b_keys):
-                pruned_files.append(os.path.join(lake_dir, rel, f))
-    extras = _manifest_columns(manifest)
-    parts = []
-    base = log._read_live(spark, lake_dir, manifest, plain) if plain else None
-    if base is not None:
-        parts.append(base)  # already schema-epoch aligned
-    if pruned_files:
-        parts.append(
-            # zone-map-pruned files bypass log._read_live, so the
-            # shared commit reader (explicit epoch schema: accretion
-            # null-fill + type widening) and the deletion-vector mask
-            # apply here explicitly (global entity match — see
-            # log._dv_entries on why that is identical to per-bucket
-            # application)
-            log._apply_dv_mask(
-                spark,
-                _align_extras(
-                    log._read_commit_files(spark, manifest, pruned_files), extras
-                ),
-                manifest,
-            )
-        )
-    if not parts:  # every requested bucket unwritten / fully pruned
-        df = spark.createDataFrame([], _snapshot_schema(extras))
-    else:
-        from functools import reduce
-
-        df = reduce(lambda a, b: a.unionByName(b), parts)
+    df = _planned_scan(
+        spark, lake_dir, manifest, _plan_files(lake_dir, manifest, {}, {"entity_id": key_strs})
+    )
     return df.filter(
         (F.col("last_type") != "delete") & F.col("entity_id").isin(key_strs)
     )
@@ -721,9 +818,9 @@ def lake_skip_read(
     listed value misses — each miss is individually proof of absence,
     so the conjunction of misses proves the whole disjunction
     unsatisfiable. NULL-safe for the same reason equality is: IN
-    never matches NULL."""
-    from datetime import datetime, timezone
-
+    never matches NULL. File pruning is ``_plan_files``' rule, shared
+    with the point, time-window and ``format("lake")`` reads; an
+    ``entity_id`` equality or IN routes to its keys' buckets."""
     if not isinstance(ranges, dict) or (not ranges and not in_values):
         raise ValueError(
             "lake_skip_read: ranges must be a dict {column: (lo, hi)} "
@@ -736,20 +833,10 @@ def lake_skip_read(
         c["name"] for c in _manifest_columns(manifest)
     }
 
-    def norm_ts(v):
-        if v is None:
-            return None
-        if isinstance(v, str):
-            v = datetime.fromisoformat(v)
-        if v.tzinfo is not None:
-            v = v.astimezone(timezone.utc).replace(tzinfo=None)
-        return v
-
     # epoch types for typed-bound validation: a bound whose Python
     # type cannot compare with the column's recorded stats (int bound
-    # on a string column, or vice versa) must fail as a descriptive
-    # ValueError in THIS validation loop, not as an unhandled
-    # TypeError inside overlaps() on the driver
+    # on a string column, or vice versa) fails as a descriptive
+    # ValueError here (the planner would only keep the file)
     epoch_types = {"entity_id": "string"}
     epoch_types.update(
         {c["name"]: c["type"] for c in _manifest_columns(manifest)}
@@ -766,7 +853,7 @@ def lake_skip_read(
             return (int, float), "a number"
         if base == "boolean":
             return (bool,), "a boolean"
-        return None, None  # item / exotic types: overlaps() guards
+        return None, None  # item / exotic types: the planner keeps files
 
     norm: dict[str, tuple] = {}
     for col, bound in ranges.items():
@@ -783,7 +870,7 @@ def lake_skip_read(
         if lo is None and hi is None:
             raise ValueError(f"lake_skip_read: range for {col!r} is fully open")
         if col == "last_ts":
-            lo, hi = norm_ts(lo), norm_ts(hi)
+            lo, hi = (None if v is None else _naive_utc(v, "last_ts bound") for v in (lo, hi))
         elif col in epoch_types:
             allowed, label = bound_pytypes(epoch_types[col])
             for end, v in (("lo", lo), ("hi", hi)):
@@ -820,7 +907,7 @@ def lake_skip_read(
                 "unsatisfiable)"
             )
         if col == "last_ts":
-            vs = [norm_ts(v) for v in vs]
+            vs = [_naive_utc(v, "last_ts IN value") for v in vs]
         elif col in epoch_types:
             allowed, label = bound_pytypes(epoch_types[col])
             for v in vs:
@@ -837,10 +924,8 @@ def lake_skip_read(
                         "compare with the recorded file stats"
                     )
         in_norm[col] = vs
-        # fold the set's envelope into the range conjunction so the
-        # plain min/max zone test engages even where the per-value
-        # test below cannot (e.g. a file without recorded stats for
-        # some OTHER conjunct column)
+        # fold the set's envelope into the range conjunction (the row
+        # predicate below; pruning tests each listed value itself)
         lo, hi = norm.get(col, (None, None))
         try:
             env_lo, env_hi = min(vs), max(vs)
@@ -850,108 +935,10 @@ def lake_skip_read(
                 hi = env_hi
             norm[col] = (lo, hi)
         except TypeError:
-            pass  # mixed/incomparable values: envelope skipped, per-value path still applies
+            pass  # mixed/incomparable values: no envelope
 
-    def overlaps(entry: dict, fblooms: dict) -> bool:
-        for col, (lo, hi) in norm.items():
-            if lo is not None and lo == hi and col in fblooms:
-                # EQUALITY probe with a recorded per-file Bloom filter
-                # (round 12): min/max cannot prune a high-cardinality
-                # probe whose value interleaves across files; the
-                # filter can — a miss is proof of absence. NULL-safe
-                # like the ranges (filters hold only non-null values,
-                # and NULL never satisfies an equality predicate).
-                if not _bloom_might_contain(fblooms[col], lo):
-                    return False
-            rng = entry.get(col) if isinstance(entry, dict) else None
-            if col == "entity_id" and rng is None and not isinstance(entry, dict):
-                rng = entry  # pre-round-9 bare-list form
-            if rng is None:
-                continue  # column unmapped for this file: cannot prune
-            mn, mx = rng
-            if col == "last_ts":
-                mn, mx = (datetime.fromisoformat(x) for x in (mn, mx))
-            try:
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    return False  # provably disjoint on this column
-            except TypeError:
-                # columns without a declared epoch type (item) reach
-                # here on a bound/stat type mismatch — same validated
-                # posture as the typed loop above
-                raise ValueError(
-                    f"lake_skip_read: bounds {(lo, hi)!r} for column "
-                    f"{col!r} do not compare with its recorded "
-                    f"{type(mn).__name__} file stats — pass bounds of "
-                    "the column's storage type"
-                ) from None
-        for col, vs in in_norm.items():
-            # set predicate: Bloom all-miss proves the whole
-            # disjunction absent; the zone test keeps the file only
-            # when SOME value lies inside its recorded [min, max]
-            if col in fblooms and all(
-                not _bloom_might_contain(fblooms[col], v) for v in vs
-            ):
-                return False
-            rng = entry.get(col) if isinstance(entry, dict) else None
-            if col == "entity_id" and rng is None and not isinstance(entry, dict):
-                rng = entry  # pre-round-9 bare-list form
-            if rng is None:
-                continue
-            mn, mx = rng
-            if col == "last_ts":
-                mn, mx = (datetime.fromisoformat(x) for x in (mn, mx))
-            try:
-                if not any(mn <= v <= mx for v in vs):
-                    return False
-            except TypeError:
-                raise ValueError(
-                    f"lake_skip_read: IN values {vs!r} for column "
-                    f"{col!r} do not compare with its recorded "
-                    f"{type(mn).__name__} file stats — pass values of "
-                    "the column's storage type"
-                ) from None
-        return True
+    df = _planned_scan(spark, lake_dir, manifest, _plan_files(lake_dir, manifest, norm, in_norm))
 
-    zone_maps = manifest.get("file_stats", {})
-    want_blooms = any(
-        lo is not None and lo == hi and col != "last_ts"
-        for col, (lo, hi) in norm.items()
-    ) or any(col != "last_ts" for col in in_norm)
-    plain, pruned_files = set(), []
-    for b_str, rel in manifest["buckets"].items():
-        stats = zone_maps.get(b_str)
-        if stats is None or rel.startswith("bucket="):
-            plain.add(int(b_str))  # no stats (or legacy layout): whole bucket
-            continue
-        blooms = _load_bloom_index(lake_dir, rel) if want_blooms else {}
-        for f, entry in sorted(stats.items()):
-            if overlaps(entry, blooms.get(f, {})):
-                pruned_files.append(os.path.join(lake_dir, rel, f))
-    extras = _manifest_columns(manifest)
-    parts = []
-    base = log._read_live(spark, lake_dir, manifest, plain) if plain else None
-    if base is not None:
-        parts.append(base)  # already schema-epoch aligned
-    if pruned_files:
-        parts.append(
-            # zone-map-pruned files bypass log._read_live, so the
-            # shared commit reader (explicit epoch schema) and the
-            # deletion-vector mask apply here explicitly, exactly as
-            # in lake_point_read / lake_time_read
-            log._apply_dv_mask(
-                spark,
-                _align_extras(
-                    log._read_commit_files(spark, manifest, pruned_files), extras
-                ),
-                manifest,
-            )
-        )
-    if not parts:
-        df = spark.createDataFrame([], _snapshot_schema(extras))
-    else:
-        from functools import reduce
-
-        df = reduce(lambda a, b: a.unionByName(b), parts)
     def _num_lit(v):
         # a Python int outside int64 cannot become a JVM long literal;
         # Spark's numeric promotion makes the double literal compare
@@ -997,66 +984,22 @@ def lake_time_read(
     the requested window — when keys correlate with time (the common
     case for id-assigned-over-time entities), a narrow window opens a
     small fraction of each bucket instead of the whole dir. Buckets
-    without stats read whole and filter — conservative, never wrong
-    (the predicate is re-applied to every row either way, so pruning
-    is purely an I/O optimization). Bounds accept datetimes (naive =
-    UTC) or ISO strings; this is the read path a CDF backfill or a
+    without stats read whole, and a file without a ``last_ts`` range
+    is kept — conservative, never wrong (the predicate is re-applied
+    to every row either way, so pruning is purely an I/O
+    optimization; the rule is ``_plan_files``'). Bounds accept
+    datetimes (naive = UTC) or ISO strings, anything else is a
+    ``ValueError``; this is the read path a CDF backfill or a
     time-sliced export uses at 100 TB."""
-    from datetime import datetime, timezone
-
-    def norm(v) -> datetime:
-        if isinstance(v, str):
-            v = datetime.fromisoformat(v)
-        if v.tzinfo is not None:
-            v = v.astimezone(timezone.utc).replace(tzinfo=None)
-        return v
-
-    lo, hi = norm(ts_from), norm(ts_to)
+    lo, hi = _naive_utc(ts_from, "ts_from"), _naive_utc(ts_to, "ts_to")
     manifest = _manifest_at(lake_dir, version)
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest for time reads")
-    zone_maps = manifest.get("file_stats", {})
-    plain, pruned_files = set(), []
-    for b_str, rel in manifest["buckets"].items():
-        stats = zone_maps.get(b_str)
-        if (
-            stats is None
-            or rel.startswith("bucket=")
-            or not all(isinstance(e, dict) and "last_ts" in e for e in stats.values())
-        ):
-            plain.add(int(b_str))  # no time stats: whole bucket
-            continue
-        for f, entry in sorted(stats.items()):
-            mn, mx = (datetime.fromisoformat(x) for x in entry["last_ts"])
-            if mx >= lo and mn < hi:
-                pruned_files.append(os.path.join(lake_dir, rel, f))
-    extras = _manifest_columns(manifest)
-    parts = []
-    base = log._read_live(spark, lake_dir, manifest, plain) if plain else None
-    if base is not None:
-        parts.append(base)  # already schema-epoch aligned
-    if pruned_files:
-        parts.append(
-            # zone-map-pruned files bypass log._read_live, so the
-            # shared commit reader (explicit epoch schema: accretion
-            # null-fill + type widening) and the deletion-vector mask
-            # apply here explicitly (global entity match — see
-            # log._dv_entries on why that is identical to per-bucket
-            # application)
-            log._apply_dv_mask(
-                spark,
-                _align_extras(
-                    log._read_commit_files(spark, manifest, pruned_files), extras
-                ),
-                manifest,
-            )
-        )
-    if not parts:
-        df = spark.createDataFrame([], _snapshot_schema(extras))
-    else:
-        from functools import reduce
-
-        df = reduce(lambda a, b: a.unionByName(b), parts)
+    # the planner's bounds are inclusive: a file starting exactly at
+    # the exclusive ts_to is kept, and the row filter drops its rows
+    df = _planned_scan(
+        spark, lake_dir, manifest, _plan_files(lake_dir, manifest, {"last_ts": (lo, hi)}, {})
+    )
     # compare in NTZ: the lake's last_ts may be LTZ or NTZ depending
     # on the producing envelope; the session TZ is pinned UTC so the
     # cast is value-preserving either way, and mixed NTZ/LTZ

@@ -42,9 +42,11 @@ Scale contract
   buckets (a Spark-parity pure-Python xxhash64, pinned against
   ``F.xxhash64`` in tests) so point probes open only their bucket,
   and recorded per-file zone maps (``stats_columns`` min/max from
-  OPTIMIZE) prune at file granularity, the same decisions
-  ``lake_point_read`` / ``lake_skip_read`` make. Buckets without
-  stats read whole — conservative, never wrong.
+  OPTIMIZE) and Bloom filters prune at file granularity. The rule
+  lives in ONE place, ``lake.stats._plan_files``, which
+  ``lake_point_read`` / ``lake_skip_read`` / ``lake_time_read`` call
+  too, so this relation makes their decisions. Buckets without stats
+  read whole — conservative, never wrong.
 - Deletion vectors apply executor-side from the (metadata-sized)
   manifest entries each partition carries; snapshot mode then drops
   tombstones — row-for-row the ``read_lake_snapshot`` consumer view.
@@ -259,22 +261,22 @@ def _epoch_ddl(lake_dir: str, manifest: dict) -> tuple[str, list[dict]]:
 
 
 # ---------------------------------------------------------------------------
-# Pushed-filter normalization + file/bucket pruning (driver-side)
+# Pushed-filter normalization (driver-side; pruning is stats._plan_files)
 # ---------------------------------------------------------------------------
 
 
-def _pushed_ranges(filters) -> tuple[dict, set | None, dict]:
-    """Fold supported pushed filters into per-column conjunctive
-    ranges ``{col: (lo, hi)}``, the entity_id equality key set
-    (``None`` = no equality constraint), and per-column VALUE SETS
-    ``{col: frozenset}`` from ``EqualTo``/``In`` conjuncts (round 13,
-    VERDICT r12 #4 — an ``In`` collapsed to its [min, max] envelope
-    defeats Bloom pruning; the set lets the reader skip a file when
-    EVERY listed value misses its filter). Only top-level single-name
-    attributes participate; everything else is ignored here (Spark
-    re-applies all filters regardless — pruning is I/O-only)."""
+def _pushed_ranges(filters) -> tuple[dict, dict]:
+    """Fold supported pushed filters into the planner's input
+    (``stats._plan_files``): per-column conjunctive ranges
+    ``{col: (lo, hi)}`` and per-column VALUE SETS ``{col: frozenset}``
+    from ``EqualTo``/``In`` conjuncts (round 13, VERDICT r12 #4 — an
+    ``In`` collapsed to its [min, max] envelope defeats Bloom pruning;
+    the set lets the reader skip a file when EVERY listed value misses
+    its filter; an ``entity_id`` set routes to its keys' buckets).
+    Only top-level single-name attributes participate; everything else
+    is ignored here (Spark re-applies all filters regardless — pruning
+    is I/O-only)."""
     ranges: dict[str, list] = {}
-    eq_keys: set | None = None
     value_sets: dict[str, frozenset] = {}
 
     def narrow(col, lo, hi):
@@ -298,94 +300,17 @@ def _pushed_ranges(filters) -> tuple[dict, set | None, dict]:
             narrow(col, f.value, f.value)
             if f.value is not None:
                 restrict(col, [f.value])
-            if col == "entity_id":
-                ks = {str(f.value)}
-                eq_keys = ks if eq_keys is None else (eq_keys & ks)
         elif isinstance(f, In):
             # the dataclass field is ``value`` (a tuple of listed values)
             vs = [v for v in f.value if v is not None]
             if vs:
                 narrow(col, min(vs), max(vs))
                 restrict(col, vs)
-                if col == "entity_id":
-                    ks = {str(v) for v in vs}
-                    eq_keys = ks if eq_keys is None else (eq_keys & ks)
         elif isinstance(f, GreaterThan) or isinstance(f, GreaterThanOrEqual):
             narrow(col, f.value, None)
         elif isinstance(f, LessThan) or isinstance(f, LessThanOrEqual):
             narrow(col, None, f.value)
-    return {c: (lo, hi) for c, (lo, hi) in ranges.items()}, eq_keys, value_sets
-
-
-def _file_overlaps(entry, ranges: dict, value_sets: dict | None = None) -> bool:
-    """Zone-map overlap test for one file's recorded stats — same
-    semantics as ``lake_skip_read``: an unmapped column cannot prune;
-    incomparable bound/stat types fall back to 'overlaps' (pruning
-    must never be wrong, and pushed filters re-apply anyway). An
-    ``In`` conjunct's value set prunes when NO listed value lies in
-    the file's [min, max] — stronger than the set's envelope, which
-    a scattered set straddling the file defeats."""
-    from datetime import datetime
-
-    for col, vs in (value_sets or {}).items():
-        rng = entry.get(col) if isinstance(entry, dict) else None
-        if col == "entity_id" and rng is None and not isinstance(entry, dict):
-            rng = entry
-        if rng is None or not vs or col == "last_ts":
-            continue  # last_ts sets keep the plain envelope path below
-        mn, mx = rng
-        try:
-            if not any(mn <= v <= mx for v in vs):
-                return False
-        except TypeError:
-            continue  # incomparable: conservative, keep the file
-
-    for col, (lo, hi) in ranges.items():
-        rng = entry.get(col) if isinstance(entry, dict) else None
-        if col == "entity_id" and rng is None and not isinstance(entry, dict):
-            rng = entry  # pre-round-9 bare-list form
-        if rng is None:
-            continue
-        mn, mx = rng
-        if col == "last_ts":
-            try:
-                mn, mx = (datetime.fromisoformat(x) for x in (mn, mx))
-            except (TypeError, ValueError):
-                continue
-            from datetime import timezone
-
-            if hasattr(lo, "tzinfo") and lo.tzinfo is not None:
-                lo = lo.astimezone(timezone.utc).replace(tzinfo=None)
-            if hasattr(hi, "tzinfo") and hi.tzinfo is not None:
-                hi = hi.astimezone(timezone.utc).replace(tzinfo=None)
-        try:
-            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                return False
-        except TypeError:
-            continue  # incomparable: conservative, keep the file
-    return True
-
-
-def _bloom_rules_in(fblooms: dict, ranges: dict, value_sets: dict | None = None) -> bool:
-    """True unless some equality probe's recorded per-file Bloom
-    filter PROVES the value absent (same decision as
-    ``lake_skip_read``), or — for an ``In`` conjunct — EVERY listed
-    value misses the filter (each miss is individually proof of
-    absence, so the conjunction of misses refutes the whole
-    disjunction). Files without filters always rule in."""
-    if not fblooms:
-        return True
-    from lapidus_spark.lake.stats import _bloom_might_contain
-
-    for col, (lo, hi) in ranges.items():
-        if lo is not None and lo == hi and col in fblooms:
-            if not _bloom_might_contain(fblooms[col], lo):
-                return False
-    for col, vs in (value_sets or {}).items():
-        if vs and col in fblooms:
-            if all(not _bloom_might_contain(fblooms[col], v) for v in vs):
-                return False
-    return True
+    return {c: (lo, hi) for c, (lo, hi) in ranges.items()}, value_sets
 
 
 class LakeFilePartition(InputPartition):
@@ -441,43 +366,41 @@ class LakeBatchReader(DataSourceReader):
             )
         _, self.extras = _epoch_ddl(self.lake_dir, self.manifest)
         self.ranges: dict = {}
-        self.eq_keys: set | None = None
         self.value_sets: dict = {}
 
     def pushFilters(self, filters):
         """Record prunable predicates, hand EVERY filter back to Spark
         (it re-applies them exactly): pushdown here is an I/O
         optimization with zero correctness surface."""
-        self.ranges, self.eq_keys, self.value_sets = _pushed_ranges(filters)
+        self.ranges, self.value_sets = _pushed_ranges(filters)
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
+        """One partition per planned file (a legacy ``bucket=`` dir is
+        one partition): the pushed predicates go through
+        ``stats._plan_files``, the rule every pruned helper read uses,
+        so this relation opens the files the helpers open."""
+        from lapidus_spark.lake.stats import _plan_files
+
         m = self.manifest
         lake_dir = self.lake_dir
         dvs = m.get("deletion_vectors", {})
-        zone_maps = m.get("file_stats", {})
-        n_buckets = int(m["n_buckets"])
-        want_buckets = None
-        if self.eq_keys is not None:
-            # point probe: hash the requested keys to their buckets —
-            # path-level pruning, identical to lake_point_read
-            want_buckets = {_bucket_of(k, n_buckets) for k in self.eq_keys}
+        plan = _plan_files(lake_dir, m, self.ranges, self.value_sets)
         parts: list[InputPartition] = []
         ts_ddl, item_ddl = None, None
         # the declared core types are probed once and shipped to every
         # partition (executors must emit the exact declared schema)
         import pyarrow.parquet as pq
 
-        for b_str, rel in sorted(m["buckets"].items()):
-            if want_buckets is not None and int(b_str) not in want_buckets:
-                continue
+        for b_str, kept in sorted(plan.items()):
+            rel = m["buckets"][b_str]
             d = os.path.join(lake_dir, rel)
             if not os.path.isdir(d):
                 raise ValueError(
                     f"format('lake'): manifest of {lake_dir} references "
                     f"missing bucket dir {rel!r} — lake corrupted"
                 )
-            files = sorted(
+            files = kept if kept is not None else sorted(
                 os.path.join(d, f)
                 for f in os.listdir(d)
                 if f.endswith(".parquet")
@@ -499,38 +422,10 @@ class LakeBatchReader(DataSourceReader):
                     )
                 )
                 continue
-            stats = zone_maps.get(b_str)
-            blooms: dict = {}
-            if (
-                self.ranges
-                and any(
-                    lo is not None and lo == hi
-                    for lo, hi in self.ranges.values()
-                )
-            ) or any(vs for vs in self.value_sets.values()):
-                # equality and IN probes consult the commit dir's
-                # Bloom sidecar exactly like lake_skip_read — the SQL
-                # path prunes files the helper path prunes
-                from lapidus_spark.lake.stats import _load_bloom_index
-
-                blooms = _load_bloom_index(lake_dir, rel)
-            for f in files:
-                fname = os.path.basename(f)
-                if stats is not None and (self.ranges or self.value_sets):
-                    entry = stats.get(fname)
-                    if entry is not None and not _file_overlaps(
-                        entry, self.ranges, self.value_sets
-                    ):
-                        continue  # provably disjoint: never opened
-                if blooms and not _bloom_rules_in(
-                    blooms.get(fname, {}), self.ranges, self.value_sets
-                ):
-                    continue  # filter misses prove absence
-                parts.append(
-                    LakeFilePartition(
-                        [f], self.extras, ts_ddl, item_ddl, dv
-                    )
-                )
+            parts.extend(
+                LakeFilePartition([f], self.extras, ts_ddl, item_ddl, dv)
+                for f in files
+            )
         if ts_ddl is None:
             ts_ddl, item_ddl = "timestamp_ntz", "string"
             for p in parts:

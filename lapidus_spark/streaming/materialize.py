@@ -141,7 +141,6 @@ from lapidus_spark.lake.admin import (  # noqa: F401
 from lapidus_spark.lake.stats import (  # noqa: F401
     _cdf_frames,
     _commit_file_stats,
-    _file_key_range,
     _resolve_change_bounds,
     _snapshot_schema,
     _ts_iso,
