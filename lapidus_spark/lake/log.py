@@ -839,25 +839,46 @@ _LAKE_COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "bucket"]
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _epoch_envelope_types(spark, lake_dir: str, manifest: dict | None):
-    """Physical ``(last_ts, item)`` types of the lake's current epoch,
-    probed from ONE live footer (``_footer_schema``: driver-side,
-    metadata-only; Spark inference only for footers without Spark's
-    schema key). A merge whose pruned bucket read comes back empty
-    (every source key hashes to a never-written bucket) still must
-    stamp its emitted rows with the TABLE's timestamp precision —
-    defaulting to NTZ against an LTZ-epoch lake would commit a mixed
-    physical timestamp type that later full-table reads cannot union.
-    Returns ``None`` only when the lake has no live files at all (then
-    there IS no epoch yet and the caller's default applies)."""
+def _epoch_core_types(lake_dir: str, manifest: dict | None):
+    """The lake epoch's ``(last_ts, item)`` Spark DDL types, from ONE
+    live footer, session-less — the one type probe behind the merge,
+    the ``format("lake")`` relations and the ``df.write`` combine.
+    Spark's stored schema (``_footer_schema``) wins where the footer
+    has it: pyarrow reads Spark's INT96 ``timestamp`` as a zone-less
+    ``timestamp[ns]``, so the Arrow view alone would call an LTZ lake
+    NTZ. Footers without Spark's key (Arrow-written files from before
+    the writer stamped it, foreign files) map through
+    ``lake_batch._ddl_of_arrow``. A merge whose pruned read comes back
+    empty still stamps its rows at these types — defaulting to NTZ
+    against an LTZ epoch would commit a mixed physical timestamp type
+    later full-table reads cannot union. ``None`` only when the lake
+    has no live file at all (no epoch yet; the caller's default
+    applies)."""
+    import pyarrow.parquet as pq
+
+    from lapidus_spark.sources.lake_batch import _ddl_of_arrow
+
     legacy, commits = _live_paths(lake_dir, manifest, None)
-    for path in [*commits, *legacy]:
+    for d in [*commits, *legacy]:
         try:
-            schema = _footer_schema(path) or spark.read.parquet(path).schema
-        except Exception:
-            continue  # vacuum-raced or empty dir: probe the next one
-        if "last_ts" in schema.names and "item" in schema.names:
-            return schema["last_ts"].dataType, schema["item"].dataType
+            names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
+            if not names:
+                continue
+            path = os.path.join(d, names[0])
+            spark_schema = _footer_schema(path)
+            if spark_schema is not None:
+                types = {f.name: f.dataType.simpleString() for f in spark_schema}
+            else:
+                arrow = pq.read_schema(path)
+                types = {
+                    n: _ddl_of_arrow(arrow.field(n).type)
+                    for n in ("last_ts", "item")
+                    if n in arrow.names
+                }
+        except FileNotFoundError:
+            continue  # vacuum-raced dir: probe the next one
+        if "last_ts" in types and "item" in types:
+            return types["last_ts"], types["item"]
     return None
 
 

@@ -569,7 +569,7 @@ def merge_into_lake(
         else:
             # empty lake: nothing matches, by-source is vacuous; only
             # insert clauses (source-referencing by rule) can fire
-            from pyspark.sql.types import TimestampNTZType
+            from pyspark.sql.types import TimestampNTZType, _parse_datatype_string
 
             joined = src.alias("source")
             matched = F.lit(False)
@@ -583,9 +583,9 @@ def merge_into_lake(
                 # physical epoch already — stamp at ITS timestamp/item
                 # types, not the NTZ default, or this commit writes a
                 # mixed timestamp precision later unions cannot read
-                probed = log._epoch_envelope_types(spark, lake_dir, manifest)
+                probed = log._epoch_core_types(lake_dir, manifest)
                 if probed is not None:
-                    ts_type, epoch_item_type = probed
+                    ts_type, epoch_item_type = map(_parse_datatype_string, probed)
         if stamp_cols is None:
             _validate_stamp(
                 spark, stamp_seq, stamp_ts, ts_type, "stamp_seq", "stamp_ts"

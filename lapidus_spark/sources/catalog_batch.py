@@ -20,14 +20,14 @@ Options
   the catalog ``ver`` and the underlying ``tbl_ver`` ordering column,
   exactly the streaming ``catalog_cdf`` vocabulary (draining the
   stream over the same range emits identical rows: same planner, same
-  executor diff).
+  executor step).
 
 Implementation is almost entirely REUSE: snapshot mode resolves the
 catalog entry driver-side (one tiny JSON) and then IS a
 ``LakeBatchReader`` pinned to the member table's mapped version —
 filter pushdown (bucket hash, zone maps, Bloom sidecars) included;
-changes mode reuses the streaming source's per-version-step planner
-and executor diff.
+changes mode reuses the streaming source's catalog walk
+(``_plan_catalog_steps``) and the lake feeds' change step.
 """
 
 from __future__ import annotations
@@ -80,16 +80,6 @@ def _resolve_table(opts: dict) -> tuple[str, int]:
     return os.path.join(path, table), int(entry["tables"][table])
 
 
-class CatalogChangesPartition(InputPartition):
-    def __init__(self, tbl, cat_ver, ver, bucket, new_files, old_files):
-        self.tbl = tbl
-        self.cat_ver = cat_ver
-        self.ver = ver
-        self.bucket = bucket
-        self.new_files = new_files
-        self.old_files = old_files
-
-
 class CatalogChangesBatchReader(DataSourceReader):
     """``changes=true``: the batch tx-consistent multi-table diff —
     the same catalog-entry walk and per-table version-step planner as
@@ -120,65 +110,16 @@ class CatalogChangesBatchReader(DataSourceReader):
             )
 
     def partitions(self) -> Sequence[InputPartition]:
-        from lapidus_spark.streaming.catalog_source import _catalog_entry
-        from lapidus_spark.streaming.lake_source import _plan_version_steps
+        from lapidus_spark.streaming.catalog_source import _plan_catalog_steps
 
-        parts: list[InputPartition] = []
-        entry_prev: dict | None = None
-        for cv in range(self.start + 1, self.end + 1):
-            entry_new = _catalog_entry(self.catalog_dir, cv)
-            entry_old = (
-                entry_prev
-                if entry_prev is not None
-                else (
-                    _catalog_entry(self.catalog_dir, cv - 1)
-                    if cv - 1 >= 1
-                    else {"tables": {}}
-                )
-            )
-            entry_prev = entry_new
-            for tbl in sorted(entry_new["tables"]):
-                tv_old = int(entry_old["tables"].get(tbl, 0))
-                tv_new = int(entry_new["tables"][tbl])
-                if tv_new == tv_old:
-                    continue
-                for v, b, nf, of in _plan_version_steps(
-                    os.path.join(self.catalog_dir, tbl),
-                    tv_old,
-                    tv_new,
-                    caller="catalog (batch)",
-                ):
-                    parts.append(
-                        CatalogChangesPartition(tbl, cv, v, b, nf, of)
-                    )
-        return parts
-
-    def read(self, partition: CatalogChangesPartition) -> Iterator:
-        from lapidus_spark.streaming.lake_source import (
-            _NEW_COLS,
-            _OLD_COLS,
-            _entity_state_changes,
-            _read_side,
-            _state_record_batch,
+        return _plan_catalog_steps(
+            self.catalog_dir, self.start, self.end, caller="catalog (batch)"
         )
 
-        new = _read_side(partition.new_files, _NEW_COLS)
-        old = _read_side(partition.old_files, _OLD_COLS)
-        if new.empty and old.empty:
-            return
-        new["last_seq"] = new["last_seq"].astype("Int64")
-        old["last_seq"] = old["last_seq"].astype("Int64")
-        m = new.merge(old, on="entity_id", how="outer", suffixes=("", "_o"))
-        out = _entity_state_changes(m)
-        if out is None:
-            return
-        yield _state_record_batch(
-            out["m"],
-            out["change_type"],
-            partition.cat_ver,
-            tbl=partition.tbl,
-            tbl_ver=partition.ver,
-        )
+    def read(self, partition) -> Iterator:
+        from lapidus_spark.streaming.lake_source import _change_batches
+
+        yield from _change_batches(partition)
 
 
 class CatalogDataSource(DataSource):
@@ -208,8 +149,7 @@ class CatalogDataSource(DataSource):
             raise ValueError(
                 f"catalog member table at {lake_dir} has no manifest"
             )
-        ddl, _ = _epoch_ddl(lake_dir, manifest)
-        return ddl
+        return _epoch_ddl(lake_dir, manifest)[0]
 
     def reader(self, schema) -> DataSourceReader:
         opts = self._opts()

@@ -17,15 +17,16 @@ Scale contract (inherits the lake source's, per table):
 
 - ``latestOffset`` is ONE driver-side JSON read of the catalog
   pointer — no file listing, no scan.
-- ``partitions(start, end)`` walks catalog entries (tiny JSONs) and,
-  per member table, expands that table's catalog-mapped version range
-  through the SAME per-version planner the lake source uses
-  (``_plan_version_steps``): pointer-diff bucket pruning refined by
-  dataChange stamps, physical-only commits plan zero partitions,
-  marked rebuckets skip free. A tx touching k buckets across N tables
-  plans exactly those k partitions.
-- ``read`` is the shared executor-side pandas diff, one Arrow batch
-  per (table, version step, changed bucket).
+- ``partitions(start, end)`` walks catalog entries (tiny JSONs,
+  ``_plan_catalog_steps`` — the one walk, shared with the batch
+  ``format("catalog")`` twin) and, per member table, expands that
+  table's catalog-mapped version range through the SAME per-version
+  planner the lake source uses (``_plan_version_steps``): pointer-diff
+  bucket pruning refined by dataChange stamps, physical-only commits
+  plan zero partitions, marked rebuckets skip free. A tx touching k
+  buckets across N tables plans exactly those k partitions.
+- ``read`` is the lake feeds' change step (``_change_batches``), one
+  Arrow batch per (table, version step, changed bucket).
 
 Retention: the round-11 catalog-coordinated guards make this source's
 reads safe by construction — a retained catalog entry's table
@@ -46,14 +47,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from lapidus_spark.streaming.lake_source import (
-    _NEW_COLS,
-    _OLD_COLS,
-    _entity_state_changes,
-    _plan_version_steps,
-    _read_side,
-    _state_record_batch,
-)
+from lapidus_spark.streaming.lake_source import _change_batches, _plan_version_steps
 
 #: the batch ``catalog_changes`` frame plus the source's ``ver``
 #: column carrying the CATALOG version whose tx produced the change
@@ -99,18 +93,48 @@ def _catalog_entry(catalog_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
-class CatalogCDFPartition(InputPartition):
-    """One (table, table-version step, changed bucket), tagged with
-    the catalog version whose tx it belongs to."""
-
-    def __init__(self, tbl: str, cat_ver: int, ver: int, bucket: int,
-                 new_files: list, old_files: list):
-        self.tbl = tbl
-        self.cat_ver = cat_ver
-        self.ver = ver
-        self.bucket = bucket
-        self.new_files = new_files
-        self.old_files = old_files
+def _plan_catalog_steps(catalog_dir: str, s: int, e: int, caller: str) -> list:
+    """Driver-side: the change steps of catalog versions (s, e] — the
+    one catalog-entry walk behind ``catalog_cdf`` and the batch
+    ``format("catalog")`` changes relation. Each member table a tx
+    moved expands through ``_plan_version_steps`` over its
+    catalog-mapped version range, tagged with the table and the
+    catalog version."""
+    parts: list = []
+    entry_prev: dict | None = None
+    for cv in range(s + 1, e + 1):
+        entry_new = _catalog_entry(catalog_dir, cv)
+        entry_old = (
+            entry_prev
+            if entry_prev is not None
+            else (
+                _catalog_entry(catalog_dir, cv - 1)
+                if cv - 1 >= 1
+                else {"tables": {}}
+            )
+        )
+        entry_prev = entry_new
+        # tables are never dropped, so the new entry's set is a
+        # superset; a table first committed in this tx diffs from
+        # empty (version 0) — its whole first snapshot as inserts
+        for tbl in sorted(entry_new["tables"]):
+            tv_old = int(entry_old["tables"].get(tbl, 0))
+            tv_new = int(entry_new["tables"][tbl])
+            if tv_new == tv_old:
+                continue  # carried forward: the tx didn't touch it
+            # per-version stepping WITHIN the table covers
+            # non-catalog commits between the referenced versions
+            # (admin compaction between txs — its dataChange=false
+            # steps plan zero partitions anyway)
+            parts += _plan_version_steps(
+                os.path.join(catalog_dir, tbl),
+                tv_old,
+                tv_new,
+                caller=caller,
+                tbl=tbl,
+                cat_ver=cv,
+            )
+    return parts
 
 
 class CatalogCDFStreamReader(DataSourceStreamReader):
@@ -148,66 +172,10 @@ class CatalogCDFStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         s, e = int(start["version"]), int(end["version"])
         self._floor = max(self._floor, s, e)
-        parts: list[InputPartition] = []
-        entry_prev: dict | None = None
-        for cv in range(s + 1, e + 1):
-            entry_new = _catalog_entry(self.catalog_dir, cv)
-            entry_old = (
-                entry_prev
-                if entry_prev is not None
-                else (
-                    _catalog_entry(self.catalog_dir, cv - 1)
-                    if cv - 1 >= 1
-                    else {"tables": {}}
-                )
-            )
-            entry_prev = entry_new
-            # tables are never dropped, so the new entry's set is a
-            # superset; a table first committed in this tx diffs from
-            # empty (version 0) — its whole first snapshot as inserts
-            for tbl in sorted(entry_new["tables"]):
-                tv_old = int(entry_old["tables"].get(tbl, 0))
-                tv_new = int(entry_new["tables"][tbl])
-                if tv_new == tv_old:
-                    continue  # carried forward: the tx didn't touch it
-                # per-version stepping WITHIN the table covers
-                # non-catalog commits between the referenced versions
-                # (admin compaction between txs — its dataChange=false
-                # steps plan zero partitions anyway)
-                for v, b, nf, of in _plan_version_steps(
-                    os.path.join(self.catalog_dir, tbl),
-                    tv_old,
-                    tv_new,
-                    caller="catalog_cdf",
-                ):
-                    parts.append(
-                        CatalogCDFPartition(
-                            tbl=tbl, cat_ver=cv, ver=v, bucket=b,
-                            new_files=nf, old_files=of,
-                        )
-                    )
-        return parts
+        return _plan_catalog_steps(self.catalog_dir, s, e, caller="catalog_cdf")
 
-    def read(self, partition: CatalogCDFPartition) -> Iterator:
-        """Executor-side: the shared per-bucket entity-state diff,
-        tagged with the table and the catalog version."""
-        new = _read_side(partition.new_files, _NEW_COLS)
-        old = _read_side(partition.old_files, _OLD_COLS)
-        if new.empty and old.empty:
-            return
-        new["last_seq"] = new["last_seq"].astype("Int64")
-        old["last_seq"] = old["last_seq"].astype("Int64")
-        m = new.merge(old, on="entity_id", how="outer", suffixes=("", "_o"))
-        out = _entity_state_changes(m)
-        if out is None:
-            return
-        yield _state_record_batch(
-            out["m"],
-            out["change_type"],
-            partition.cat_ver,
-            tbl=partition.tbl,
-            tbl_ver=partition.ver,
-        )
+    def read(self, partition) -> Iterator:
+        yield from _change_batches(partition)
 
     def commit(self, end: dict) -> None:
         self._floor = max(self._floor, int(end["version"]))

@@ -22,10 +22,15 @@ Scale contract (the same one ``lake_changes`` documents):
   k partitions reading k·(table/B) bytes, never a table scan, and the
   per-version stepping makes the emitted row set independent of how
   versions group into micro-batches (deterministic replay).
-- ``read`` runs on executors: pyarrow reads the old/new bucket files
-  (column-pruned), diffs per entity in pandas, and yields one Arrow
-  RecordBatch — the layout pins an entity to its bucket, so the
-  per-bucket diff equals the global diff.
+- ``read`` runs on executors (``_change_batches``, the one change
+  step behind this source, ``catalog_cdf`` and both batch twins):
+  each side of the bucket reads through ``lake_batch.
+  _aligned_file_table`` with that side's deletion vector, tombstones
+  kept, and one Arrow full-outer join diffs them by
+  ``lake_changes``' rule (``rowChanges``: ``lake_changes_rows``') —
+  the layout pins an entity to its bucket, so the per-bucket diff
+  equals the global diff, and a DV DELETE step (pointer kept, vector
+  moved) emits its deletes like a rewrite DELETE.
 
 Physical-only commits are free: a compaction (OPTIMIZE) moves bucket
 pointers without changing content, and the manifest's per-bucket
@@ -63,11 +68,8 @@ CDF_SCHEMA = (
     "last_ts timestamp, last_type string, item string, ver int"
 )
 
-_NEW_COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item"]
-_OLD_COLS = ["entity_id", "last_seq", "last_ts", "last_type"]
-#: rowChanges=true needs the old payload too: pre-image rows carry
-#: the OLD values in the same value columns
-_OLD_COLS_PRE = ["entity_id", "last_seq", "last_ts", "last_type", "item"]
+#: the diffed columns besides ``entity_id``
+_CHANGE_COLS = ("last_seq", "last_ts", "last_type", "item")
 
 
 def _live_version(lake_dir: str, default: int = 0) -> int:
@@ -82,14 +84,32 @@ def _live_version(lake_dir: str, default: int = 0) -> int:
 
 
 class LakeCDFPartition(InputPartition):
-    """One (version step, changed bucket): absolute parquet paths for
-    the bucket's state at ``ver`` (new) and ``ver - 1`` (old)."""
+    """One change step — the read unit of all four change feeds: one
+    (version step, changed bucket) with absolute parquet paths and
+    the bucket's deletion-vector entries for its state at ``ver``
+    (new) and ``ver - 1`` (old). The catalog feeds add the member
+    table ``tbl`` and the catalog version ``cat_ver`` whose tx the
+    step belongs to."""
 
-    def __init__(self, ver: int, bucket: int, new_files: list, old_files: list):
+    def __init__(
+        self,
+        ver: int,
+        bucket: int,
+        new_files: list,
+        old_files: list,
+        new_dv=(),
+        old_dv=(),
+        tbl: str | None = None,
+        cat_ver: int | None = None,
+    ):
         self.ver = ver
         self.bucket = bucket
         self.new_files = new_files
         self.old_files = old_files
+        self.new_dv = list(new_dv)
+        self.old_dv = list(old_dv)
+        self.tbl = tbl
+        self.cat_ver = cat_ver
 
 
 def _bucket_files(lake_dir: str, manifest: dict | None, bucket: int) -> list:
@@ -118,94 +138,19 @@ def _bucket_files(lake_dir: str, manifest: dict | None, bucket: int) -> list:
     )
 
 
-def _read_side(files: list, cols: list):
-    """Executor-side: one side of a bucket diff as pandas
-    (column-pruned pyarrow reads; empty typed frame for no files)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if not files:
-        return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-    tbl = pa.concat_tables([pq.read_table(f, columns=cols) for f in files])
-    return tbl.to_pandas()
-
-
-def _entity_state_changes(m):
-    """Executor-side entity-state diff over an outer-merged frame
-    (suffixes ("", "_o")): keep entities whose (last_seq, last_ts)
-    changed, type the change. Returns ``{"m": filtered_frame,
-    "change_type": np.array}`` or None when nothing changed — shared
-    by the per-table and catalog-level CDF sources."""
-    import numpy as np
-
-    missing_old = m["last_seq_o"].isna().to_numpy(dtype=bool)
-    missing_new = m["last_seq"].isna().to_numpy(dtype=bool)
-    changed = (
-        missing_old
-        | missing_new
-        | m["last_seq_o"].ne(m["last_seq"]).fillna(False).to_numpy(dtype=bool)
-        | (m["last_ts_o"] != m["last_ts"]).to_numpy(dtype=bool)
-    )
-    # a vanished TOMBSTONE is absent→absent: emit nothing (the
-    # visible-vanished keys keep their delete row below)
-    old_invisible = missing_old | m["last_type_o"].eq("delete").to_numpy(dtype=bool)
-    m = m[changed & ~(missing_new & old_invisible)]
-    if m.empty:
-        return None
-    vanished = m["last_seq"].isna().to_numpy(dtype=bool)
-    is_tomb = m["last_type"].eq("delete").to_numpy(dtype=bool) | vanished
-    was_absent = m["last_seq_o"].isna() | m["last_type_o"].eq("delete")
-    change_type = np.where(
-        is_tomb, "delete", np.where(was_absent, "insert", "update")
-    )
-    return {"m": m, "change_type": change_type}
-
-
-def _state_record_batch(
-    m, change_type, ver: int, tbl: str | None = None, tbl_ver: int | None = None
-):
-    """One Arrow batch of entity-state change rows; with ``tbl`` the
-    catalog-level feed's discriminator column leads, and ``tbl_ver``
-    appends the underlying TABLE version the step diffed — the
-    within-catalog-version ordering column (one catalog step can span
-    several table-version steps when a member table received direct
-    non-catalog data commits between txs; without it a folding
-    consumer could not apply same-``ver`` rows in commit order)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    # stored instants are UTC-normalized (Spark parquet writer);
-    # stamping the zone makes the Arrow->Catalyst handoff
-    # session-timezone-proof.
-    ts = pc.assume_timezone(
-        pa.Array.from_pandas(m["last_ts"], type=pa.timestamp("us")), "UTC"
-    )
-    arrays = [
-        pa.Array.from_pandas(m["entity_id"], type=pa.string()),
-        pa.array(change_type, type=pa.string()),
-        pa.Array.from_pandas(m["last_seq"], type=pa.int64()),
-        ts,
-        pa.Array.from_pandas(m["last_type"], type=pa.string()),
-        pa.Array.from_pandas(m["item"], type=pa.string()),
-        pa.array([ver] * len(m), type=pa.int32()),
-    ]
-    names = ["entity_id", "change_type", "last_seq", "last_ts",
-             "last_type", "item", "ver"]
-    if tbl_ver is not None:
-        arrays.append(pa.array([tbl_ver] * len(m), type=pa.int32()))
-        names.append("tbl_ver")
-    if tbl is not None:
-        arrays = [pa.array([tbl] * len(m), type=pa.string()), *arrays]
-        names = ["tbl", *names]
-    return pa.record_batch(arrays, names=names)
-
-
-def _plan_version_steps(lake_dir: str, s: int, e: int, caller: str = "lake_cdf"):
+def _plan_version_steps(
+    lake_dir: str,
+    s: int,
+    e: int,
+    caller: str = "lake_cdf",
+    tbl: str | None = None,
+    cat_ver: int | None = None,
+) -> list[LakeCDFPartition]:
     """Driver-side planning shared by the per-table and catalog-level
-    CDF sources: expand the version range (s, e] into
-    ``(ver, bucket, new_files, old_files)`` tuples — one per (version
-    step, data-changed bucket). All the scale properties live here:
+    CDF sources: expand the version range (s, e] into change steps —
+    one ``LakeCDFPartition`` per (version step, data-changed bucket),
+    carrying each side's files and deletion-vector entries (both
+    manifests are in hand already). All the scale properties live here:
     per-version stepping (deterministic replay independent of batch
     grouping), pointer-diff bucket pruning refined by the
     ``data_versions`` stamps (physical-only commits plan ZERO
@@ -266,94 +211,148 @@ def _plan_version_steps(lake_dir: str, s: int, e: int, caller: str = "lake_cdf")
                 # provably identical, skip without reading.
                 continue
             parts.append(
-                (
+                LakeCDFPartition(
                     v,
                     b,
                     _bucket_files(lake_dir, m_new, b),
                     _bucket_files(lake_dir, m_old, b),
+                    new_dv=m_new.get("deletion_vectors", {}).get(b_str, ()),
+                    old_dv=(m_old or {}).get("deletion_vectors", {}).get(b_str, ()),
+                    tbl=tbl,
+                    cat_ver=cat_ver,
                 )
             )
     return parts
 
 
+def _change_batches(part: LakeCDFPartition, row_changes: bool = False) -> Iterator:
+    """Executor-side: ONE change step, the read of all four change
+    feeds. Both sides read through ``_aligned_file_table`` at the feeds'
+    declared types (``CDF_SCHEMA``: ``last_ts timestamp``, ``item
+    string``) with their own deletion vectors and tombstones KEPT, then
+    one full-outer join on ``entity_id`` diffs them. FULL outer: a
+    RESTORE reverts to a version predating some keys, so a visible key
+    can vanish. Every predicate is Kleene, like the Spark helpers' SQL,
+    and a NULL filter drops the row as theirs does.
 
-def _row_change_batches(m, ver: int) -> Iterator:
-    """rowChanges=true executor path: the row-level Delta-CDF
-    vocabulary over the consumer view (the executor-side twin of
-    ``lake_changes_rows``, same semantics test-pinned there —
-    SHARED by the streaming ``lake_cdf`` source and the batch
-    ``format("lake")`` changes relation, so a drained stream and a
-    catch-up batch read emit identical pre/post-image rows):
-    insert = appeared visible (new values); update = visible both
-    sides with changed (seq, ts) → pre-image row (OLD values) +
-    post-image row (new values); delete = went invisible (the
-    REMOVED content, not the tombstone). A tombstone refreshed by
-    a newer tombstone is absent→absent and emits nothing."""
-    import pandas as pd
+    - entity state (``lake_changes``' rule): an entity is emitted when
+      it is new, vanished while visible, or its ``last_seq``,
+      ``last_ts`` or ``last_type`` moved — the type term catches a
+      redaction (rewrite or DV DELETE), which keeps the LWW position.
+      Post-image columns; ``delete`` when the new side is a tombstone
+      or absent, ``insert`` when the old side was, else ``update``.
+    - ``row_changes`` (``lake_changes_rows``' rule, over the visible
+      rows): insert = appeared visible (new values); update = visible
+      both sides with a moved (seq, ts) → pre-image row (OLD values) +
+      post-image row (new values); delete = went invisible (the
+      REMOVED content). A tombstone refreshed by a newer tombstone is
+      absent→absent and emits nothing.
+
+    Rows carry ``ver``; a catalog step leads with ``tbl``, carries the
+    catalog version as ``ver`` and the table version as ``tbl_ver``
+    (the within-``ver`` order when one tx spans several table
+    steps). A batch reader whose plan is empty gets ONE ``None``
+    partition from Spark (``plan_data_source_read``): no rows."""
+    if part is None:
+        return
+    import functools
+
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    present = ~m["last_seq_o"].isna()
-    old_vis = (present & m["last_type_o"].ne("delete")).to_numpy(dtype=bool)
-    # null-guarded: a RESTORE can leave the new side ABSENT
-    # (key vanished) — visible→absent is a delete with the old
-    # values as the pre-image, like the batch lake_changes_rows
-    new_vis = (
-        ~m["last_seq"].isna() & m["last_type"].ne("delete")
-    ).to_numpy(dtype=bool)
-    changed = (
-        old_vis
-        & new_vis
-        & (
-            m["last_seq_o"].ne(m["last_seq"]).fillna(False).to_numpy(dtype=bool)
-            | (m["last_ts_o"] != m["last_ts"]).to_numpy(dtype=bool)
-        )
+    from lapidus_spark.sources.lake_batch import (
+        _aligned_file_table,
+        _snapshot_arrow_schema,
     )
 
-    def frame(mask, side: str, kind: str) -> pd.DataFrame | None:
-        sub = m[mask]
-        if sub.empty:
-            return None
-        return pd.DataFrame(
+    def side(files, dv):
+        tables = [
+            _aligned_file_table(
+                f, [], "timestamp", "string", dv,
+                bucket=part.bucket, keep_tombstones=True,
+            )
+            for f in files
+        ] or [_snapshot_arrow_schema([], "timestamp", "string").empty_table()]
+        return pa.concat_tables(tables).select(["entity_id", *_CHANGE_COLS])
+
+    new, old = side(part.new_files, part.new_dv), side(part.old_files, part.old_dv)
+    if not (new.num_rows or old.num_rows):
+        return
+    j = new.join(old, "entity_id", join_type="full outer", right_suffix="_o")
+    j = j.combine_chunks()
+
+    def moved(c):
+        return pc.not_equal(j[c + "_o"], j[c])
+
+    def visible(sfx):
+        return pc.and_kleene(
+            pc.is_valid(j["last_seq" + sfx]),
+            pc.not_equal(j["last_type" + sfx], "delete"),
+        )
+
+    def when(pred):  # SQL WHERE / CASE WHEN: NULL is false
+        return pc.fill_null(pred, False)
+
+    def rows(mask, sfx, kind):
+        t = j.filter(mask)
+        kinds = (
+            pa.array([kind] * t.num_rows, pa.string())
+            if isinstance(kind, str)
+            else kind.filter(mask)
+        )
+        return pa.table(
             {
-                "entity_id": sub["entity_id"].to_numpy(),
-                "change_type": kind,
-                "last_seq": sub["last_seq" + side].astype("Int64").to_numpy(),
-                "last_ts": sub["last_ts" + side].to_numpy(),
-                "last_type": sub["last_type" + side].to_numpy(),
-                "item": sub["item" + side].to_numpy(),
+                "entity_id": t["entity_id"],
+                "change_type": kinds,
+                **{c: t[c + sfx] for c in _CHANGE_COLS},
             }
         )
 
-    frames = [
-        f
-        for f in (
-            frame(~old_vis & new_vis, "", "insert"),
-            frame(changed, "_o", "update_preimage"),
-            frame(changed, "", "update_postimage"),
-            frame(old_vis & ~new_vis, "_o", "delete"),
+    old_vis, new_vis = visible("_o"), visible("")
+    if row_changes:
+        updated = when(
+            pc.and_kleene(
+                pc.and_kleene(old_vis, new_vis),
+                pc.or_kleene(moved("last_seq"), moved("last_ts")),
+            )
         )
-        if f is not None
-    ]
-    if not frames:
+        picks = [
+            (when(pc.and_kleene(pc.invert(old_vis), new_vis)), "", "insert"),
+            (updated, "_o", "update_preimage"),
+            (updated, "", "update_postimage"),
+            (when(pc.and_kleene(old_vis, pc.invert(new_vis))), "_o", "delete"),
+        ]
+        out = pa.concat_tables([rows(m, sfx, kind) for m, sfx, kind in picks])
+    else:
+        keep = functools.reduce(
+            pc.or_kleene,
+            [
+                pc.is_null(j["last_seq_o"]),
+                pc.and_kleene(
+                    pc.is_null(j["last_seq"]),
+                    pc.not_equal(j["last_type_o"], "delete"),
+                ),
+                moved("last_seq"),
+                moved("last_ts"),
+                moved("last_type"),
+            ],
+        )
+        kind = pc.if_else(
+            when(pc.invert(new_vis)),
+            "delete",
+            pc.if_else(when(pc.invert(old_vis)), "insert", "update"),
+        )
+        out = rows(when(keep), "", kind)
+    n = out.num_rows
+    if not n:
         return
-    out = pd.concat(frames, ignore_index=True)
-    ts = pc.assume_timezone(
-        pa.Array.from_pandas(out["last_ts"], type=pa.timestamp("us")), "UTC"
-    )
-    yield pa.record_batch(
-        [
-            pa.Array.from_pandas(out["entity_id"], type=pa.string()),
-            pa.Array.from_pandas(out["change_type"], type=pa.string()),
-            pa.Array.from_pandas(out["last_seq"], type=pa.int64()),
-            ts,
-            pa.Array.from_pandas(out["last_type"], type=pa.string()),
-            pa.Array.from_pandas(out["item"], type=pa.string()),
-            pa.array([ver] * len(out), type=pa.int32()),
-        ],
-        names=["entity_id", "change_type", "last_seq", "last_ts",
-               "last_type", "item", "ver"],
-    )
+    if part.tbl is None:
+        out = out.append_column("ver", pa.array([part.ver] * n, pa.int32()))
+    else:
+        out = out.append_column("ver", pa.array([part.cat_ver] * n, pa.int32()))
+        out = out.append_column("tbl_ver", pa.array([part.ver] * n, pa.int32()))
+        out = out.add_column(0, "tbl", pa.array([part.tbl] * n, pa.string()))
+    yield from out.combine_chunks().to_batches()
 
 
 class LakeCDFStreamReader(DataSourceStreamReader):
@@ -424,44 +423,10 @@ class LakeCDFStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         s, e = int(start["version"]), int(end["version"])
         self._floor = max(self._floor, s, e)
-        return [
-            LakeCDFPartition(ver=v, bucket=b, new_files=nf, old_files=of)
-            for v, b, nf, of in _plan_version_steps(self.lake_dir, s, e)
-        ]
+        return _plan_version_steps(self.lake_dir, s, e)
 
     def read(self, partition: LakeCDFPartition) -> Iterator:
-        """Executor-side per-bucket diff: read the bucket's old and
-        new state (column-pruned), keep entities whose (last_seq,
-        last_ts) changed, type the change, emit one Arrow batch.
-        Ordinary commits never physically drop keys (tombstones
-        persist, new ⊇ old) — but a RESTORE reverts to a version
-        predating some keys' first appearance, so the merge is FULL
-        OUTER and a vanished visible key emits ``delete`` (NULL
-        post-image columns here; the row-level path carries the old
-        values as the pre-image, matching the batch twins)."""
-        new = _read_side(partition.new_files, _NEW_COLS)
-        old = _read_side(
-            partition.old_files, _OLD_COLS_PRE if self.row_changes else _OLD_COLS
-        )
-        if new.empty and old.empty:
-            return
-        # nullable Int64 BEFORE the merge: a plain outer merge upcasts
-        # the missing side to float64, which loses seq exactness above
-        # 2^53 and could silently drop a change the batch-side
-        # lake_changes (exact bigint <>) would emit.
-        new["last_seq"] = new["last_seq"].astype("Int64")
-        old["last_seq"] = old["last_seq"].astype("Int64")
-        m = new.merge(old, on="entity_id", how="outer", suffixes=("", "_o"))
-        if self.row_changes:
-            yield from self._row_change_batches(m, partition.ver)
-            return
-        out = _entity_state_changes(m)
-        if out is None:
-            return
-        yield _state_record_batch(out["m"], out["change_type"], partition.ver)
-
-    def _row_change_batches(self, m, ver: int) -> Iterator:
-        yield from _row_change_batches(m, ver)
+        yield from _change_batches(partition, self.row_changes)
 
     def commit(self, end: dict) -> None:
         self._floor = max(self._floor, int(end["version"]))

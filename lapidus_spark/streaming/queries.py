@@ -2403,7 +2403,7 @@ def lake_cdf_preimages(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SQL-addressable: spark.read.format('lake') with changes=true + "
     "rowChanges=true emits insert / update_preimage / "
     "update_postimage / delete rows — the same option name, the same "
-    "executor-side per-bucket diff (_row_change_batches, shared "
+    "executor-side per-bucket diff (_change_batches, shared "
     "module-level with the streaming lake_cdf source), and the same "
     "rows as both the lake_changes_rows helper per step and a "
     "drained rowChanges stream (tests/test_lake_batch_source.py). "

@@ -6,7 +6,9 @@ change feed as a batch relation.
 Pinned here: snapshot ≡ ``read_catalog_table`` (live and pinned
 ``catalogVersion``), cross-table tx-consistency under one catalog
 version, ``changes=true`` identical to draining the ``catalog_cdf``
-stream (tbl/ver/tbl_ver included), the SQL USING-catalog view, filter
+stream (tbl/ver/tbl_ver included) across a member table's direct
+deletion-vector DELETE, whose step equals ``lake_changes``, the SQL
+USING-catalog view, filter
 pushdown reuse (bucket pruning on the member table), and the
 option-validation failure postures."""
 
@@ -16,8 +18,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import lapidus_spark.lake.catalog as C
+import lapidus_spark.streaming.materialize as M
 from lapidus_spark.sources.catalog_batch import register_catalog_batch
-from tests.test_catalog_source import _build_catalog
+from tests.test_catalog_source import _build_catalog, _halves
 
 SNAP = ["entity_id", "last_seq", "last_ts", "last_type", "item"]
 FEED = ["tbl", "entity_id", "change_type", "last_seq", "last_ts",
@@ -66,8 +69,24 @@ def test_tx_consistency_across_tables(spark, tmp_path):
 
 
 def test_changes_matches_streamed_catalog_cdf(spark, tmp_path):
+    """Between txs 2 and 3, ``by_user`` takes a direct DV DELETE of 8
+    keys (table version 3: pointers kept, vector moved), so catalog
+    version 3 spans two table steps of it; both feeds emit the DV
+    step's 8 deletes exactly as ``lake_changes`` does."""
     cat = str(tmp_path / "cat")
-    _build_catalog(spark, cat)
+    _build_catalog(spark, cat, n_txs=2)
+    member = str(tmp_path / "cat" / "by_user")
+    live = M.read_lake_snapshot(spark, member).collect()
+    keys = sorted(r["entity_id"] for r in live)[:8]
+    M.delete_from_lake(
+        spark, member,
+        "entity_id IN ({})".format(", ".join(f"'{k}'" for k in keys)),
+        retain_versions=8, mode="dv",
+    )
+    C.commit_multi_table_tx(
+        cat, _halves(spark, 4, 2, seq_shift=3_000_000), txid=3,
+        retain_versions=8, n_buckets=4,
+    )
     register_catalog_batch(spark)
     got = (
         spark.read.format("catalog")
@@ -95,6 +114,11 @@ def test_changes_matches_streamed_catalog_cdf(spark, tmp_path):
         q.awaitTermination()
     assert _rows(got, FEED) == _rows(spark.table("catbatch_stream"), FEED)
     assert got.count() > 0
+    ccols = ["entity_id", "change_type", "last_seq", "last_type", "item"]
+    dv_step = got.filter((F.col("tbl") == "by_user") & (F.col("tbl_ver") == 3))
+    helper = M.lake_changes(spark, member, from_version=2, to_version=3)
+    assert _rows(dv_step, ccols) == _rows(helper, ccols)
+    assert _rows(dv_step, ["entity_id", "change_type"]) == [(k, "delete") for k in keys]
     # a bounded slice: only tx 3
     step = (
         spark.read.format("catalog")

@@ -5,9 +5,12 @@ that need no ``import lapidus_spark``.
 
 Pinned here: exact parity with the helper path (``read_lake_snapshot``
 across live/version/timestampAsOf reads, deletion vectors, schema
-evolution with accretion + rename aliases + type widening),
+evolution with accretion + rename aliases + type widening, an INT96
+``timestamp`` lake's types under a non-UTC session),
 ``changes=true`` equal to draining the streaming source AND to the
-batch ``lake_changes`` per step, the Spark-parity pure-Python
+batch ``lake_changes`` / ``lake_changes_rows`` per step over every
+step kind (merge, compaction, rewrite and DV DELETE, restore across
+the DV commit), the Spark-parity pure-Python
 xxhash64 the planner prunes buckets with, bucket/zone-map pruning
 decisions (partition counts vs the helper's pruned reads), the SQL
 (CREATE TEMPORARY VIEW ... USING lake) path, and the option-validation
@@ -73,6 +76,86 @@ def _build(spark, lake):
 
 def _rows(df, cols=SNAP_COLS):
     return sorted(map(tuple, df.select(*cols).collect()))
+
+
+#: the 8 keys each DELETE step redacts (all visible when deleted)
+REWRITE_KEYS = [f"k{i:04d}" for i in range(40, 48)]
+DV_KEYS = [f"k{i:04d}" for i in range(20, 28)]
+
+
+def _in(keys):
+    return "entity_id IN ({})".format(", ".join(f"'{k}'" for k in keys))
+
+
+@pytest.fixture(scope="module")
+def history_lake(spark, tmp_path_factory):
+    """One version per change-step kind: v1 and v2 merges, v3 a
+    clustered OPTIMIZE (dataChange-free), v4 a rewrite DELETE of 8
+    keys, v5 a deletion-vector DELETE of 8 others (pointers kept),
+    v6 a RESTORE to v4 across the DV commit (the 8 come back)."""
+    lake = str(tmp_path_factory.mktemp("history") / "lake")
+    _build(spark, lake)
+    M.delete_from_lake(spark, lake, _in(REWRITE_KEYS), retain_versions=8, mode="rewrite")
+    M.delete_from_lake(spark, lake, _in(DV_KEYS), retain_versions=8, mode="dv")
+    M.restore_lake(lake, 4, retain_versions=8)
+    assert M._read_manifest(lake)["version"] == 6
+    return lake
+
+
+def _changes(spark, lake, start, end=None, **opts):
+    r = (
+        spark.read.format("lake")
+        .option("path", lake)
+        .option("changes", "true")
+        .option("startingVersion", str(start))
+    )
+    if end is not None:
+        r = r.option("endingVersion", str(end))
+    for k, v in opts.items():
+        r = r.option(k, v)
+    return r.load()
+
+
+def _drained(spark, lake, name, ckpt, **opts):
+    from lapidus_spark.streaming.lake_source import register_lake_cdf
+
+    register_lake_cdf(spark)
+    reader = spark.readStream.format("lake_cdf").option("path", lake)
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    q = (
+        reader.load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return spark.table(name)
+
+
+HELPER_COLS = ["entity_id", "change_type", "last_seq", "last_ts", "last_type", "item"]
+FEED_COLS = HELPER_COLS + ["ver"]
+
+
+def _assert_steps_match(spark, lake, helper, expected_counts, **opts):
+    """Every version step of ``lake``: the relation's step equals the
+    Spark helper's diff of the same two versions and has the expected
+    row count (None: not pinned)."""
+    def ntz(df):  # the helpers return last_ts as timestamp_ntz: the
+        # same wall clock as the feeds' timestamp under the UTC session
+        df = df.withColumn("last_ts", F.col("last_ts").cast("timestamp_ntz"))
+        return _rows(df, HELPER_COLS)
+
+    for v, want in expected_counts.items():
+        got = ntz(_changes(spark, lake, v - 1, v, **opts))
+        assert got == ntz(helper(spark, lake, from_version=v - 1, to_version=v)), v
+        assert want is None or len(got) == want, (v, len(got))
 
 
 def test_xxhash64_matches_spark(spark):
@@ -144,18 +227,54 @@ def test_time_travel_version_and_timestamp(spark, tmp_path):
     assert _rows(got) == _rows(M.read_lake_snapshot(spark, lake, version=1))
 
 
-def test_deletion_vectors_and_tombstones_apply(spark, tmp_path):
+def test_deletion_vectors_and_tombstones_apply(spark, history_lake):
+    register_lake_batch(spark)
+    for v in (4, 5, 6):  # rewrite-deleted, DV-masked, DV restored away
+        got = spark.read.format("lake").option("path", history_lake).option(
+            "version", str(v)
+        ).load()
+        exp = M.read_lake_snapshot(spark, history_lake, version=v)
+        assert _rows(got) == _rows(exp), v
+        live = {r["entity_id"] for r in got.collect()}
+        assert not live & set(REWRITE_KEYS), v
+        assert (live & set(DV_KEYS) == set()) == (v == 5), v
+
+
+def test_int96_timestamp_lake_reads_like_the_snapshot(spark, tmp_path):
+    """A library-session lake stores ``last_ts`` as Spark's default
+    INT96 ``timestamp``, which pyarrow reads zone-less. The relation
+    must still declare ``timestamp`` like ``read_lake_snapshot``, so a
+    zoned ``last_ts`` window selects the same rows under a non-UTC
+    session, and a DV delete reads the same through both."""
     lake = str(tmp_path / "lake")
-    _build(spark, lake)
-    M.delete_from_lake(
-        spark, lake, "entity_id IN ('k0003', 'k0004')", mode="dv",
-        retain_versions=6,
+    M.merge_batch_into_lake(
+        _env(spark).withColumn("ts", F.col("ts").cast("timestamp")),
+        lake, n_buckets=4, retain_versions=4, extra_cols=("band",),
     )
     register_lake_batch(spark)
-    got = spark.read.format("lake").option("path", lake).load()
-    exp = M.read_lake_snapshot(spark, lake)
+
+    def both():
+        return (
+            spark.read.format("lake").option("path", lake).load(),
+            M.read_lake_snapshot(spark, lake),
+        )
+
+    got, exp = both()
+    assert got.schema == exp.schema  # last_ts timestamp on both
+    window = (
+        "last_ts >= TIMESTAMP'2023-11-15 02:00:00Z' "
+        "AND last_ts < TIMESTAMP'2023-11-15 03:00:00Z'"
+    )
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        n_got, n_exp = got.filter(window).count(), exp.filter(window).count()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert n_got == n_exp > 0
+    M.delete_from_lake(spark, lake, _in(DV_KEYS), retain_versions=4, mode="dv")
+    got, exp = both()
     assert _rows(got) == _rows(exp)
-    assert not [r for r in got.collect() if r["entity_id"] in ("k0003", "k0004")]
+    assert not {r["entity_id"] for r in got.collect()} & set(DV_KEYS)
 
 
 def test_schema_evolution_rename_and_widening(spark, tmp_path):
@@ -190,50 +309,20 @@ def test_schema_evolution_rename_and_widening(spark, tmp_path):
     assert _rows(got, cols) == _rows(exp, cols)
 
 
-def test_changes_mode_matches_stream_and_batch_helper(spark, tmp_path):
-    lake = str(tmp_path / "lake")
-    _build(spark, lake)  # versions 1, 2, 3 (compact = dataChange-free)
+def test_changes_mode_matches_stream_and_batch_helper(spark, history_lake, tmp_path):
+    """The state feed over every step kind equals ``lake_changes`` of
+    the same two versions — the compaction step is empty, each DELETE
+    step (rewrite: pointers move; DV: only the vector does) emits its
+    8 deletes, the restore re-inserts the DV-deleted 8 — and the whole
+    range equals draining the ``lake_cdf`` stream."""
     register_lake_batch(spark)
-    got = (
-        spark.read.format("lake")
-        .option("path", lake)
-        .option("changes", "true")
-        .option("startingVersion", "0")
-        .load()
+    _assert_steps_match(
+        spark, history_lake, M.lake_changes, {4: 8, 5: 8, 6: 8, 1: 120, 2: 120, 3: 0}
     )
-    # twin contract: identical to draining the streaming source
-    from lapidus_spark.streaming.lake_source import register_lake_cdf
-
-    register_lake_cdf(spark)
-    q = (
-        spark.readStream.format("lake_cdf")
-        .option("path", lake)
-        .load()
-        .writeStream.format("memory")
-        .queryName("lb_changes_stream")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    cols = ["entity_id", "change_type", "last_seq", "last_ts", "last_type", "item", "ver"]
-    assert _rows(got, cols) == _rows(spark.table("lb_changes_stream"), cols)
-    # per-step parity with the batch helper on a merge-only range
-    step = (
-        spark.read.format("lake")
-        .option("path", lake)
-        .option("changes", "true")
-        .option("startingVersion", "1")
-        .option("endingVersion", "2")
-        .load()
-    )
-    helper = M.lake_changes(spark, lake, from_version=1, to_version=2)
-    ccols = ["entity_id", "change_type", "last_seq", "last_type", "item"]
-    assert _rows(step, ccols) == _rows(helper, ccols)
+    dv_step = _changes(spark, history_lake, 4, 5).collect()
+    assert {r["change_type"] for r in dv_step} == {"delete"}
+    stream = _drained(spark, history_lake, "lb_changes_stream", str(tmp_path / "ck"))
+    assert _rows(_changes(spark, history_lake, 0), FEED_COLS) == _rows(stream, FEED_COLS)
 
 
 def test_point_probe_prunes_buckets_and_zone_maps_prune_files(spark, tmp_path):
@@ -269,6 +358,21 @@ def test_point_probe_prunes_buckets_and_zone_maps_prune_files(spark, tmp_path):
     )
     exp = M.read_lake_snapshot(spark, lake).filter(F.col("entity_id") == "k0005")
     assert _rows(got) == _rows(exp)
+
+
+def test_probe_into_an_unwritten_bucket_reads_zero_rows(spark, tmp_path):
+    """A pushed key whose bucket was never written plans zero
+    partitions, and Spark then hands the reader ONE ``None``
+    partition: the read must return no rows, not fail."""
+    lake = str(tmp_path / "lake")
+    M.merge_batch_into_lake(_env(spark, 1), lake, n_buckets=8)
+    other = next(
+        k for k in (f"z{i}" for i in range(100))
+        if _bucket_of(k, 8) != _bucket_of("k0000", 8)
+    )
+    register_lake_batch(spark)
+    got = spark.read.format("lake").option("path", lake).load()
+    assert got.filter(F.col("entity_id") == other).count() == 0
 
 
 def test_sql_view_select(spark, tmp_path):
@@ -417,58 +521,24 @@ def test_bloom_sidecar_prunes_sql_in_probes(spark, tmp_path):
     assert {x["entity_id"] for x in got} == {"k0010", "k0042", "k0099"}
 
 
-def test_row_changes_mode_matches_helper_and_stream(spark, tmp_path):
+def test_row_changes_mode_matches_helper_and_stream(spark, history_lake, tmp_path):
     """changes=true + rowChanges=true (VERDICT r12 #2): the batch
     relation emits the FULL Delta-CDF vocabulary with pre-images
     (insert / update_preimage / update_postimage / delete), identical
-    per step to the lake_changes_rows helper and in total to draining
-    the streaming source with the same option."""
-    lake = str(tmp_path / "lake")
-    _build(spark, lake)
+    per step — every step kind — to the lake_changes_rows helper and
+    in total to draining the streaming source with the same option."""
     register_lake_batch(spark)
-    ccols = ["entity_id", "change_type", "last_seq", "last_type", "item"]
-    step = (
-        spark.read.format("lake")
-        .option("path", lake)
-        .option("changes", "true")
-        .option("rowChanges", "true")
-        .option("startingVersion", "1")
-        .option("endingVersion", "2")
-        .load()
+    _assert_steps_match(
+        spark, history_lake, M.lake_changes_rows,
+        {4: 8, 5: 8, 6: 8, 1: None, 2: None, 3: 0},
+        rowChanges="true",
     )
-    helper = M.lake_changes_rows(spark, lake, from_version=1, to_version=2)
-    assert _rows(step, ccols) == _rows(helper, ccols)
-    kinds = {r["change_type"] for r in step.collect()}
+    step = _changes(spark, history_lake, 1, 2, rowChanges="true").collect()
+    kinds = {r["change_type"] for r in step}
     assert "update_preimage" in kinds and "update_postimage" in kinds
-    # full-range twin vs the streaming source with rowChanges=true
-    from lapidus_spark.streaming.lake_source import register_lake_cdf
-
-    register_lake_cdf(spark)
-    q = (
-        spark.readStream.format("lake_cdf")
-        .option("path", lake)
-        .option("rowChanges", "true")
-        .load()
-        .writeStream.format("memory")
-        .queryName("lb_rowchanges_stream")
-        .option("checkpointLocation", str(tmp_path / "ck_rc"))
-        .outputMode("append")
-        .start()
+    stream = _drained(
+        spark, history_lake, "lb_rowchanges_stream", str(tmp_path / "ck_rc"),
+        rowChanges="true",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    full = (
-        spark.read.format("lake")
-        .option("path", lake)
-        .option("changes", "true")
-        .option("rowChanges", "true")
-        .option("startingVersion", "0")
-        .load()
-    )
-    allcols = ccols + ["last_ts", "ver"]
-    assert _rows(full, allcols) == _rows(
-        spark.table("lb_rowchanges_stream"), allcols
-    )
+    full = _changes(spark, history_lake, 0, rowChanges="true")
+    assert _rows(full, FEED_COLS) == _rows(stream, FEED_COLS)

@@ -327,6 +327,21 @@ def test_dv_twin_parity(spark, tmp_path):
         M.delete_from_lake(
             spark, lk, "entity_id = 'k0007'", retain_versions=6, mode="dv"
         )
+    # an event OLDER than the redacted row (seq 67) loses to the
+    # redaction on both paths: the DV hit reads as a tombstone in the
+    # combine, exactly as the library merge's masked read makes it
+    stale = spark.createDataFrame(
+        [("k0007", 1, "update", "stale")],
+        "pk string, event_seq long, type string, item string",
+    ).select(
+        "pk", "event_seq",
+        F.timestamp_seconds(F.lit(1_700_000_060)).cast("timestamp_ntz").alias("ts"),
+        "type", "item",
+    )
+    _write(stale, a, retainVersions="6")
+    M.merge_batch_into_lake(stale, b, n_buckets=None, retain_versions=6)
+    assert _snap(spark, a) == _snap(spark, b)
+    assert all(e != "k0007" for (e, *_r) in _snap(spark, a))
     nxt = _env(spark, 30, start=240, seq_shift=50)  # touches many buckets
     _write(nxt, a, retainVersions="6")
     M.merge_batch_into_lake(nxt, b, n_buckets=None, retain_versions=6)
@@ -345,6 +360,75 @@ def test_dv_twin_parity(spark, tmp_path):
     M.merge_batch_into_lake(untouched, b, n_buckets=None, retain_versions=6)
     assert _snap(spark, a) == _snap(spark, b)
     assert all(e != "k0031" for (e, *_r) in _snap(spark, a))
+
+
+def _live_files(lake):
+    m = M._read_manifest(lake)
+    return sorted(
+        os.path.join(lake, rel, f)
+        for rel in m["buckets"].values()
+        for f in os.listdir(os.path.join(lake, rel))
+        if f.endswith(".parquet")
+    )
+
+
+def test_append_onto_int96_timestamp_lake_keeps_timestamp(spark, tmp_path):
+    """A library-session lake stores ``last_ts`` as INT96
+    ``timestamp``; a ``df.write`` append must rewrite its touched
+    buckets at ``timestamp`` too (never flip them to NTZ) and stay the
+    library merge's twin."""
+    from pyspark.sql.types import TimestampType
+
+    register_lake_batch(spark)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+
+    def ltz(df):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    for lk in (a, b):
+        M.merge_batch_into_lake(
+            ltz(_env(spark, 120)), lk, n_buckets=8, retain_versions=4
+        )
+    nxt = ltz(_env(spark, 30, start=240, seq_shift=50))
+    _write(nxt, a, retainVersions="4")
+    M.merge_batch_into_lake(nxt, b, n_buckets=None, retain_versions=4)
+    for f in _live_files(a):
+        assert spark.read.parquet(f).schema["last_ts"].dataType == TimestampType(), f
+    snap_a, snap_b = M.read_lake_snapshot(spark, a), M.read_lake_snapshot(spark, b)
+    assert snap_a.schema == snap_b.schema
+    assert _snap(spark, a) == _snap(spark, b)
+
+
+def test_timestamp_ntz_extra_is_recorded_as_ntz(spark, tmp_path):
+    """A ``timestamp_ntz`` extra column written through ``df.write``
+    is declared ``timestamp_ntz`` in the manifest, like the library
+    merge declares it, and reads as the same wall clock under a
+    non-UTC session."""
+    register_lake_batch(spark)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    env = _env(spark, 60).withColumn("seen_at", F.col("ts"))
+    _write(env, a)
+    M.merge_batch_into_lake(env, b, n_buckets=8, extra_cols=("seen_at",))
+    for lk in (a, b):
+        assert M._read_manifest(lk)["columns"] == [
+            {"name": "seen_at", "type": "timestamp_ntz"}
+        ], lk
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = [
+            sorted(
+                map(
+                    tuple,
+                    M.read_lake_snapshot(spark, lk)
+                    .select("entity_id", F.col("seen_at").cast("string"))
+                    .collect(),
+                )
+            )
+            for lk in (a, b)
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert got[0] == got[1]
 
 
 def test_validation_postures(spark, tmp_path):

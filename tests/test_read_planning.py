@@ -6,7 +6,9 @@ Spark job before its scan.
 Pinned here: the footer schema equals Spark's own inference (and the
 rows read under it are equal) across the lake's physical shapes —
 LTZ and NTZ ``last_ts``, a clustered OPTIMIZE, an ``extra_cols``
-epoch widened int→bigint; Arrow-written files fall back to inference;
+epoch widened int→bigint; ``df.write.format("lake")`` files carry
+Spark's schema key, and key-less Arrow files (older lakes) fall back
+to inference;
 a vanished footer file stays a missing-file error; the read builders
 stay lazy; and point reads equal the filtered snapshot on a
 non-power-of-two layout."""
@@ -119,16 +121,29 @@ def test_footer_schema_on_widened_epoch(spark, tmp_path):
 
 
 def test_arrow_written_footer_falls_back_to_inference(spark, tmp_path):
-    """``df.write.format("lake")`` writes bucket files with Arrow, whose
-    footers carry no Spark schema key: the helper returns None, the
-    read keeps Spark's inference, and the snapshot equals the library
-    merge of the same batch."""
+    """``df.write.format("lake")`` stamps Spark's schema key into the
+    bucket files it writes, so their footer schema equals Spark's own
+    read schema. Files without the key — what the writer produced
+    before it stamped one, still live in older lakes — make the
+    helper return None, and the read keeps Spark's inference."""
+    import pyarrow.parquet as pq
+
     lake, twin = str(tmp_path / "lake"), str(tmp_path / "twin")
     register_lake_batch(spark)
     _env(spark).write.format("lake").mode("append").option("path", lake).save()
     M.merge_batch_into_lake(_env(spark), twin, n_buckets=8)
     files = _data_files(lake)
-    assert files and all(log._footer_schema(f) is None for f in files)
+    assert files
+    for f in files:
+        _assert_footer_matches_inference(spark, f)
+    assert _rows(M.read_lake_snapshot(spark, lake), COLS) == _rows(
+        M.read_lake_snapshot(spark, twin), COLS
+    )
+    # the same bucket files re-written key-less, as pyarrow alone does
+    for f in files:
+        t = pq.read_table(f)
+        pq.write_table(t.replace_schema_metadata(None), f)
+    assert all(log._footer_schema(f) is None for f in files)
     got = log._read_commit_files(spark, M._read_manifest(lake), files)
     exp = spark.read.parquet(*files)
     assert got.schema == exp.schema
