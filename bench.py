@@ -2,9 +2,10 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
 ONE JSON line {"metric", "value", "unit", "queries", "sf"} — followed
-by a size-bounded digest twin of that line (same metric/value from
-the same timed pass) sized to fit the driver's bounded stdout-tail
-parser; see the note above the digest print and OPTIMIZATION_r13.md.
+by a digest twin of that line (same metric/value from the same timed
+pass) that fits the driver's bounded stdout-tail parser and covers
+every query through a per-family rollup, a count and a hash; see the
+note above the digest print.
 
 Timing protocol: one warm JVM/session (the driver measures engine
 work, not JVM startup), each query materialized via a noop-style
@@ -14,6 +15,7 @@ without driver-side row materialization skewing the numbers.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -264,25 +266,27 @@ def main() -> None:
     except OSError as e:
         print(f"# could not persist {out_path}: {e}", file=sys.stderr)
 
-    # Measurement-record fix (disclosed in OPTIMIZATION_r13.md): the
-    # driver parses its bench record from a bounded ~2000-char stdout
-    # TAIL. Round 1's 1998-char payload fit; every payload since
-    # round 2 outgrew the window, so BENCH_r{02..12}.json all record
-    # parsed:null — the driver has had no machine-readable bench for
-    # 11 rounds. The complete record cannot fit (the 186 query names
-    # alone are >3K chars), so emit a size-bounded DIGEST as the final
-    # stdout line: identical metric/value/unit/sf from the same timed
-    # pass, the slowest-N per-query entries that fit the window, and a
-    # pointer to the full record (the complete line above + the
-    # committed bench_out.json). Nothing is removed from the full
-    # payload; the digest is additive.
-    ranked = sorted(
-        ((k, v) for k, v in timings.items() if v is not None),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    # fallback (unreachable at current sizes — the n_show=0 candidate
-    # is ~200 bytes — but keep it structurally complete per ADVICE r13:
-    # unit/sf/failure count must survive even a degenerate shrink)
+    # The driver parses its bench record from a bounded ~2000-char
+    # stdout TAIL, and the full line above cannot fit (the 186 query
+    # names alone are >3K chars). So the final stdout line is a DIGEST
+    # that covers every query deterministically: the same
+    # metric/value/unit/sf, the query count, a per-family rollup
+    # (family = name prefix before the first "_") of [queries, failed,
+    # seconds], and the sha256 of the sorted per-query lines
+    # "name<TAB>seconds" of the full record (bench_out.json, seconds
+    # as recorded there, None for a failure). A partial per-query map
+    # made every query that fell off it read as dropped; the rollup
+    # tells "fast now" from "gone", and the hash ties the digest to
+    # the full record.
+    families: dict[str, list] = {}
+    for name, v in timings.items():
+        fam = families.setdefault(name.split("_", 1)[0], [0, 0, 0.0])
+        fam[0] += 1
+        if v is None:
+            fam[1] += 1
+        else:
+            fam[2] += v
+    lines = "\n".join(sorted(f"{k}\t{v}" for k, v in timings.items()))
     digest = json.dumps(
         {
             "metric": "total_query_wall_clock",
@@ -290,28 +294,16 @@ def main() -> None:
             "unit": "sec",
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             "digest": True,
+            "queries_timed": len(timings),
             "failed_queries": failures,
+            "families": {
+                k: [n, bad, round(sec, 2)] for k, (n, bad, sec) in sorted(families.items())
+            },
+            "queries_sha256": hashlib.sha256(lines.encode()).hexdigest(),
+            "full_record": "bench_out.json",
         },
         separators=(",", ":"),
     )
-    for n_show in range(len(ranked), -1, -1):
-        candidate = json.dumps(
-            {
-                "metric": "total_query_wall_clock",
-                "value": round(total, 4),
-                "unit": "sec",
-                "queries": {k: round(v, 2) for k, v in ranked[:n_show]},
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "digest": True,
-                "queries_timed": len(timings),
-                "failed_queries": failures,
-                "full_record": "bench_out.json",
-            },
-            separators=(",", ":"),
-        )
-        if len(candidate) <= 1800:
-            digest = candidate
-            break
     print(digest)
     spark.stop()
 

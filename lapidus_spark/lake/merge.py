@@ -864,7 +864,7 @@ def _validate_extra_cols(extra_cols: tuple) -> None:
     built (a colliding name would otherwise surface as an ambiguous-
     field AnalysisException deep inside the snapshot struct; a
     non-identifier name would break the dotted struct-field access in
-    ``snapshot_stream`` or the DDL string ``_snapshot_schema``
+    ``snapshot_stream`` or the DDL string ``lake_batch._epoch_ddl``
     interpolates)."""
     import re
 

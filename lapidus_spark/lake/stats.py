@@ -712,24 +712,36 @@ def read_lake_snapshot(
     return df.filter(F.col("last_type") != "delete")
 
 
-#: canonical snapshot-row schema (what _read_live returns)
-_SNAPSHOT_SCHEMA = (
-    "entity_id string, last_seq bigint, last_ts timestamp_ntz, "
-    "last_type string, item string, bucket int"
-)
+def _planned_scan(
+    spark, lake_dir: str, manifest: dict, ranges: dict, value_sets: dict
+) -> DataFrame:
+    """The physical read of a ``_plan_files`` plan, one of two:
 
+    - **Local lookup** (``_local_lookup``): a read that carries an
+      ``entity_id`` key set — the set ``_plan_files`` routes buckets
+      with: a point read, or a skip read with an ``entity_id``
+      equality or IN — whose planned files total at most
+      ``spark.sql.autoBroadcastJoinThreshold`` bytes on disk (Spark's
+      own bound for "small enough to hold on the driver"; ``-1`` turns
+      it off), with no deletion-vector entries and no legacy root
+      ``bucket=`` dir among its planned buckets, under an epoch whose
+      types all map to Arrow. It is read EAGERLY on the driver and
+      returned as a local relation: no Spark job.
+    - **Scan**, otherwise: whole buckets and kept files go through one
+      ``log._read_live`` (one file scan, one epoch alignment, one
+      deletion-vector mask).
 
-def _snapshot_schema(extras: list[dict]) -> str:
-    """The core snapshot schema extended with a manifest's accreted
-    columns — for building empty frames under the right epoch."""
-    return _SNAPSHOT_SCHEMA + "".join(f", {c['name']} {c['type']}" for c in extras)
-
-
-def _planned_scan(spark, lake_dir: str, manifest: dict, plan: dict) -> DataFrame:
-    """ONE scan of a ``_plan_files`` plan: whole buckets and kept files
-    go through one ``log._read_live`` (one file scan, one epoch
-    alignment, one deletion-vector mask); an empty plan is the empty
-    frame under the manifest's epoch."""
+    Both consume the same plan, so they open the same files. An empty
+    scan plan is the empty frame under the manifest's epoch."""
+    plan = _plan_files(lake_dir, manifest, ranges, value_sets)
+    keys = value_sets.get("entity_id")
+    lo, hi = ranges.get("entity_id", (None, None))
+    if keys is None and lo is not None and lo == hi:
+        keys = [lo]
+    if keys is not None:
+        local = _local_lookup(spark, lake_dir, manifest, plan, keys)
+        if local is not None:
+            return local
     df = log._read_live(
         spark,
         lake_dir,
@@ -738,8 +750,69 @@ def _planned_scan(spark, lake_dir: str, manifest: dict, plan: dict) -> DataFrame
         [f for files in plan.values() if files for f in files],
     )
     if df is None:
-        return spark.createDataFrame([], _snapshot_schema(_manifest_columns(manifest)))
+        from lapidus_spark.sources.lake_batch import _epoch_ddl
+
+        return spark.createDataFrame([], _epoch_ddl(lake_dir, manifest)[0])
     return df
+
+
+def _local_lookup(spark, lake_dir: str, manifest: dict, plan: dict, keys) -> DataFrame | None:
+    """A keyed plan read on the driver: each planned file through
+    ``lake_batch._aligned_file_table`` at the epoch's types
+    (``_epoch_ddl`` — extras, rename aliases, widening and ``bucket``
+    as ``format("lake")`` reads them), rows kept to ``keys``, returned
+    as ``spark.createDataFrame(table, schema)``: a ``LocalRelation``,
+    so the caller's row filter and collect launch no Spark job.
+
+    ``None`` (take the scan) when the planned files total more than
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes on disk or it is
+    ``-1``; when a planned bucket carries deletion-vector entries (the
+    Arrow DV rule matches the UTC wall clock while
+    ``log._apply_dv_mask`` matches the session's, so a lookup could
+    disagree with ``read_lake_snapshot`` in the same session); when a
+    planned bucket is a legacy root ``bucket=`` dir; or when the epoch
+    has a type the Arrow alignment does not map.
+
+    The read is eager: the files are read NOW, against the manifest the
+    caller already resolved, so the rows are the same as a scan run
+    later would return, and a GC landing before the caller collects
+    cannot fail it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from lapidus_spark.sources.lake_batch import (
+        _aligned_file_table,
+        _epoch_ddl,
+        _snapshot_arrow_schema,
+    )
+
+    dvs = manifest.get("deletion_vectors", {})
+    files: list[str] = []
+    for b, kept in sorted(plan.items()):
+        rel = manifest["buckets"][b]
+        if dvs.get(b) or rel.startswith("bucket="):
+            return None
+        if kept is None:
+            d = os.path.join(lake_dir, rel)
+            kept = sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+        files += kept
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0 or sum(os.path.getsize(f) for f in files) > limit:
+        return None
+    _, extras, ts_ddl, item_ddl = _epoch_ddl(lake_dir, manifest)
+    try:
+        schema = _snapshot_arrow_schema(extras, ts_ddl, item_ddl)
+    except (KeyError, ValueError):
+        return None
+    tables = [_aligned_file_table(f, extras, ts_ddl, item_ddl, ()) for f in files]
+    table = pa.concat_tables(tables) if tables else schema.empty_table()
+    wanted = pc.is_in(table.column("entity_id"), value_set=pa.array(keys, pa.string()))
+    # the Spark schema mapped in Python (a zone-less Arrow timestamp is
+    # timestamp_ntz): parsing the DDL would cost JVM round trips
+    return spark.createDataFrame(
+        table.filter(wanted), from_arrow_schema(schema, prefer_timestamp_ntz=True)
+    )
 
 
 def lake_point_read(
@@ -766,14 +839,23 @@ def lake_point_read(
     key touches ≤1 file of its bucket no matter how many the valve
     split it into. Buckets without stats (fresh merges) read whole,
     conservative. Both steps are ``_plan_files``, the rule every pruned
-    read shares."""
+    read shares.
+
+    Which physical read runs (``_planned_scan``): when the planned files
+    total at most ``spark.sql.autoBroadcastJoinThreshold`` bytes on
+    disk and no planned bucket carries deletion-vector entries or is a
+    legacy root ``bucket=`` dir, the files are read EAGERLY on the
+    driver with pyarrow and returned as a local relation — the lookup
+    and its collect launch no Spark job, and a GC landing after this
+    call cannot fail it. Otherwise (bigger plans, DV or legacy buckets,
+    or the threshold set to ``-1``) it is a lazy Spark file scan. Both
+    read the same files of the same manifest, so the rows are the
+    same."""
     manifest = _manifest_at(lake_dir, version)
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest for point reads")
     key_strs = [str(k) for k in keys]
-    df = _planned_scan(
-        spark, lake_dir, manifest, _plan_files(lake_dir, manifest, {}, {"entity_id": key_strs})
-    )
+    df = _planned_scan(spark, lake_dir, manifest, {}, {"entity_id": key_strs})
     return df.filter(
         (F.col("last_type") != "delete") & F.col("entity_id").isin(key_strs)
     )
@@ -820,7 +902,15 @@ def lake_skip_read(
     unsatisfiable. NULL-safe for the same reason equality is: IN
     never matches NULL. File pruning is ``_plan_files``' rule, shared
     with the point, time-window and ``format("lake")`` reads; an
-    ``entity_id`` equality or IN routes to its keys' buckets."""
+    ``entity_id`` equality or IN routes to its keys' buckets.
+
+    A read with an ``entity_id`` equality or IN is a keyed read and
+    picks its physical read as ``lake_point_read`` does: under
+    ``spark.sql.autoBroadcastJoinThreshold`` planned bytes, with no
+    deletion-vector or legacy bucket planned, it is read eagerly on the
+    driver into a local relation (no Spark job, immune to a later GC);
+    otherwise, and for every read without an ``entity_id`` set, it is
+    a lazy Spark file scan."""
     if not isinstance(ranges, dict) or (not ranges and not in_values):
         raise ValueError(
             "lake_skip_read: ranges must be a dict {column: (lo, hi)} "
@@ -937,7 +1027,7 @@ def lake_skip_read(
         except TypeError:
             pass  # mixed/incomparable values: no envelope
 
-    df = _planned_scan(spark, lake_dir, manifest, _plan_files(lake_dir, manifest, norm, in_norm))
+    df = _planned_scan(spark, lake_dir, manifest, norm, in_norm)
 
     def _num_lit(v):
         # a Python int outside int64 cannot become a JVM long literal;
@@ -997,9 +1087,7 @@ def lake_time_read(
         raise ValueError(f"lake at {lake_dir} has no manifest for time reads")
     # the planner's bounds are inclusive: a file starting exactly at
     # the exclusive ts_to is kept, and the row filter drops its rows
-    df = _planned_scan(
-        spark, lake_dir, manifest, _plan_files(lake_dir, manifest, {"last_ts": (lo, hi)}, {})
-    )
+    df = _planned_scan(spark, lake_dir, manifest, {"last_ts": (lo, hi)}, {})
     # compare in NTZ: the lake's last_ts may be LTZ or NTZ depending
     # on the producing envelope; the session TZ is pinned UTC so the
     # cast is value-preserving either way, and mixed NTZ/LTZ

@@ -142,7 +142,6 @@ from lapidus_spark.lake.stats import (  # noqa: F401
     _cdf_frames,
     _commit_file_stats,
     _resolve_change_bounds,
-    _snapshot_schema,
     _ts_iso,
     describe_detail,
     describe_history,

@@ -2176,7 +2176,10 @@ def lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dirs are opened (path pruning survives the layout change), and "
     "the result must equal the full-corpus LWW snapshot restricted "
     "to those keys — wrong layout adoption would lose the fourth "
-    "batch's updates, wrong pruning would miss moved rows.",
+    "batch's updates, wrong pruning would miss moved rows. At sf0.1 "
+    "the opened dirs fit under autoBroadcastJoinThreshold, so they "
+    "are read on the driver into a local relation (no Spark job); "
+    "pytest checks the scan plan with the threshold at -1.",
 )
 def lake_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lapidus_spark.streaming.materialize import lake_point_read
@@ -2627,9 +2630,12 @@ def build_clustered_lake(spark: SparkSession, sf_dir: str) -> str:
     "lake_point_read then opens only the files whose range overlaps "
     "a requested key — at sf0.1 each bucket holds ~15 range-disjoint "
     "files and a key touches exactly one, so the 8-key read opens "
-    "<=8 files instead of 8 whole bucket dirs (pytest pins the "
-    "inputFiles count; at 100 TB this is the difference between a "
-    "key lookup reading table/B bytes and reading one file). Stats "
+    "<=8 files instead of 8 whole bucket dirs (at 100 TB this is "
+    "the difference between a key lookup reading table/B bytes and "
+    "reading one file). Those <=8 files fit under "
+    "autoBroadcastJoinThreshold, so they are read on the driver into "
+    "a local relation with no Spark job; pytest pins that, and the "
+    "scan plan with the threshold at -1. Stats "
     "are dropped for any bucket whose pointer later moves (merge, "
     "rebucket) — conservative fallback to the full dir, so pruning "
     "is never wrong. The result must equal the full-corpus LWW "

@@ -66,3 +66,18 @@ def spark():
     s = get_spark("lapidus_spark_tests", cpus=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def scan_path(spark):
+    """Keyed lake reads (``lake_point_read``, ``lake_skip_read`` on
+    ``entity_id``) on the Spark scan path: small ones otherwise become
+    a driver-side local relation (``stats._local_lookup``), which has
+    no ``inputFiles()`` or ``FileScan`` to assert file pruning on.
+    ``autoBroadcastJoinThreshold=-1`` turns that branch off; the
+    previous value is restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, prev)

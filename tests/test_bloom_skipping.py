@@ -127,6 +127,7 @@ def test_filters_recorded_with_no_false_negatives(spark, tmp_path):
     assert checked == 400
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_equality_probe_prunes_files_ranges_cannot(spark, tmp_path):
     lake = str(tmp_path / "lake")
     m = _build(spark, lake)
@@ -259,6 +260,7 @@ def test_describe_detail_surfaces_bloom_declaration(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_in_probe_prunes_when_envelope_cannot(spark, tmp_path):
     """VERDICT r12 #4: an ``IN (v1..vk)`` over scattered md5 values
     collapses to a [min, max] envelope spanning ~the whole hex space

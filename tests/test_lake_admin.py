@@ -354,6 +354,7 @@ def _zlake(spark, tmp_path, cluster_by, n=256, valve=16):
     return lake
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_zorder_prunes_both_axes(spark, tmp_path):
     """On a corpus whose key and time axes are INDEPENDENT, the
     single-dimension sort prunes only its own axis (a time window

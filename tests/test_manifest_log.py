@@ -285,7 +285,7 @@ def test_stale_pointer_resolution_retries_against_fresh_pointer(spark, tmp_path)
 def test_extra_cols_must_be_plain_identifiers(spark, tmp_path):
     """Dotted / spaced / empty extra-column names are rejected up
     front — downstream they would break the struct-field access in
-    snapshot_stream or the DDL string _snapshot_schema builds."""
+    snapshot_stream or the DDL string lake_batch._epoch_ddl builds."""
     env = _env(spark)
     lake = str(tmp_path / "lake")
     for bad in ("shard.id", "a b", "", "x`y"):

@@ -19,12 +19,39 @@ from tests.conftest import SF_DIR
 
 REG = load_all()
 
+#: point reads small enough for the driver-side local lookup
+#: (``stats._local_lookup``) at the default conf; their scan contract
+#: is checked on the scan path
+LOCAL_LOOKUPS = ("lake_rebucket", "lake_zonemap_read")
+
 
 @pytest.mark.parametrize("name", sorted(EXPECTATIONS))
-def test_plan_contract(spark, name):
+def test_plan_contract(spark, request, name):
+    if name in LOCAL_LOOKUPS:
+        request.getfixturevalue("scan_path")
     facts = plan_facts(REG[name].fn(spark, SF_DIR))
     errors = check(name, facts, EXPECTATIONS[name])
     assert not errors, f"{name}: {errors}"
+
+
+@pytest.mark.parametrize("name", LOCAL_LOOKUPS)
+def test_local_lookup_contract(spark, name):
+    """At the default conf the same queries are local relations:
+    building and collecting one launches no Spark job, and its plan
+    has no file scan."""
+    REG[name].fn(spark, SF_DIR)  # builds and caches the query's lake
+    sc = spark.sparkContext
+    group = f"local_lookup_{name}"
+    sc.setJobGroup(group, "a local lookup must launch no job")
+    try:
+        df = REG[name].fn(spark, SF_DIR)
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in executed and "FileScan" not in executed
 
 
 @pytest.mark.parametrize("name", sorted(STREAM_EXPECTATIONS))

@@ -30,6 +30,9 @@ from lapidus_spark.sources.lake_batch import (
     register_lake_batch,
 )
 
+#: every read here asserts its planned files, so keyed reads take the scan
+pytestmark = pytest.mark.usefixtures("scan_path")
+
 COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "tag", "band"]
 N_BUCKETS = 4
 T0 = datetime(2023, 11, 14, 22, 13, 20)  # epoch second 1_700_000_000

@@ -11,26 +11,37 @@ Spark's schema key, and key-less Arrow files (older lakes) fall back
 to inference;
 a vanished footer file stays a missing-file error; the read builders
 stay lazy; and point reads equal the filtered snapshot on a
-non-power-of-two layout."""
+non-power-of-two layout.
+
+Keyed reads small enough for the driver (``stats._local_lookup``)
+come back as a local relation: the parity suite pins that they equal
+the scan path and the filtered snapshot in rows, schema and ``last_ts``
+values across lake shapes, key sets and session zones, launch no Spark
+job, open the files the scan would, and fall back to the scan on a
+deletion vector, a legacy root layout, or a plan over the threshold."""
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
 import lapidus_spark.streaming.materialize as M
 from lapidus_spark.lake import log
-from lapidus_spark.sources.lake_batch import register_lake_batch
+from lapidus_spark.lake.stats import _plan_files
+from lapidus_spark.sources import lake_batch
+from lapidus_spark.sources.lake_batch import _bucket_of, register_lake_batch
 
 COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "bucket"]
 
 
-def _env(spark, n=120, seq0=0, ntz=True, amount=None):
+def _env(spark, n=120, seq0=0, ntz=True, amount=None, keys=50):
     ts = F.timestamp_seconds(F.col("id") * 60 + 1_700_000_000 + seq0)
     cols = [
-        F.format_string("k%03d", F.col("id") % 50).alias("pk"),
+        F.format_string("k%03d", F.col("id") % keys).alias("pk"),
         (F.col("id") + seq0).alias("event_seq"),
         (ts.cast("timestamp_ntz") if ntz else ts).alias("ts"),
         F.when(F.col("id") % 13 == 0, "delete").otherwise("update").alias("type"),
@@ -241,3 +252,205 @@ def test_point_read_equals_filtered_snapshot_on_seven_buckets(
     )
     assert _rows(got, COLS) == _rows(exp, COLS)
     assert {r[0] for r in _rows(got, COLS)} == set(key_strs) - {"absent"}
+
+
+# ---------------------------------------------------------------------------
+# Local lookups: small keyed reads served from the driver
+# ---------------------------------------------------------------------------
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _is_local(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "FileScan" not in plan
+
+
+def _view(df):
+    """Schema plus rows, with ``last_ts`` also rendered in the session
+    zone (a shifted instant would change the string)."""
+    rows = df.select(*df.columns, F.col("last_ts").cast("string").alias("ts_text"))
+    return df.schema, _rows(rows)
+
+
+def _audited_local(spark, build):
+    """``build()``'s frame, asserted to be a local relation that
+    launches no Spark job from build through collect."""
+    sc = spark.sparkContext
+    group = f"local_lookup_{id(build)}"
+    sc.setJobGroup(group, "a local lookup must launch no job")
+    try:
+        df = build()
+        view = _view(df)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _is_local(df)
+    return view
+
+
+@pytest.fixture(scope="module")
+def lookup_lakes(spark, tmp_path_factory, seven_bucket_lake):
+    """An INT96 ``timestamp`` lake and a ``timestamp_ntz`` lake; a lake
+    whose extra column was accreted by a later merge (older files lack
+    it), widened int→bigint and renamed; and the rebucketed (7),
+    clustered-compacted lake with zone maps. The first three hold 12
+    keys over 16 buckets, so some buckets were never written."""
+    root = tmp_path_factory.mktemp("local_lookup")
+    lakes = {"rebucketed_clustered": seven_bucket_lake}
+    for name, ntz in (("int96_ltz", False), ("ntz", True)):
+        lakes[name] = str(root / name)
+        M.merge_batch_into_lake(_env(spark, ntz=ntz, keys=12), lakes[name], n_buckets=16)
+    lake = lakes["extras"] = str(root / "extras")
+    kw = dict(retain_versions=6)
+    M.merge_batch_into_lake(_env(spark, keys=12), lake, n_buckets=16, **kw)
+    evolve = dict(n_buckets=None, extra_cols=("amount",), **kw)
+    M.merge_batch_into_lake(_env(spark, 4, seq0=500, amount="int", keys=12), lake, **evolve)
+    M.merge_batch_into_lake(_env(spark, 1, seq0=900, amount="bigint", keys=12), lake, **evolve)
+    M.rename_lake_column(lake, "amount", "qty", retain_versions=6)
+    assert M._read_manifest(lake)["columns"][0]["type"] == "bigint"
+    widths = {
+        s["amount"].dataType.simpleString() if "amount" in s.names else None
+        for s in map(log._footer_schema, _data_files(lake))
+    }
+    assert widths == {None, "int", "bigint"}  # predating, narrow and wide files
+    return lakes
+
+
+def _key_sets(lake) -> dict:
+    m = M._read_manifest(lake)
+    n = m["n_buckets"]
+    unwritten = [
+        k for k in (f"nw{i}" for i in range(400)) if str(_bucket_of(k, n)) not in m["buckets"]
+    ][:3]
+    mixed = [*ODD_KEYS, "k001", "k001", "k007", "k011", 5, 17, "absent", *unwritten[:1]]
+    sets = {"empty": [], "mixed": mixed}
+    if unwritten:
+        sets["unwritten"] = unwritten
+    return sets
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Tokyo"])
+@pytest.mark.parametrize("name", ["int96_ltz", "ntz", "extras", "rebucketed_clustered"])
+def test_local_lookup_equals_scan_and_snapshot(spark, lookup_lakes, name, tz):
+    lake = lookup_lakes[name]
+    key_sets = _key_sets(lake)
+    assert ("unwritten" in key_sets) == (name != "rebucketed_clustered")
+    with _conf(spark, "spark.sql.session.timeZone", tz):
+        for keys in key_sets.values():
+            key_strs = [str(k) for k in keys]
+            snap = _view(M.read_lake_snapshot(spark, lake).filter(F.col("entity_id").isin(key_strs)))
+            reads = [lambda: M.lake_point_read(spark, lake, keys)]
+            if keys:
+                reads.append(
+                    lambda: M.lake_skip_read(spark, lake, {}, in_values={"entity_id": key_strs})
+                )
+                reads.append(
+                    lambda: M.lake_skip_read(spark, lake, {"entity_id": (key_strs[0],) * 2})
+                )
+            for i, build in enumerate(reads):
+                local = _audited_local(spark, build)
+                with _conf(spark, THRESHOLD, "-1"):
+                    df = build()
+                    assert not _is_local(df) or not keys
+                    scan = _view(df)
+                assert local == scan, (name, tz, keys, i)
+                if i < 2:
+                    assert local == snap, (name, tz, keys, i)
+
+
+def test_local_lookup_opens_the_scan_files(spark, seven_bucket_lake, monkeypatch):
+    """The local lookup reads exactly the files the scan path lists in
+    ``inputFiles()`` for the same read — zone-map-pruned buckets and
+    the whole plain bucket alike."""
+    opened = []
+    read = lake_batch._aligned_file_table
+
+    def spy(f, *args, **kwargs):
+        opened.append(f)
+        return read(f, *args, **kwargs)
+
+    monkeypatch.setattr(lake_batch, "_aligned_file_table", spy)
+    lake = seven_bucket_lake
+    keys = ["k000", "k001", "k042", "x" * 40, "5", "日本語テスト"]
+    m = M._read_manifest(lake)
+    plan = _plan_files(lake, m, {}, {"entity_id": keys})
+    assert None in plan.values() and any(plan.values())  # whole and pruned
+    assert _is_local(M.lake_point_read(spark, lake, keys))
+    with _conf(spark, THRESHOLD, "-1"):
+        scanned = M.lake_point_read(spark, lake, keys).inputFiles()
+    assert opened
+    assert sorted(opened) == sorted(os.path.normpath(urlparse(f).path) for f in scanned)
+
+
+def test_local_lookup_falls_back_to_the_scan(spark, tmp_path):
+    """A plan over the threshold, a bucket carrying deletion-vector
+    entries, a legacy root ``bucket=`` dir and an epoch column type the
+    Arrow alignment does not map each take the scan path, and every
+    read still equals the filtered snapshot. A local lookup is read
+    eagerly, so removing its files afterwards cannot fail it."""
+    lake = str(tmp_path / "lake")
+    M.merge_batch_into_lake(_env(spark, keys=12), lake, n_buckets=16, retain_versions=4)
+
+    def check(keys, local):
+        df = M.lake_point_read(spark, lake, keys)
+        assert _is_local(df) == local, keys
+        snap = M.read_lake_snapshot(spark, lake).filter(F.col("entity_id").isin(keys))
+        assert _view(df) == _view(snap)
+        return df
+
+    keys = ["k001", "k002", "k003"]
+    m = M._read_manifest(lake)
+    planned = [f for files in _plan_files(lake, m, {}, {"entity_id": keys}).values() for f in files or ()]
+    dirs = {os.path.join(lake, m["buckets"][str(_bucket_of(k, 16))]) for k in keys}
+    planned += [os.path.join(d, f) for d in dirs for f in os.listdir(d) if f.endswith(".parquet")]
+    size = sum(os.path.getsize(f) for f in planned)
+    with _conf(spark, THRESHOLD, str(size)):
+        check(keys, True)
+    with _conf(spark, THRESHOLD, str(size - 1)):
+        check(keys, False)
+
+    M.delete_from_lake(spark, lake, "entity_id = 'k003'", mode="dv", retain_versions=4)
+    dv_bucket = _bucket_of("k003", 16)
+    other = next(k for k in (f"k{i:03d}" for i in range(12)) if _bucket_of(k, 16) != dv_bucket)
+    check(["k003", other], False)
+    eager = check([other], True)
+    rows = _rows(eager)
+    for d in {os.path.join(lake, M._read_manifest(lake)["buckets"][str(_bucket_of(other, 16))])}:
+        for f in os.listdir(d):
+            os.remove(os.path.join(d, f))
+    assert _rows(eager) == rows and rows
+
+    legacy = str(tmp_path / "legacy")
+    (
+        M.snapshot_stream(_env(spark, keys=12))
+        .withColumn("bucket", F.pmod(F.xxhash64("entity_id"), F.lit(8)).cast("int"))
+        .write.partitionBy("bucket")
+        .parquet(legacy)
+    )
+    M.merge_batch_into_lake(_env(spark, 1, seq0=700, keys=12), legacy, n_buckets=8)
+    m = M._read_manifest(legacy)
+    roots = {int(b) for b, rel in m["buckets"].items() if rel.startswith("bucket=")}
+    plain = {int(b) for b in m["buckets"]} - roots
+    assert roots and plain
+    in_root = next(k for k in (f"k{i:03d}" for i in range(12)) if _bucket_of(k, 8) in roots)
+    in_plain = next(k for k in (f"k{i:03d}" for i in range(12)) if _bucket_of(k, 8) in plain)
+    lake = legacy
+    check([in_root, in_plain], False)
+    check([in_plain], True)
+
+    lake = str(tmp_path / "array_extra")
+    tagged = _env(spark, keys=12).withColumn("tags", F.array("item"))
+    M.merge_batch_into_lake(tagged, lake, n_buckets=16, extra_cols=("tags",))
+    assert M._read_manifest(lake)["columns"] == [{"name": "tags", "type": "array<string>"}]
+    check(["k001", "k002"], False)

@@ -2236,6 +2236,7 @@ def test_rebucket_lake_switches_layout_atomically(spark, tmp_path):
     assert rebucket_lake(spark, lake, 8) == {"version": v, "n_buckets": 8}
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_lake_point_read_opens_only_key_buckets(spark, tmp_path):
     """lake_point_read must return exactly the keys' live rows while
     opening NO file outside the keys' bucket directories (path-level

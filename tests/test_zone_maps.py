@@ -9,6 +9,7 @@ its stats — readers fall back to the full dir, conservative."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lapidus_spark.sources.cdc import normalize_events
@@ -83,6 +84,7 @@ def test_clustered_compaction_records_disjoint_zone_maps(spark, tmp_path):
         assert any(lo <= r["entity_id"] <= hi for lo, hi in rs)
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_point_read_opens_one_file_per_key(spark, tmp_path):
     """After OPTIMIZE, a point read's plan references exactly the
     overlapping files — ≤1 per requested key — and returns the same
@@ -199,6 +201,7 @@ def test_rebucket_resets_zone_maps(spark, tmp_path):
     assert M.lake_point_read(spark, lake, [key]).count() in (0, 1)
 
 
+@pytest.mark.usefixtures("scan_path")
 def test_time_read_prunes_files_after_clustered_optimize(spark, tmp_path):
     """Time-dimension zone maps (the r8 'what's missing' #5): after a
     clustered OPTIMIZE, a ts-range read opens only the files whose
