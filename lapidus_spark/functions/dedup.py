@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from lapidus_spark.functions.exprs import let_
 from lapidus_spark.plans.registry import query
+from lapidus_spark.session import broadcast_threshold
 from lapidus_spark.sources.tables import load_table
 
 N_MINHASH = 8
@@ -519,14 +520,16 @@ def _ngram_prefix_candidates(agg: DataFrame, threshold: float) -> DataFrame:
     FROM reach GROUP BY src
     """,
     operator="ext_dedup_near (duplicate-cluster connected components)",
-    doc="Near-dup pairs → duplicate CLUSTERS via distributed label "
-    "propagation (each vertex repeatedly adopts the min label among "
-    "itself and its neighbors, Pregel-style): the step a production "
-    "dedup pipeline runs after candidate generation to pick one "
-    "canonical doc per group. Converges in O(component diameter) "
-    "rounds — near-dup clusters are dense, so a handful of shuffles; "
-    "the oracle is the quadratic transitive closure (WITH RECURSIVE), "
-    "deliberately the formulation that does NOT scale.",
+    doc="Near-dup pairs → duplicate CLUSTERS (component = min doc id): "
+    "the step a production dedup pipeline runs after candidate "
+    "generation to pick one canonical doc per group. An edge set under "
+    "autoBroadcastJoinThreshold (16 bytes an edge) is collected and "
+    "solved by a union-find on the driver, returned as a local "
+    "relation; a bigger one runs distributed label propagation (each "
+    "vertex repeatedly adopts the min label among itself and its "
+    "neighbors, Pregel-style), O(component diameter) rounds of a few "
+    "shuffles each. The oracle is the quadratic transitive closure "
+    "(WITH RECURSIVE), deliberately the formulation that does NOT scale.",
 )
 def ext_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
@@ -537,11 +540,29 @@ def ext_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def min_label_propagation(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
-    """Distributed min-label propagation over an undirected edge set
-    given as directed (src, dst) pairs (symmetrized here): every
-    vertex repeatedly adopts the min label among itself and its
-    neighbors until fixpoint — (doc_id, component) with component =
-    the min vertex id of the connected component.
+    """Connected components of an undirected edge set given as
+    directed (src, dst) pairs: (doc_id, component) with component =
+    the min vertex id of the connected component. A NULL endpoint
+    joins nothing: it is one (NULL, NULL) row, and the other endpoint
+    keeps only its other edges.
+
+    Which path runs is chosen from the input's size. First at most
+    ``autoBroadcastJoinThreshold // 16 + 1`` edges are collected to
+    the driver as Arrow (an edge is two bigints, 16 bytes) — Spark's
+    own bound for "small enough to hold on the driver".
+
+    - **On the driver**, when they are all the edges: a union-find
+      whose root is each component's min vertex id, returned as
+      ``spark.createDataFrame(<pyarrow table>)`` — a local relation,
+      so its collect launches no Spark job. The collect of the edges
+      is the only work Spark does.
+    - **In rounds**, otherwise, or when the threshold is ``-1``:
+      distributed min-label propagation, where every vertex repeatedly
+      adopts the min label among itself and its neighbors until
+      fixpoint. This is the only path that serves a graph larger than
+      the driver can hold. It pays for the probe: one collect of at
+      most ``threshold`` bytes, and the edges' plan (the minhash pairs,
+      for ``ext_dedup_components``) computed once more.
 
     localCheckpoint (not persist) between rounds: it truncates the
     lineage, so iteration N's plan is one join deep instead of N joins
@@ -556,11 +577,17 @@ def min_label_propagation(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     sparkContext.setCheckpointDir at durable storage and use
     .checkpoint() instead.
 
-    Cost: the rounds are few — on a graph whose components are cliques
-    (perfbench's ``corpus_curate`` corpus) the fixpoint is reached in
-    round 2 — but each round is about nine Spark jobs, because AQE
-    runs every shuffle and broadcast stage as its own job.
+    Cost of the rounds: on a graph whose components are cliques the
+    fixpoint is reached in round 2, but each round is about nine Spark
+    jobs, because AQE runs every shuffle and broadcast stage as its
+    own job.
     """
+    spark = edges.sparkSession
+    cap = broadcast_threshold(spark) // 16  # -1 (off) stays negative
+    if cap >= 0:
+        probe = edges.limit(cap + 1).toArrow()
+        if probe.num_rows <= cap:
+            return spark.createDataFrame(_components_on_driver(probe))
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
@@ -594,6 +621,37 @@ def min_label_propagation(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
         if changed == 0:
             return labels
     raise RuntimeError(f"label propagation did not converge in {max_rounds} rounds")
+
+
+def _components_on_driver(edges):
+    """``min_label_propagation``'s rows for a pyarrow (src, dst) table:
+    union-find with the smaller root kept, so each root is its
+    component's min vertex id; NULL is a vertex of its own that no
+    edge reaches, as in the rounds' NULL-never-equal joins."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in zip(edges.column("src").to_pylist(), edges.column("dst").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = sorted(parent, key=lambda v: (v is not None, v))
+    vtype = edges.schema.field("src").type
+    return pa.table(
+        {
+            "doc_id": pa.array(ids, vtype),
+            "component": pa.array([find(v) for v in ids], vtype),
+        }
+    )
 
 
 # ---------------------------------------------------- incremental dedup

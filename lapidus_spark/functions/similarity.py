@@ -23,11 +23,14 @@ matches across engines.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lapidus_spark.plans.registry import query
-from lapidus_spark.sources.tables import load_table
+from lapidus_spark.sources.tables import load_table, parquet_schema
 
 DIM = 64
 TOP_K = 10
@@ -341,6 +344,15 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
+def _read_ivf_index(spark: SparkSession, path: str) -> DataFrame:
+    """The IVF index under a declared schema: one cell's footer
+    (``parquet_schema``) plus the ``cell`` partition column as the int
+    Spark infers from the ``cell=<k>`` dir names — so opening it
+    launches no schema-inference job."""
+    first = min(glob.glob(os.path.join(path, "cell=*")))
+    return spark.read.schema(parquet_schema(first).add("cell", "integer")).parquet(path)
+
+
 def _ivf_probe_cells(qe) -> list[int]:
     """The query's n_probe nearest IVF cells, computed driver-side
     with the SAME left-to-right IEEE-double fold the SQL quantizer
@@ -388,7 +400,7 @@ def ivf_candidates(
     # literal cell IN (...) on the partition column → static partition
     # pruning: the scan reads only the probed cells' files
     return (
-        spark.read.parquet(idx_path)
+        _read_ivf_index(spark, idx_path)
         .filter(F.col("cell").isin(cells))
         .filter(F.col("vec_id") != QUERY_VEC_ID)
         .withColumn("qe", qe)
@@ -895,7 +907,7 @@ def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same build-once-probe-many rule as ext_ann_ivf — SemDeDup's
     # cluster assignment IS the IVF coarse quantizer's) instead of
     # recomputing assignment on both sides of the self-join
-    idx = spark.read.parquet(build_ivf_index(spark, sf_dir))
+    idx = _read_ivf_index(spark, build_ivf_index(spark, sf_dir))
     s = idx.select(
         "vec_id",
         "embedding",
@@ -1557,7 +1569,6 @@ def build_pq_trained_index(spark: SparkSession, sf_dir: str) -> str:
     unchanged."""
     if sf_dir in _PQ_TRAINED_INDEX_DIRS:
         return _PQ_TRAINED_INDEX_DIRS[sf_dir]
-    import os
     import tempfile
 
     path = tempfile.mkdtemp(prefix="lapidus_ivfpq_trained_")
@@ -1617,7 +1628,6 @@ def pq_trained_candidates(spark: SparkSession, sf_dir: str, k: int) -> DataFrame
     — training belongs to the index build, the serving path reads
     it."""
     import math
-    import os
 
     idx = build_pq_trained_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings", parallel=True)

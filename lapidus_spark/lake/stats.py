@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lapidus_spark.session import broadcast_threshold
+
 from . import log
 from .log import (
     HISTORY_DIR,
@@ -797,7 +799,7 @@ def _local_lookup(spark, lake_dir: str, manifest: dict, plan: dict, keys) -> Dat
             d = os.path.join(lake_dir, rel)
             kept = sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
         files += kept
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    limit = broadcast_threshold(spark)
     if limit < 0 or sum(os.path.getsize(f) for f in files) > limit:
         return None
     _, extras, ts_ddl, item_ddl = _epoch_ddl(lake_dir, manifest)
@@ -856,8 +858,11 @@ def lake_point_read(
         raise ValueError(f"lake at {lake_dir} has no manifest for point reads")
     key_strs = [str(k) for k in keys]
     df = _planned_scan(spark, lake_dir, manifest, {}, {"entity_id": key_strs})
+    # one SQL-text condition, parsed once (a Column per key costs a JVM
+    # round trip each); hex literals need no escaping
+    wanted = ", ".join(f"CAST(X'{k.encode().hex()}' AS STRING)" for k in key_strs)
     return df.filter(
-        (F.col("last_type") != "delete") & F.col("entity_id").isin(key_strs)
+        F.expr(f"last_type != 'delete' AND entity_id IN ({wanted})" if wanted else "FALSE")
     )
 
 

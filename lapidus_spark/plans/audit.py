@@ -482,10 +482,12 @@ EXPECTATIONS: dict[str, dict] = {
     # ---- round-5 additions: the last uncontracted batch queries ----
     # per-type event counts: one partial-aggregated exchange
     "agg_type_counts": {"max_exchanges": 1, "no_single_partition": True},
-    # connected components: the per-round join/agg exchanges sit
-    # BEHIND the localCheckpoint pins (each round materializes), so
-    # the returned plan reads the final checkpoint — the contract is
-    # that convergence never funnels through one partition
+    # connected components, checked on the rounds path
+    # (autoBroadcastJoinThreshold=-1; a small edge set is otherwise a
+    # driver-side LocalTableScan, pinned by test_local_components_contract):
+    # the per-round join/agg exchanges sit BEHIND the localCheckpoint
+    # pins (each round materializes), so the returned plan reads the
+    # final checkpoint — convergence never funnels through one partition
     "ext_dedup_components": {"max_exchanges": 1, "no_single_partition": True},
     # multimodal codec paths: Arrow mapInPandas over the binary
     # column + one tiny result agg; never a per-row Python UDF and

@@ -43,3 +43,12 @@ def get_spark(app_name: str = "lapidus_spark", cpus: int | None = None) -> Spark
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as the
+    session's SQLConf parses it (``"10MB"`` → 10485760; ``-1`` when
+    broadcasting is off): Spark's own bound for "small enough to hold
+    on the driver", which the driver-side paths (a small keyed lake
+    lookup, a small edge set's components) use as theirs."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()

@@ -10,8 +10,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -29,10 +33,38 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def parquet_schema(path: str) -> StructType:
+    """The Spark schema of the parquet at ``path`` (a file, or a dir of
+    part files — then its first data file by name), read on the driver
+    from ONE footer: the schema a Spark writer stored there
+    (``log._footer_schema``), else ``pq.read_schema`` mapped as Spark
+    maps Arrow types (a zone-less timestamp is ``timestamp_ntz``), with
+    a nanosecond timestamp as the raw bigint the
+    ``spark.sql.legacy.parquet.nanosAsLong`` reader returns. For the
+    fixtures, Spark-written dirs, perfbench's corpus and the IVF index
+    this equals ``spark.read.parquet(path).schema``, which costs a
+    Spark job."""
+    from lapidus_spark.lake.log import _footer_schema  # lake imports this module
+
+    stored = _footer_schema(path)
+    if stored is not None:
+        return stored
+    if os.path.isdir(path):
+        path = os.path.join(path, min(n for n in os.listdir(path) if n.endswith(".parquet")))
+    fields = [
+        f.with_type(pa.int64()) if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+        for f in pq.read_schema(path)
+    ]
+    return from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
 ) -> DataFrame:
-    """Load a fixture table.
+    """Load a fixture table: a parquet scan under the schema of its
+    own footer (``parquet_schema``), so building the scan launches no
+    schema-inference job and has the schema
+    ``spark.read.parquet(path)`` would infer.
 
     ``parallel=True`` repartitions the scan to the session's default
     parallelism. Use it for CPU-heavy per-row work (hashing, shingling,
@@ -48,7 +80,8 @@ def load_table(
     # reader rejects; read nanos as long and truncate to micros (the
     # same conversion DuckDB applies implicitly on read).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if parallel:

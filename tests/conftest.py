@@ -69,13 +69,16 @@ def spark():
 
 
 @pytest.fixture
-def scan_path(spark):
-    """Keyed lake reads (``lake_point_read``, ``lake_skip_read`` on
-    ``entity_id``) on the Spark scan path: small ones otherwise become
-    a driver-side local relation (``stats._local_lookup``), which has
-    no ``inputFiles()`` or ``FileScan`` to assert file pruning on.
-    ``autoBroadcastJoinThreshold=-1`` turns that branch off; the
-    previous value is restored afterwards."""
+def distributed_path(spark):
+    """Run on the distributed path the library takes for inputs too big
+    for the driver. Small inputs otherwise take a driver-side branch
+    bounded by ``autoBroadcastJoinThreshold``: a keyed lake read
+    (``lake_point_read``, ``lake_skip_read`` on ``entity_id``) becomes
+    a local relation (``stats._local_lookup``) with no ``inputFiles()``
+    or ``FileScan`` to assert file pruning on, and
+    ``min_label_propagation`` solves a small edge set with a union-find
+    instead of rounds. ``-1`` turns both branches off; the previous
+    value is restored afterwards."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")

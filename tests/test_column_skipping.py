@@ -71,7 +71,7 @@ def test_declared_column_ranges_are_recorded_and_exact(spark, tmp_path):
         assert lo <= r["band"] <= hi
 
 
-@pytest.mark.usefixtures("scan_path")
+@pytest.mark.usefixtures("distributed_path")
 def test_skip_read_opens_fewer_files_and_matches_filter(spark, tmp_path):
     lake = str(tmp_path / "lake")
     m = _build(spark, lake)
@@ -95,7 +95,7 @@ def test_skip_read_opens_fewer_files_and_matches_filter(spark, tmp_path):
     assert len(expected) > 0
 
 
-@pytest.mark.usefixtures("scan_path")
+@pytest.mark.usefixtures("distributed_path")
 def test_conjunction_prunes_on_both_columns(spark, tmp_path):
     lake = str(tmp_path / "lake")
     m = _build(spark, lake)
@@ -156,7 +156,7 @@ def test_fallback_without_stats_is_exact(spark, tmp_path):
     assert sorted(map(tuple, df.select(*COLS).collect())) == expected
 
 
-@pytest.mark.usefixtures("scan_path")
+@pytest.mark.usefixtures("distributed_path")
 def test_undeclared_column_reads_whole_but_filters_exact(spark, tmp_path):
     """Stats declared for band only: an item predicate cannot prune
     (no recorded ranges) but the result is still exact."""
@@ -256,7 +256,7 @@ def test_cli_compact_with_stats_columns(spark, tmp_path, capsys):
     )
 
 
-@pytest.mark.usefixtures("scan_path")
+@pytest.mark.usefixtures("distributed_path")
 def test_time_axis_composes_into_the_conjunction(spark, tmp_path):
     """last_ts joins the conjunction: pruning uses the same per-file
     time maps lake_time_read does, and mixing a column range with a

@@ -8,10 +8,12 @@ against brute-force ground truth on seeded random inputs:
    EXACT SUPERSET of the qualifying pairs within its (lang,
    len_band) blocking — the round-4 claim that made the filters
    admissible without parity risk.
-2. Distributed min-label propagation (min_label_propagation) equals
-   union-find connected components on arbitrary graphs, including
-   shapes the minhash fixture never produces (paths near the round
-   bound, stars, isolated edges, multi-component forests).
+2. Connected components (min_label_propagation) equal union-find
+   components on arbitrary graphs, on both of its paths — the
+   driver-side union-find and the distributed min-label rounds —
+   including shapes the minhash fixture never produces (paths near
+   the round bound, stars, isolated edges, multi-component forests,
+   NULL endpoints).
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from lapidus_spark.functions.dedup import (
     _ngram_prefix_candidates,
     min_label_propagation,
 )
+from lapidus_spark.session import broadcast_threshold
 
 
 def _brute_force_pairs(docs: list[tuple[int, str, str]]) -> set[tuple[int, int]]:
@@ -219,6 +222,19 @@ def _union_find(n_edges: list[tuple[int, int]]) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
+#: min_label_propagation's two paths: the driver-side union-find the
+#: default conf takes for these small edge sets, and the distributed
+#: rounds (``autoBroadcastJoinThreshold=-1``)
+PATHS = ("driver", "rounds")
+
+
+def _components(spark, request, path: str, edges, ddl: str = "src LONG, dst LONG"):
+    if path == "rounds":
+        request.getfixturevalue("distributed_path")
+    return min_label_propagation(spark.createDataFrame(edges, ddl))
+
+
+@pytest.mark.parametrize("path", PATHS)
 @pytest.mark.parametrize(
     "name,edges",
     [
@@ -231,17 +247,17 @@ def _union_find(n_edges: list[tuple[int, int]]) -> dict[int, int]:
                   + [(10 + i, 10 + (i + 1) % 5) for i in range(5)]),
     ],
 )
-def test_min_label_propagation_matches_union_find(spark, name, edges):
-    sdf = spark.createDataFrame(edges, "src LONG, dst LONG")
+def test_min_label_propagation_matches_union_find(spark, request, name, edges, path):
     got = {
         r["doc_id"]: r["component"]
-        for r in min_label_propagation(sdf).collect()
+        for r in _components(spark, request, path, edges).collect()
     }
     assert got == _union_find(edges), name
 
 
+@pytest.mark.parametrize("path", PATHS)
 @pytest.mark.parametrize("seed", [3, 17])
-def test_min_label_propagation_random_graphs(spark, seed):
+def test_min_label_propagation_random_graphs(spark, request, seed, path):
     rng = random.Random(seed)
     nodes = list(range(25))
     edges = [
@@ -249,9 +265,73 @@ def test_min_label_propagation_random_graphs(spark, seed):
         for a, b in itertools.combinations(nodes, 2)
         if rng.random() < 0.08
     ] or [(0, 1)]
-    sdf = spark.createDataFrame(edges, "src LONG, dst LONG")
-    got = {r["doc_id"]: r["component"] for r in min_label_propagation(sdf).collect()}
+    got = {r["doc_id"]: r["component"] for r in _components(spark, request, path, edges).collect()}
     assert got == _union_find(edges)
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_min_label_propagation_null_endpoints(spark, request, path):
+    """A NULL endpoint joins nothing: the rounds' joins never match
+    NULL, so NULL is one (NULL, NULL) row and the other endpoint keeps
+    only its other edges. The driver path returns the same rows and
+    types."""
+    edges = [(1, None), (None, 2), (1, 3), (None, None), (5, None), (4, 5)]
+    df = _components(spark, request, path, edges, "src INT, dst INT")
+    assert df.dtypes == [("doc_id", "int"), ("component", "int")]
+    assert sorted(df.collect(), key=lambda r: (r[0] is not None, r[0])) == [
+        (None, None), (1, 1), (2, 2), (3, 1), (4, 4), (5, 4)
+    ]
+
+
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_min_label_propagation_path_boundary(spark):
+    """An edge is 16 bytes: ``threshold // 16`` edges are solved on the
+    driver (a LocalTableScan), one more edge goes to the rounds."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(16 * 8 + 15))
+    try:
+        edges = [(i, i + 1) for i in range(0, 16, 2)]
+        fits = min_label_propagation(spark.createDataFrame(edges, "src LONG, dst LONG"))
+        over = min_label_propagation(
+            spark.createDataFrame(edges + [(1, 2)], "src LONG, dst LONG")
+        )
+        assert "LocalTableScan" in _plan_of(fits)
+        assert "LocalTableScan" not in _plan_of(over)
+        assert {r[0]: r[1] for r in fits.collect()} == _union_find(edges)
+        assert {r[0]: r[1] for r in over.collect()} == _union_find(edges + [(1, 2)])
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_min_label_propagation_driver_path_jobs(spark):
+    """Job-group audit of the driver path: building the components
+    launches only the jobs of collecting the edges, and collecting the
+    returned frame launches none."""
+    sc = spark.sparkContext
+    edges = spark.range(40).select(
+        F.col("id").alias("src"), ((F.col("id") * 7) % 40).alias("dst")
+    )
+    cap = broadcast_threshold(spark) // 16
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, probe_jobs = jobs("mlp_probe", lambda: edges.limit(cap + 1).toArrow())
+    df, build_jobs = jobs("mlp_build", lambda: min_label_propagation(edges))
+    rows, collect_jobs = jobs("mlp_collect", df.collect)
+    assert probe_jobs and len(build_jobs) == len(probe_jobs)
+    assert collect_jobs == []
+    pairs = [(r, r * 7 % 40) for r in range(40)]
+    assert {r[0]: r[1] for r in rows} == _union_find(pairs)
 
 
 @pytest.mark.parametrize("seed", [11, 47, 313])

@@ -325,7 +325,7 @@ def test_changes_mode_matches_stream_and_batch_helper(spark, history_lake, tmp_p
     assert _rows(_changes(spark, history_lake, 0), FEED_COLS) == _rows(stream, FEED_COLS)
 
 
-@pytest.mark.usefixtures("scan_path")
+@pytest.mark.usefixtures("distributed_path")
 def test_point_probe_prunes_buckets_and_zone_maps_prune_files(spark, tmp_path):
     lake = str(tmp_path / "lake")
     _build(spark, lake)

@@ -32,7 +32,7 @@ ORDER_SENSITIVE = [
     "win_ema",  # per-entity sequential fold
     "win_cusum_drift",  # per-entity sequential fold
     "ext_pagerank",  # 3-iteration BIGINT fixed point: bit-identical claim
-    "ext_dedup_components",  # iterative label propagation
+    "ext_dedup_components",  # components (driver path; rounds below)
     "ext_kmeans_step",  # exact fixed-point means claim
     "ext_embed_centroid",  # two-level exact aggregation
 ]
@@ -54,6 +54,17 @@ def test_result_is_partitioning_invariant(spark, name):
     a = _rows(spark, name, 3)
     b = _rows(spark, name, 17)
     assert a == b, f"{name}: result depends on shuffle partition count"
+
+
+def test_dedup_components_rounds_are_partitioning_invariant(spark, request):
+    """ext_dedup_components on its distributed path: the iterative
+    label-propagation rounds (``autoBroadcastJoinThreshold=-1``) give
+    the same rows at 3 and 17 shuffle partitions, and the same rows as
+    the driver-side union-find the default conf takes."""
+    driver = _rows(spark, "ext_dedup_components", 3)
+    request.getfixturevalue("distributed_path")
+    assert _rows(spark, "ext_dedup_components", 3) == driver
+    assert _rows(spark, "ext_dedup_components", 17) == driver
 
 
 def test_quantizer_cell_is_scale_invariant(spark):

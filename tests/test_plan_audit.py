@@ -23,12 +23,16 @@ REG = load_all()
 #: (``stats._local_lookup``) at the default conf; their scan contract
 #: is checked on the scan path
 LOCAL_LOOKUPS = ("lake_rebucket", "lake_zonemap_read")
+#: queries whose plan contract is checked on the distributed path:
+#: the local lookups, and the components of an edge set small enough
+#: for ``min_label_propagation``'s driver-side union-find
+DRIVER_PATHS = LOCAL_LOOKUPS + ("ext_dedup_components",)
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTATIONS))
 def test_plan_contract(spark, request, name):
-    if name in LOCAL_LOOKUPS:
-        request.getfixturevalue("scan_path")
+    if name in DRIVER_PATHS:
+        request.getfixturevalue("distributed_path")
     facts = plan_facts(REG[name].fn(spark, SF_DIR))
     errors = check(name, facts, EXPECTATIONS[name])
     assert not errors, f"{name}: {errors}"
@@ -52,6 +56,25 @@ def test_local_lookup_contract(spark, name):
     assert rows
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in executed and "FileScan" not in executed
+
+
+def test_local_components_contract(spark):
+    """At the default conf ext_dedup_components' edge set fits under
+    the broadcast threshold, so its components are built on the
+    driver: the plan is a LocalTableScan, and collecting it launches
+    no Spark job (building it runs the edge collect)."""
+    df = REG["ext_dedup_components"].fn(spark, SF_DIR)
+    sc = spark.sparkContext
+    group = "local_components"
+    sc.setJobGroup(group, "collecting local components must launch no job")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in executed and "Exchange" not in executed
 
 
 @pytest.mark.parametrize("name", sorted(STREAM_EXPECTATIONS))

@@ -31,7 +31,7 @@ from lapidus_spark.sources.lake_batch import (
 )
 
 #: every read here asserts its planned files, so keyed reads take the scan
-pytestmark = pytest.mark.usefixtures("scan_path")
+pytestmark = pytest.mark.usefixtures("distributed_path")
 
 COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "tag", "band"]
 N_BUCKETS = 4
