@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -758,6 +759,56 @@ def _planned_scan(
     return df
 
 
+def _driver_files(
+    spark, lake_dir: str, sides, extras, ts_ddl: str, item_ddl: str
+) -> list[list[str]] | None:
+    """The admission rule of every driver-side lake read
+    (``_local_lookup``, ``_local_changes``). ``sides`` pairs each
+    version's manifest (``None``: nothing to read) with its plan,
+    ``{bucket id: kept files, or None for the whole bucket}``; a
+    bucket the manifest lacks reads nothing. Returns each side's files,
+    or ``None`` (take the Spark read) when:
+
+    - ``spark.sql.autoBroadcastJoinThreshold`` is ``-1``, or the files
+      of all sides total more bytes on disk than it (Spark's own bound
+      for "small enough to hold on the driver");
+    - a planned bucket carries deletion-vector entries (the Arrow DV
+      rule matches the UTC wall clock while ``log._apply_dv_mask``
+      matches the session's, so a driver read could disagree with
+      ``read_lake_snapshot`` in the same session);
+    - a planned bucket is a legacy root ``bucket=`` dir;
+    - an epoch type (``extras``, ``ts_ddl``, ``item_ddl``) has no
+      Arrow mapping."""
+    from lapidus_spark.sources.lake_batch import _snapshot_arrow_schema
+
+    limit = broadcast_threshold(spark)
+    if limit < 0:
+        return None
+    try:
+        _snapshot_arrow_schema(extras, ts_ddl, item_ddl)
+    except (KeyError, ValueError):
+        return None
+    out = []
+    for manifest, plan in sides:
+        buckets = (manifest or {}).get("buckets", {})
+        dvs = (manifest or {}).get("deletion_vectors", {})
+        files: list[str] = []
+        for b, kept in sorted(plan.items()):
+            rel = buckets.get(b)
+            if rel is None:
+                continue
+            if dvs.get(b) or rel.startswith("bucket="):
+                return None
+            if kept is None:
+                d = os.path.join(lake_dir, rel)
+                kept = sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+            files += kept
+        out.append(files)
+    if sum(os.path.getsize(f) for files in out for f in files) > limit:
+        return None
+    return out
+
+
 def _local_lookup(spark, lake_dir: str, manifest: dict, plan: dict, keys) -> DataFrame | None:
     """A keyed plan read on the driver: each planned file through
     ``lake_batch._aligned_file_table`` at the epoch's types
@@ -766,14 +817,7 @@ def _local_lookup(spark, lake_dir: str, manifest: dict, plan: dict, keys) -> Dat
     as ``spark.createDataFrame(table, schema)``: a ``LocalRelation``,
     so the caller's row filter and collect launch no Spark job.
 
-    ``None`` (take the scan) when the planned files total more than
-    ``spark.sql.autoBroadcastJoinThreshold`` bytes on disk or it is
-    ``-1``; when a planned bucket carries deletion-vector entries (the
-    Arrow DV rule matches the UTC wall clock while
-    ``log._apply_dv_mask`` matches the session's, so a lookup could
-    disagree with ``read_lake_snapshot`` in the same session); when a
-    planned bucket is a legacy root ``bucket=`` dir; or when the epoch
-    has a type the Arrow alignment does not map.
+    ``None`` (take the scan) when ``_driver_files`` refuses the plan.
 
     The read is eager: the files are read NOW, against the manifest the
     caller already resolved, so the rows are the same as a scan run
@@ -789,25 +833,12 @@ def _local_lookup(spark, lake_dir: str, manifest: dict, plan: dict, keys) -> Dat
         _snapshot_arrow_schema,
     )
 
-    dvs = manifest.get("deletion_vectors", {})
-    files: list[str] = []
-    for b, kept in sorted(plan.items()):
-        rel = manifest["buckets"][b]
-        if dvs.get(b) or rel.startswith("bucket="):
-            return None
-        if kept is None:
-            d = os.path.join(lake_dir, rel)
-            kept = sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
-        files += kept
-    limit = broadcast_threshold(spark)
-    if limit < 0 or sum(os.path.getsize(f) for f in files) > limit:
-        return None
     _, extras, ts_ddl, item_ddl = _epoch_ddl(lake_dir, manifest)
-    try:
-        schema = _snapshot_arrow_schema(extras, ts_ddl, item_ddl)
-    except (KeyError, ValueError):
+    files = _driver_files(spark, lake_dir, [(manifest, plan)], extras, ts_ddl, item_ddl)
+    if files is None:
         return None
-    tables = [_aligned_file_table(f, extras, ts_ddl, item_ddl, ()) for f in files]
+    schema = _snapshot_arrow_schema(extras, ts_ddl, item_ddl)
+    tables = [_aligned_file_table(f, extras, ts_ddl, item_ddl, ()) for f in files[0]]
     table = pa.concat_tables(tables) if tables else schema.empty_table()
     wanted = pc.is_in(table.column("entity_id"), value_set=pa.array(keys, pa.string()))
     # the Spark schema mapped in Python (a zone-less Arrow timestamp is
@@ -1093,15 +1124,17 @@ def lake_time_read(
     # the planner's bounds are inclusive: a file starting exactly at
     # the exclusive ts_to is kept, and the row filter drops its rows
     df = _planned_scan(spark, lake_dir, manifest, {"last_ts": (lo, hi)}, {})
-    # compare in NTZ: the lake's last_ts may be LTZ or NTZ depending
-    # on the producing envelope; the session TZ is pinned UTC so the
-    # cast is value-preserving either way, and mixed NTZ/LTZ
-    # comparisons are a type error in Spark 4
-    ts = F.col("last_ts").cast("timestamp_ntz")
+    # the bounds are UTC instants, compared with last_ts at its own
+    # type (LTZ or NTZ, by the producing envelope): an LTZ value is an
+    # instant, an NTZ value the UTC wall clock the zone maps record,
+    # so the rows do not depend on the session zone. One SQL-text
+    # condition is parsed once (Column operators cost a JVM round trip
+    # each).
+    ntz = df.schema["last_ts"].dataType.typeName() == "timestamp_ntz"
+    lit = "TIMESTAMP_NTZ'{}'" if ntz else "TIMESTAMP'{}+00:00'"
+    lo_lit, hi_lit = (lit.format(v.isoformat(" ")) for v in (lo, hi))
     return df.filter(
-        (F.col("last_type") != "delete")
-        & (ts >= F.lit(lo).cast("timestamp_ntz"))
-        & (ts < F.lit(hi).cast("timestamp_ntz"))
+        F.expr(f"last_type != 'delete' AND last_ts >= {lo_lit} AND last_ts < {hi_lit}")
     )
 
 
@@ -1219,21 +1252,37 @@ def describe_history(lake_dir: str, limit: int | None = None) -> list[dict]:
     return out[:limit] if limit is not None else out
 
 
-def _cdf_frames(
-    spark, lake_dir: str, from_version: int, to_version: int | None, caller: str
-):
-    """Shared preamble of both change feeds: resolve the two
-    manifests, compute the data-changed bucket set (pointer diff
+class _ChangePlan(NamedTuple):
+    """A change diff's plan (``_change_plan``): both versions'
+    manifests, the buckets to read from each, and the epoch types of
+    the feed's ``last_ts`` and ``item``."""
+
+    lake_dir: str
+    m_new: dict
+    m_old: dict | None
+    new_buckets: set
+    old_buckets: set
+    ts_ddl: str
+    item_ddl: str
+
+
+def _change_plan(
+    lake_dir: str, from_version: int, to_version: int | None, caller: str
+) -> _ChangePlan:
+    """The planning step both change feeds share: resolve the two
+    manifests and compute the data-changed bucket sets (pointer diff
     refined by the ``data_versions`` stamps — physical-only pointer
     moves are skipped; a rebucket degrades to a layout-independent
-    full diff, each side through its OWN manifest), and return
-    ``(new_df, old_df)`` pruned to those buckets — ``(None, None)``
-    when nothing data-changed. Ordinary commits never physically drop
-    rows (tombstones persist), so new ⊇ old keys — but a RESTORE
-    reverts the table to a version predating some keys' first
-    appearance, so the bucket walk takes the UNION of both manifests'
-    bucket sets and the feeds join FULL OUTER: vanished keys surface
-    as deletes instead of silently disappearing."""
+    full diff, each side through its OWN manifest). Ordinary commits
+    never physically drop rows (tombstones persist), so new ⊇ old
+    keys — but a RESTORE reverts the table to a version predating
+    some keys' first appearance, so the bucket walk takes the UNION of
+    both manifests' bucket sets and the diff is FULL OUTER: vanished
+    keys surface as deletes instead of silently disappearing. The
+    feed's types are the new version's epoch (``_epoch_ddl``), also
+    when nothing changed."""
+    from lapidus_spark.sources.lake_batch import _epoch_ddl
+
     m_new = _manifest_at(lake_dir, to_version)
     if m_new is None:
         raise ValueError(f"lake at {lake_dir} has no manifest")
@@ -1251,16 +1300,16 @@ def _cdf_frames(
         # a rebucket between the versions: bucket ids mean different
         # hash ranges, so pointer-diff pruning is meaningless — read
         # both sides fully (each through its OWN manifest, so old-
-        # layout-only buckets are not dropped). The entity-level join
-        # below is layout-independent; a rebucket is a rare full
-        # rewrite anyway, so the feed matching its cost is honest.
+        # layout-only buckets are not dropped). The entity-level diff
+        # is layout-independent; a rebucket is a rare full rewrite
+        # anyway, so the feed matching its cost is honest.
         changed_new = {int(b) for b in m_new["buckets"]}
         changed_old = {int(b) for b in m_old["buckets"]}
     else:
         # pointer diff refined by the per-bucket dataChange stamps:
         # a bucket whose pointer moved only through physical-only
         # commits (compaction) in (from, to] is provably identical
-        # and is neither read nor joined. The union of both bucket
+        # and is neither read nor diffed. The union of both bucket
         # sets matters only across a restore (a bucket first written
         # after the restored-to version exists in old but not new —
         # its keys vanished and must emit deletes).
@@ -1269,17 +1318,182 @@ def _cdf_frames(
             int(b) for b in all_b if _bucket_content_changed(m_old, m_new, b)
         }
         changed_old = changed_new
-    if not changed_new:
-        return None, None
-    new_df = log._read_live(spark, lake_dir, m_new, changed_new)
-    old_df = log._read_live(spark, lake_dir, m_old, changed_old) if m_old else None
+    _, _, ts_ddl, item_ddl = _epoch_ddl(lake_dir, m_new)
+    return _ChangePlan(
+        lake_dir, m_new, m_old, changed_new, changed_old if m_old else set(), ts_ddl, item_ddl
+    )
+
+
+def _change_columns(plan: _ChangePlan) -> list[tuple[str, str]]:
+    """``(name, Spark DDL type)`` of both change feeds under the plan's
+    epoch."""
+    return [
+        ("entity_id", "string"),
+        ("change_type", "string"),
+        ("last_seq", "bigint"),
+        ("last_ts", plan.ts_ddl),
+        ("last_type", "string"),
+        ("item", plan.item_ddl),
+    ]
+
+
+def _change_frame(spark, plan: _ChangePlan, row_changes: bool, batches=()) -> DataFrame:
+    """Change rows (Arrow record batches) as a local relation at the
+    feed's schema: the plan's epoch types, and — as the Spark join
+    types it — an entity-state ``change_type`` that is never null.
+    The Spark schema is mapped in Python (a zone-less Arrow timestamp
+    is ``timestamp_ntz``): parsing DDL would cost JVM round trips."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from lapidus_spark.sources.lake_batch import _arrow_type
+
+    fields = [pa.field(n, _arrow_type(t)) for n, t in _change_columns(plan)]
+    declared = pa.schema(
+        [f.with_nullable(row_changes or f.name != "change_type") for f in fields]
+    )
+    return spark.createDataFrame(
+        pa.Table.from_batches(list(batches), pa.schema(fields)),
+        from_arrow_schema(declared, prefer_timestamp_ntz=True),
+    )
+
+
+def _local_changes(spark, plan: _ChangePlan, row_changes: bool) -> DataFrame | None:
+    """A change plan diffed on the driver: both versions' changed
+    buckets as ONE ``LakeCDFPartition`` (entity→bucket is functional
+    under one layout, so the global diff equals the per-bucket one;
+    across a rebucket both sides are whole), diffed by
+    ``lake_source._change_batches`` at the epoch's types and returned
+    as a ``LocalRelation`` (``_change_frame``), so the caller's select
+    and collect launch no Spark job. ``None`` (take the join) when
+    ``_driver_files`` refuses the plan. The read is eager: the rows
+    come from the manifests resolved at call time, so a GC landing
+    before the caller collects cannot fail it."""
+    from lapidus_spark.streaming.lake_source import LakeCDFPartition, _change_batches
+
+    files = _driver_files(
+        spark,
+        plan.lake_dir,
+        [
+            (plan.m_new, dict.fromkeys(map(str, plan.new_buckets))),
+            (plan.m_old, dict.fromkeys(map(str, plan.old_buckets))),
+        ],
+        [],
+        plan.ts_ddl,
+        plan.item_ddl,
+    )
+    if files is None:
+        return None
+    part = LakeCDFPartition(None, None, *files)
+    batches = _change_batches(part, row_changes, plan.ts_ddl, plan.item_ddl)
+    return _change_frame(spark, plan, row_changes, batches)
+
+
+def _joined_changes(spark, plan: _ChangePlan, row_changes: bool) -> DataFrame:
+    """A change plan run by Spark: each version's changed buckets
+    through one ``log._read_live``, diffed by a full outer join on
+    ``entity_id`` (``_entity_changes`` or ``_row_changes``). An empty
+    plan is ``_change_frame``'s empty frame."""
+    lake_dir = plan.lake_dir
+    new_df = log._read_live(spark, lake_dir, plan.m_new, plan.new_buckets) if plan.new_buckets else None
+    old_df = log._read_live(spark, lake_dir, plan.m_old, plan.old_buckets) if plan.old_buckets else None
     if new_df is None and old_df is None:
-        return None, None
+        return _change_frame(spark, plan, row_changes)
     if new_df is None:
         new_df = spark.createDataFrame([], old_df.schema)
     if old_df is None:
         old_df = spark.createDataFrame([], new_df.schema)
-    return new_df, old_df
+    if row_changes:
+        return _row_changes(new_df, old_df, _change_columns(plan))
+    return _entity_changes(new_df, old_df)
+
+
+def _entity_changes(new_df: DataFrame, old_df: DataFrame) -> DataFrame:
+    """``lake_changes``' rule as a Spark join of the two versions."""
+    n, o = new_df.alias("n"), old_df.select("entity_id", "last_seq", "last_ts", "last_type").alias("o")
+    new_exists = F.col("n.last_seq").isNotNull()
+    old_exists = F.col("o.last_seq").isNotNull()
+    return (
+        n.join(o, "entity_id", "full_outer")
+        .filter(
+            ~old_exists
+            | (~new_exists & (F.col("o.last_type") != "delete"))
+            | (F.col("o.last_seq") != F.col("n.last_seq"))
+            | (F.col("o.last_ts") != F.col("n.last_ts"))
+            # a REDACTION (DELETE WHERE, rewrite or deletion-vector)
+            # flips last_type while keeping the LWW position — the
+            # (seq, ts) comparison alone is blind to it (a real gap
+            # until round 10: the entity-state feed silently skipped
+            # rewrite redactions; only lake_changes_rows caught them)
+            | (F.col("o.last_type") != F.col("n.last_type"))
+        )
+        .select(
+            "entity_id",
+            F.when(~new_exists | (F.col("n.last_type") == "delete"), F.lit("delete"))
+            .when(
+                ~old_exists | (F.col("o.last_type") == "delete"),
+                F.lit("insert"),
+            )
+            .otherwise(F.lit("update"))
+            .alias("change_type"),
+            F.col("n.last_seq").alias("last_seq"),
+            F.col("n.last_ts").alias("last_ts"),
+            F.col("n.last_type").alias("last_type"),
+            F.col("n.item").alias("item"),
+        )
+    )
+
+
+def _row_changes(new_df: DataFrame, old_df: DataFrame, columns) -> DataFrame:
+    """``lake_changes_rows``' rule as a Spark join of the two versions.
+    Emission is one pass: the joined row builds an array of candidate
+    change structs, filters nulls, explodes — no re-reading the join
+    output per change type."""
+    n = new_df.alias("n")
+    o = old_df.select("entity_id", "last_seq", "last_ts", "last_type", "item").alias("o")
+    # old-row existence via a never-null payload column: the USING
+    # join coalesces entity_id itself, so the o-side key is not
+    # addressable after the join
+    old_vis = F.col("o.last_seq").isNotNull() & (F.col("o.last_type") != "delete")
+    # null-guarded: across a RESTORE a key can be physically ABSENT
+    # on the new side (the table reverted to before its first
+    # appearance) — visible→absent is a delete like any other, and
+    # the old values are already in hand for the pre-image
+    new_vis = F.col("n.last_seq").isNotNull() & (F.col("n.last_type") != "delete")
+    updated = (
+        old_vis
+        & new_vis
+        & (
+            (F.col("o.last_seq") != F.col("n.last_seq"))
+            | (F.col("o.last_ts") != F.col("n.last_ts"))
+        )
+    )
+
+    def change(kind: str, side: str):
+        return F.struct(
+            F.lit(kind).alias("change_type"),
+            F.col(f"{side}.last_seq").alias("last_seq"),
+            F.col(f"{side}.last_ts").alias("last_ts"),
+            F.col(f"{side}.last_type").alias("last_type"),
+            F.col(f"{side}.item").alias("item"),
+        )
+
+    fields = ",".join(f"{c}:{t}" for c, t in columns[1:])
+    null_change = F.lit(None).cast(f"struct<{fields}>")
+    changes = F.array(
+        F.when(~old_vis & new_vis, change("insert", "n")).otherwise(null_change),
+        F.when(updated, change("update_preimage", "o")).otherwise(null_change),
+        F.when(updated, change("update_postimage", "n")).otherwise(null_change),
+        F.when(old_vis & ~new_vis, change("delete", "o")).otherwise(null_change),
+    )
+    return (
+        n.join(o, "entity_id", "full_outer")
+        .select(
+            "entity_id",
+            F.explode(F.filter(changes, lambda c: c.isNotNull())).alias("c"),
+        )
+        .select("entity_id", "c.*")
+    )
 
 
 def _resolve_change_bounds(
@@ -1315,6 +1529,26 @@ def _resolve_change_bounds(
     return from_version, to_version
 
 
+def _change_feed(
+    spark,
+    lake_dir: str,
+    from_version,
+    to_version,
+    from_timestamp,
+    to_timestamp,
+    caller: str,
+    row_changes: bool,
+) -> DataFrame:
+    """One plan, two physical reads: the driver-side diff when
+    ``_driver_files`` admits the plan, else the Spark join."""
+    from_version, to_version = _resolve_change_bounds(
+        lake_dir, from_version, to_version, from_timestamp, to_timestamp, caller
+    )
+    plan = _change_plan(lake_dir, from_version, to_version, caller)
+    local = _local_changes(spark, plan, row_changes)
+    return local if local is not None else _joined_changes(spark, plan, row_changes)
+
+
 def lake_changes(
     spark,
     lake_dir: str,
@@ -1332,58 +1566,34 @@ def lake_changes(
     is computed by reading ONLY the buckets whose manifest pointers
     differ between the two versions (path-level pruning — a merge
     that touched k of B buckets makes this a k·(table/B) read, never
-    a table scan), then an entity-level anti-equality join of old vs
+    a table scan), then an entity-level anti-equality diff of old vs
     new within those buckets. Ordinary commits never physically drop
     rows (tombstones persist), so new ⊇ old keys — except across a
     RESTORE, which reverts the table to a version predating some
-    keys' first appearance: the join is FULL OUTER, and a VANISHED
+    keys' first appearance: the diff is FULL OUTER, and a VANISHED
     key (present and visible in old, physically absent in new) emits
     ``change_type='delete'`` with NULL post-image columns (there is
     no post-image — consumers keyed on entity_id drop the key; a
     restore is the only producer of such rows). Bounds are versions
     or commit instants (``from_timestamp``/``to_timestamp`` —
-    TIMESTAMP AS OF each end)."""
-    from_version, to_version = _resolve_change_bounds(
-        lake_dir, from_version, to_version, from_timestamp, to_timestamp, "lake_changes"
-    )
-    new_df, old_df = _cdf_frames(spark, lake_dir, from_version, to_version, "lake_changes")
-    schema = (
-        "entity_id string, change_type string, last_seq bigint, "
-        "last_ts timestamp_ntz, last_type string, item string"
-    )
-    if new_df is None:
-        return spark.createDataFrame([], schema)
-    n, o = new_df.alias("n"), old_df.select("entity_id", "last_seq", "last_ts", "last_type").alias("o")
-    new_exists = F.col("n.last_seq").isNotNull()
-    old_exists = F.col("o.last_seq").isNotNull()
-    return (
-        n.join(o, "entity_id", "full_outer")
-        .filter(
-            ~old_exists
-            | (~new_exists & (F.col("o.last_type") != "delete"))
-            | (F.col("o.last_seq") != F.col("n.last_seq"))
-            | (F.col("o.last_ts") != F.col("n.last_ts"))
-            # a REDACTION (DELETE WHERE, rewrite or deletion-vector)
-            # flips last_type while keeping the LWW position — the
-            # (seq, ts) comparison alone is blind to it (a real gap
-            # until round 10: the entity-state feed silently skipped
-            # rewrite redactions; only lake_changes_rows caught them)
-            | (F.col("o.last_type") != F.col("n.last_type"))
-        )
-        .select(
-            "entity_id",
-            F.when(~new_exists | (F.col("n.last_type") == "delete"), F.lit("delete"))
-            .when(
-                ~old_exists | (F.col("o.last_type") == "delete"),
-                F.lit("insert"),
-            )
-            .otherwise(F.lit("update"))
-            .alias("change_type"),
-            F.col("n.last_seq").alias("last_seq"),
-            F.col("n.last_ts").alias("last_ts"),
-            F.col("n.last_type").alias("last_type"),
-            F.col("n.item").alias("item"),
-        )
+    TIMESTAMP AS OF each end).
+
+    Which physical read runs (``_change_feed``): when both versions'
+    changed files total at most ``spark.sql.autoBroadcastJoinThreshold``
+    bytes on disk and no changed bucket carries deletion-vector
+    entries or is a legacy root ``bucket=`` dir, the files are read
+    EAGERLY on the driver and diffed by ``lake_source._change_batches``
+    (the Arrow diff behind ``lake_cdf`` and ``format("lake")``
+    changes) into a local relation — the feed and its collect launch
+    no Spark job, and a GC landing after this call cannot fail it.
+    Otherwise (bigger diffs, DV or legacy buckets, or the threshold
+    set to ``-1``) it is a lazy Spark full-outer join. Both return the
+    same rows, with ``last_ts`` and ``item`` at the new version's
+    epoch types (``lake_batch._epoch_ddl``), also when nothing
+    changed."""
+    return _change_feed(
+        spark, lake_dir, from_version, to_version, from_timestamp, to_timestamp,
+        "lake_changes", row_changes=False,
     )
 
 
@@ -1417,70 +1627,14 @@ def lake_changes_rows(
     k·(table/B) reads). A tombstone refreshed by a newer tombstone is
     logically absent→absent and emits NOTHING here (the entity-state
     feed ``lake_changes`` reports it; this feed is the logical-row
-    view). Emission is one pass: the joined row builds an array of
-    candidate change structs, filters nulls, explodes — no
-    re-reading the join output per change type."""
-    from_version, to_version = _resolve_change_bounds(
-        lake_dir,
-        from_version,
-        to_version,
-        from_timestamp,
-        to_timestamp,
-        "lake_changes_rows",
-    )
-    new_df, old_df = _cdf_frames(
-        spark, lake_dir, from_version, to_version, "lake_changes_rows"
-    )
-    schema = (
-        "entity_id string, change_type string, last_seq bigint, "
-        "last_ts timestamp_ntz, last_type string, item string"
-    )
-    if new_df is None:
-        return spark.createDataFrame([], schema)
-    n = new_df.alias("n")
-    o = old_df.select("entity_id", "last_seq", "last_ts", "last_type", "item").alias("o")
-    # old-row existence via a never-null payload column: the USING
-    # join coalesces entity_id itself, so the o-side key is not
-    # addressable after the join
-    old_vis = F.col("o.last_seq").isNotNull() & (F.col("o.last_type") != "delete")
-    # null-guarded: across a RESTORE a key can be physically ABSENT
-    # on the new side (the table reverted to before its first
-    # appearance) — visible→absent is a delete like any other, and
-    # the old values are already in hand for the pre-image
-    new_vis = F.col("n.last_seq").isNotNull() & (F.col("n.last_type") != "delete")
-    updated = (
-        old_vis
-        & new_vis
-        & (
-            (F.col("o.last_seq") != F.col("n.last_seq"))
-            | (F.col("o.last_ts") != F.col("n.last_ts"))
-        )
-    )
+    view).
 
-    def change(kind: str, side: str):
-        return F.struct(
-            F.lit(kind).alias("change_type"),
-            F.col(f"{side}.last_seq").alias("last_seq"),
-            F.col(f"{side}.last_ts").alias("last_ts"),
-            F.col(f"{side}.last_type").alias("last_type"),
-            F.col(f"{side}.item").alias("item"),
-        )
-
-    null_change = F.lit(None).cast(
-        "struct<change_type:string,last_seq:bigint,last_ts:timestamp_ntz,"
-        "last_type:string,item:string>"
-    )
-    changes = F.array(
-        F.when(~old_vis & new_vis, change("insert", "n")).otherwise(null_change),
-        F.when(updated, change("update_preimage", "o")).otherwise(null_change),
-        F.when(updated, change("update_postimage", "n")).otherwise(null_change),
-        F.when(old_vis & ~new_vis, change("delete", "o")).otherwise(null_change),
-    )
-    return (
-        n.join(o, "entity_id", "full_outer")
-        .select(
-            "entity_id",
-            F.explode(F.filter(changes, lambda c: c.isNotNull())).alias("c"),
-        )
-        .select("entity_id", "c.*")
+    The physical read is ``lake_changes``': a diff small enough for
+    the driver is read EAGERLY there and returned as a local relation
+    (no Spark job; a GC landing after this call cannot fail it),
+    anything else is a lazy Spark full-outer join. Same rows and
+    types either way."""
+    return _change_feed(
+        spark, lake_dir, from_version, to_version, from_timestamp, to_timestamp,
+        "lake_changes_rows", row_changes=True,
     )

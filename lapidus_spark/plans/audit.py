@@ -517,7 +517,9 @@ EXPECTATIONS: dict[str, dict] = {
     "lake_time_travel": {"pushed": True, "max_exchanges": 0},
     # change feed: entity-level join of the two versions' CHANGED
     # buckets only; ≤2 exchanges (SMJ both sides) and AQE free to
-    # broadcast the small side at fixture scale
+    # broadcast the small side at fixture scale. Checked with the
+    # threshold at -1: a diff under it is a local relation
+    # (stats._local_changes, test_local_changes_contract)
     "lake_changes_feed": {"max_exchanges": 2, "no_single_partition": True},
     # compaction read-back: time travel to the compacted version is a
     # plain manifest-resolved scan + pushed tombstone filter — the
@@ -533,12 +535,15 @@ EXPECTATIONS: dict[str, dict] = {
     "lake_concurrent_merge": {"pushed": True, "max_exchanges": 0},
     # row-level pre/post-image feed: ONE pruned entity-level join
     # (array-of-changes explode adds no exchange); ≤2 = SMJ both
-    # sides, AQE free to broadcast the small side at fixture scale
+    # sides, AQE free to broadcast the small side at fixture scale.
+    # Checked at -1, like lake_changes_feed
     "lake_cdf_preimages": {"max_exchanges": 2, "no_single_partition": True},
     # incremental gold fold: three per-step pruned diffs unioned into
     # one grouped sum — exchanges = the step joins (AQE-broadcast at
     # fixture scale) + the final shard agg's partials; never a
-    # single-partition collapse and never a snapshot rescan
+    # single-partition collapse and never a snapshot rescan. Checked
+    # at -1; under the threshold the three diffs are local relations
+    # and only the grouped sum runs in Spark
     "lake_gold_incremental": {"max_exchanges": 7, "no_single_partition": True},
     # zone-map point read: manifest-stat file pruning below the
     # bucket pruning, pushed isin/tombstone filters, zero exchanges

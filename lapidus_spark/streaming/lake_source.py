@@ -23,7 +23,8 @@ Scale contract (the same one ``lake_changes`` documents):
   per-version stepping makes the emitted row set independent of how
   versions group into micro-batches (deterministic replay).
 - ``read`` runs on executors (``_change_batches``, the one change
-  step behind this source, ``catalog_cdf`` and both batch twins):
+  step behind this source, ``catalog_cdf``, both batch twins and the
+  driver-side diff of a small ``lake_changes``):
   each side of the bucket reads through ``lake_batch.
   _aligned_file_table`` with that side's deletion vector, tombstones
   kept, and one Arrow full-outer join diffs them by
@@ -89,12 +90,14 @@ class LakeCDFPartition(InputPartition):
     the bucket's deletion-vector entries for its state at ``ver``
     (new) and ``ver - 1`` (old). The catalog feeds add the member
     table ``tbl`` and the catalog version ``cat_ver`` whose tx the
-    step belongs to."""
+    step belongs to. A small ``lake_changes`` diff is ONE partition
+    with no ``ver`` and no ``bucket``, covering every changed bucket
+    of two arbitrary versions (``stats._local_changes``)."""
 
     def __init__(
         self,
-        ver: int,
-        bucket: int,
+        ver: int | None,
+        bucket: int | None,
         new_files: list,
         old_files: list,
         new_dv=(),
@@ -225,12 +228,22 @@ def _plan_version_steps(
     return parts
 
 
-def _change_batches(part: LakeCDFPartition, row_changes: bool = False) -> Iterator:
-    """Executor-side: ONE change step, the read of all four change
-    feeds. Both sides read through ``_aligned_file_table`` at the feeds'
+def _change_batches(
+    part: LakeCDFPartition,
+    row_changes: bool = False,
+    ts_ddl: str = "timestamp",
+    item_ddl: str = "string",
+) -> Iterator:
+    """ONE change step, the read of all four change feeds and of a
+    small ``lake_changes`` / ``lake_changes_rows`` diff. The data
+    sources run it on executors, one step per partition, at their
     declared types (``CDF_SCHEMA``: ``last_ts timestamp``, ``item
-    string``) with their own deletion vectors and tombstones KEPT, then
-    one full-outer join on ``entity_id`` diffs them. FULL outer: a
+    string``, the defaults); ``stats._local_changes`` runs it on the
+    driver over ONE partition covering every changed bucket, at the
+    lake epoch's ``(ts_ddl, item_ddl)``. Both sides read through
+    ``_aligned_file_table`` at those types with their own deletion
+    vectors and tombstones KEPT, then one full-outer join on
+    ``entity_id`` diffs them. FULL outer: a
     RESTORE reverts to a version predating some keys, so a visible key
     can vanish. Every predicate is Kleene, like the Spark helpers' SQL,
     and a NULL filter drops the row as theirs does.
@@ -248,10 +261,11 @@ def _change_batches(part: LakeCDFPartition, row_changes: bool = False) -> Iterat
       REMOVED content). A tombstone refreshed by a newer tombstone is
       absent→absent and emits nothing.
 
-    Rows carry ``ver``; a catalog step leads with ``tbl``, carries the
-    catalog version as ``ver`` and the table version as ``tbl_ver``
-    (the within-``ver`` order when one tx spans several table
-    steps). A batch reader whose plan is empty gets ONE ``None``
+    Rows carry ``ver``, unless the step has none (the driver-side
+    diff of two versions); a catalog step leads with ``tbl``, carries
+    the catalog version as ``ver`` and the table version as
+    ``tbl_ver`` (the within-``ver`` order when one tx spans several
+    table steps). A batch reader whose plan is empty gets ONE ``None``
     partition from Spark (``plan_data_source_read``): no rows."""
     if part is None:
         return
@@ -268,11 +282,11 @@ def _change_batches(part: LakeCDFPartition, row_changes: bool = False) -> Iterat
     def side(files, dv):
         tables = [
             _aligned_file_table(
-                f, [], "timestamp", "string", dv,
+                f, [], ts_ddl, item_ddl, dv,
                 bucket=part.bucket, keep_tombstones=True,
             )
             for f in files
-        ] or [_snapshot_arrow_schema([], "timestamp", "string").empty_table()]
+        ] or [_snapshot_arrow_schema([], ts_ddl, item_ddl).empty_table()]
         return pa.concat_tables(tables).select(["entity_id", *_CHANGE_COLS])
 
     new, old = side(part.new_files, part.new_dv), side(part.old_files, part.old_dv)
@@ -347,7 +361,8 @@ def _change_batches(part: LakeCDFPartition, row_changes: bool = False) -> Iterat
     if not n:
         return
     if part.tbl is None:
-        out = out.append_column("ver", pa.array([part.ver] * n, pa.int32()))
+        if part.ver is not None:
+            out = out.append_column("ver", pa.array([part.ver] * n, pa.int32()))
     else:
         out = out.append_column("ver", pa.array([part.cat_ver] * n, pa.int32()))
         out = out.append_column("tbl_ver", pa.array([part.ver] * n, pa.int32()))

@@ -139,7 +139,6 @@ from lapidus_spark.lake.admin import (  # noqa: F401
     vacuum_lake,
 )
 from lapidus_spark.lake.stats import (  # noqa: F401
-    _cdf_frames,
     _commit_file_stats,
     _resolve_change_bounds,
     _ts_iso,

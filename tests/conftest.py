@@ -72,13 +72,20 @@ def spark():
 def distributed_path(spark):
     """Run on the distributed path the library takes for inputs too big
     for the driver. Small inputs otherwise take a driver-side branch
-    bounded by ``autoBroadcastJoinThreshold``: a keyed lake read
-    (``lake_point_read``, ``lake_skip_read`` on ``entity_id``) becomes
-    a local relation (``stats._local_lookup``) with no ``inputFiles()``
-    or ``FileScan`` to assert file pruning on, and
-    ``min_label_propagation`` solves a small edge set with a union-find
-    instead of rounds. ``-1`` turns both branches off; the previous
-    value is restored afterwards."""
+    bounded by ``autoBroadcastJoinThreshold``, one of three:
+
+    - a keyed lake read (``lake_point_read``, ``lake_skip_read`` on
+      ``entity_id``) becomes a local relation (``stats._local_lookup``)
+      with no ``inputFiles()`` or ``FileScan`` to assert file pruning
+      on;
+    - a change feed (``lake_changes``, ``lake_changes_rows``) is
+      diffed on the driver (``stats._local_changes``): no
+      ``inputFiles()`` and no ``log._read_live`` call;
+    - ``min_label_propagation`` solves a small edge set with a
+      union-find instead of rounds.
+
+    ``-1`` turns all three off; the previous value is restored
+    afterwards."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")

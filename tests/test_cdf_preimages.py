@@ -134,6 +134,7 @@ def test_preimages_telescope_across_steps(spark, tmp_path):
     assert state == final
 
 
+@pytest.mark.usefixtures("distributed_path")
 def test_compaction_step_is_free_for_row_feed(spark, tmp_path, monkeypatch):
     """The row-level feed shares the entity-state feed's stamp-refined
     pruning: a compaction-only version step reads ZERO buckets."""

@@ -211,6 +211,7 @@ def test_clone_carries_alias_chain(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("distributed_path")
 def test_rename_step_is_free_for_change_feeds(spark, tmp_path, monkeypatch):
     """A rename commit is data_change=False with zero touched
     buckets: the CDF streaming source plans zero partitions across

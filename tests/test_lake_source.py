@@ -310,6 +310,7 @@ def test_unmarked_layout_change_raises(spark, tmp_path):
         _drain(spark, lake, "cdf_unmarked", str(tmp_path / "ck"))
 
 
+@pytest.mark.usefixtures("distributed_path")
 def test_compaction_step_is_free(spark, tmp_path, monkeypatch):
     """OPTIMIZE between two consumed versions costs change-feed
     consumers NOTHING: the compaction commit moves every degraded
@@ -341,6 +342,7 @@ def test_compaction_step_is_free(spark, tmp_path, monkeypatch):
     assert M.lake_changes(spark, lake, from_version=2, to_version=3).count() == 0
 
 
+@pytest.mark.usefixtures("distributed_path")
 def test_compaction_then_merge_prunes_to_merged_buckets(spark, tmp_path, monkeypatch):
     """An ENDPOINT diff spanning both a compaction and a merge reads
     only the merge-touched buckets: the compacted-but-unmerged

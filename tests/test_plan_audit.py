@@ -23,10 +23,14 @@ REG = load_all()
 #: (``stats._local_lookup``) at the default conf; their scan contract
 #: is checked on the scan path
 LOCAL_LOOKUPS = ("lake_rebucket", "lake_zonemap_read")
+#: change feeds small enough for the driver-side diff
+#: (``stats._local_changes``) at the default conf
+LOCAL_CHANGES = ("lake_changes_feed", "lake_cdf_preimages", "lake_gold_incremental")
 #: queries whose plan contract is checked on the distributed path:
-#: the local lookups, and the components of an edge set small enough
-#: for ``min_label_propagation``'s driver-side union-find
-DRIVER_PATHS = LOCAL_LOOKUPS + ("ext_dedup_components",)
+#: the local lookups and change feeds, and the components of an edge
+#: set small enough for ``min_label_propagation``'s driver-side
+#: union-find
+DRIVER_PATHS = LOCAL_LOOKUPS + LOCAL_CHANGES + ("ext_dedup_components",)
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTATIONS))
@@ -54,6 +58,29 @@ def test_local_lookup_contract(spark, name):
         sc.setJobGroup(None, None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert rows
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in executed and "FileScan" not in executed
+
+
+@pytest.mark.parametrize("name", LOCAL_CHANGES)
+def test_local_changes_contract(spark, name):
+    """At the default conf the change feeds read no file in Spark:
+    every feed is a local relation, so the plan has a LocalTableScan
+    and no file scan. The two plain feeds launch no job from build
+    through collect; the incremental gold fold still aggregates its
+    three local feeds in Spark."""
+    REG[name].fn(spark, SF_DIR)  # builds and caches the query's lake
+    sc = spark.sparkContext
+    group = f"local_changes_{name}"
+    sc.setJobGroup(group, "a local change feed must launch no job")
+    try:
+        df = REG[name].fn(spark, SF_DIR)
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    if name != "lake_gold_incremental":
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in executed and "FileScan" not in executed
 

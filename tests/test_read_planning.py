@@ -454,3 +454,22 @@ def test_local_lookup_falls_back_to_the_scan(spark, tmp_path):
     M.merge_batch_into_lake(tagged, lake, n_buckets=16, extra_cols=("tags",))
     assert M._read_manifest(lake)["columns"] == [{"name": "tags", "type": "array<string>"}]
     check(["k001", "k002"], False)
+
+
+@pytest.mark.parametrize("name", ["int96_ltz", "ntz"])
+def test_time_read_rows_do_not_depend_on_the_session_zone(spark, lookup_lakes, name):
+    """The window's bounds are UTC instants on both lake types: an LTZ
+    ``last_ts`` is compared as an instant and an NTZ one as the UTC
+    wall clock the zone maps record, so every session zone returns the
+    rows a UTC session does."""
+    lake = lookup_lakes[name]
+
+    def read():
+        df = M.lake_time_read(spark, lake, "2023-11-15 00:00:00", "2023-11-15 00:06:00")
+        return _rows(df, ["entity_id", "last_seq"])
+
+    want = read()
+    assert want and len(want) < len(_rows(M.read_lake_snapshot(spark, lake), ["entity_id"]))
+    for tz in ("America/New_York", "Asia/Tokyo"):
+        with _conf(spark, "spark.sql.session.timeZone", tz):
+            assert read() == want, tz

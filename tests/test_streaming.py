@@ -1944,6 +1944,7 @@ def test_lake_time_travel_matches_per_version_oracles(spark, tmp_path):
     assert _snapshot_rows(spark, lake, version=4) == _snapshot_rows(spark, lake, version=3)
 
 
+@pytest.mark.usefixtures("distributed_path")
 def test_lake_changes_prunes_to_touched_buckets(spark, tmp_path):
     """The change feed between two versions must (a) report exactly
     the entities whose state changed, with post-images, and (b) READ
