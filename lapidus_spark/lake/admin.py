@@ -28,7 +28,6 @@ from .log import (
     _delta_path,
     _flip_version,
     _gc_unreferenced,
-    _healed_manifest,
     _manifest_at,
     _manifest_columns,
     _next_commit_stamp,
@@ -182,11 +181,11 @@ def compact_lake(
     """OPTIMIZE for the lake: rewrite the buckets whose physical
     layout has degraded — more than ``target_files_per_bucket``
     parquet files (each micro-batch overwrite leaves one file per
-    writing task, so a long-running merge sink accretes small files),
-    or a pre-manifest legacy ``bucket=K`` dir — into one fresh commit
-    directory, published through the SAME atomic manifest flip as a
-    merge. Logical content is untouched (a pure physical rewrite):
-    the new version's snapshot is bit-identical to the old one.
+    writing task, so a long-running merge sink accretes small files)
+    — into one fresh commit directory, published through the SAME
+    atomic manifest flip as a merge. Logical content is untouched (a
+    pure physical rewrite): the new version's snapshot is
+    bit-identical to the old one.
 
     Scale contract: only degraded buckets are read and rewritten
     (k·(table/B) bytes, never a full-table pass unless every bucket
@@ -243,7 +242,7 @@ def compact_lake(
         )
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to compact")
         stats_columns = _resolve_stats_columns(manifest, stats_columns)
@@ -301,14 +300,12 @@ def _degraded_buckets(
     cluster_by: tuple = ("entity_id",),
 ) -> list:
     """Buckets whose physical layout needs an OPTIMIZE under this
-    valve: legacy root dirs (always migrate), else more parquet files
-    than the target — excluding buckets still pointing into the last
-    compaction commit under the SAME valve AND cluster dimensions
-    (the convergence check; keyed on the recorded commit ``rel`` so
-    it survives nonce-named optimistic compaction dirs, with the
-    version-derived name as the pre-``rel`` manifest fallback —
-    switching ``cluster_by`` re-arms every bucket: a re-cluster is a
-    requested layout change, not churn)."""
+    valve: more parquet files than the target — excluding buckets
+    still pointing into the last compaction commit under the SAME
+    valve AND cluster dimensions (the convergence check; keyed on the
+    recorded commit ``rel`` so it survives nonce-named optimistic
+    compaction dirs — switching ``cluster_by`` re-arms every bucket:
+    a re-cluster is a requested layout change, not churn)."""
     comp = manifest.get("compaction")
     comp_prefix = None
     if (
@@ -316,13 +313,10 @@ def _degraded_buckets(
         and comp.get("valve") == max_records_per_file
         and comp.get("cluster_by", ["entity_id"]) == list(cluster_by)
     ):
-        comp_prefix = (comp.get("rel") or f"commits/{comp['version']:010d}") + "/"
+        comp_prefix = comp["rel"] + "/"
     dvs = manifest.get("deletion_vectors", {})
     degraded = []
     for b, rel in manifest["buckets"].items():
-        if rel.startswith("bucket="):
-            degraded.append(int(b))  # legacy layout: always migrate
-            continue
         if b in dvs:
             # a standing deletion vector is deferred maintenance by
             # definition: the rewrite reads through the mask, so the
@@ -371,7 +365,7 @@ def _compact_optimistic(
     import shutil
     import uuid
 
-    base = _healed_manifest(lake_dir)
+    base = _read_manifest(lake_dir)
     if base is None:
         raise ValueError(f"lake at {lake_dir} has no manifest to compact")
     degraded = _degraded_buckets(
@@ -430,7 +424,7 @@ def _compact_optimistic(
             "skipped_buckets": len(degraded),
         }
     try:
-        cur = _healed_manifest(lake_dir)
+        cur = _read_manifest(lake_dir)
         if not os.path.isdir(os.path.join(lake_dir, commit_rel)):
             # staged rewrite GC'd mid-gap (grace expiry / mtime skew):
             # flipping would publish dangling pointers — defer instead
@@ -515,7 +509,7 @@ def rebucket_lake(
         raise ValueError(f"new_n_buckets must be a positive int, got {new_n_buckets!r}")
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to rebucket")
         if manifest["n_buckets"] == new_n_buckets:
@@ -615,7 +609,7 @@ def restore_lake(lake_dir: str, version: int, retain_versions: int = 2) -> dict:
     _validate_merge_args(None, retain_versions)
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        live = _healed_manifest(lake_dir)
+        live = _read_manifest(lake_dir)
         if live is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to restore")
         target = _manifest_at(lake_dir, version)  # unretained → fails fast
@@ -698,9 +692,9 @@ def vacuum_lake(
     """Delta VACUUM's analog as an EXPLICIT command: raise the
     retention floor to ``live - retain_versions + 1`` and reclaim
     everything no remaining retained version references — commit
-    dirs, commit-log entries below the floor's checkpoint, format-1
-    ``_history`` JSONs. Per-commit GC already enforces each merge's
-    own ``retain_versions`` as it goes; this is the administrative
+    dirs and commit-log entries below the floor's checkpoint.
+    Per-commit GC already enforces each merge's own
+    ``retain_versions`` as it goes; this is the administrative
     override for shrinking a horizon after the fact (a table merged
     with ``retain_versions=24`` for a backfill audit, vacuumed back
     to 1 when the audit closes) and for reclaiming crashed writers'
@@ -726,12 +720,6 @@ def vacuum_lake(
         pointer = _read_pointer(lake_dir)
         if pointer is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to vacuum")
-        if "buckets" in pointer:
-            raise ValueError(
-                f"lake at {lake_dir} still carries a format-1 monolithic "
-                "manifest; commit once (merge/compact) to migrate it to the "
-                "commit-log format before vacuuming"
-            )
         live_v = int(pointer["version"])
         old_floor = int(pointer.get("floor", 1))
         new_floor = max(old_floor, live_v - retain_versions + 1)
@@ -907,7 +895,7 @@ def delete_from_lake(
     _validate_merge_args(None, retain_versions)
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to delete from")
         rows = log._read_live(spark, lake_dir, manifest)
@@ -1051,7 +1039,7 @@ def add_constraint(
     _validate_merge_args(None, retain_versions)
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest to constrain")
         cons = dict(manifest.get("constraints", {}))
@@ -1101,7 +1089,7 @@ def drop_constraint(lake_dir: str, name: str, retain_versions: int = 2) -> dict:
     _validate_merge_args(None, retain_versions)
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest")
         cons = dict(manifest.get("constraints", {}))
@@ -1159,7 +1147,7 @@ def rename_lake_column(
     _validate_extra_cols((new,))  # identifier shape + core/internal collisions
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest")
         cols = [dict(c) for c in _manifest_columns(manifest)]
@@ -1276,7 +1264,7 @@ def drop_lake_column(
     _validate_merge_args(None, retain_versions)
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = _healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if manifest is None:
             raise ValueError(f"lake at {lake_dir} has no manifest")
         cols = [dict(c) for c in _manifest_columns(manifest)]
@@ -1386,19 +1374,6 @@ def clone_lake(src_dir: str, dst_dir: str, version: int | None = None) -> dict:
         m = _manifest_at(src_abs, version)
         if m is None:
             raise ValueError(f"lake at {src_dir} has no manifest to clone")
-        legacy = sorted(
-            b for b, rel in m["buckets"].items() if rel.startswith("bucket=")
-        )
-        if legacy:
-            # legacy root dirs partition-encode the bucket value (read
-            # with basePath inference); an absolute clone reference would
-            # read them as commit paths and lose the bucket column —
-            # fail fast instead of committing unreadable pointers
-            raise ValueError(
-                f"lake at {src_dir} still carries pre-manifest legacy bucket "
-                f"dirs ({len(legacy)}); run one merge/compact to migrate them "
-                "into commit dirs before cloning"
-            )
         os.makedirs(dst_dir, exist_ok=True)
         if _read_pointer(dst_dir) is not None:
             raise ValueError(f"clone destination {dst_dir} is already a lake")

@@ -12,6 +12,7 @@ Design docstrings cite the reference where semantics derive from it
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import tempfile
@@ -41,9 +42,7 @@ MERGE_LAKE_BUCKETS = 8
 #: concerned. The resolved manifest CONTENT (bucket pointers, stamps,
 #: zone maps) lives in the incremental commit log under ``_log/`` —
 #: see ``LOG_DIR`` — so the per-commit metadata write is O(touched
-#: buckets), never O(all buckets + all files). Format-1 lakes (the
-#: pre-round-9 monolithic manifest, the full content in this file)
-#: remain readable and upgrade in place on their next commit.
+#: buckets), never O(all buckets + all files).
 MANIFEST_NAME = "_lapidus_manifest.json"
 
 #: the incremental commit log (Delta's ``_delta_log`` analog): one
@@ -51,13 +50,13 @@ MANIFEST_NAME = "_lapidus_manifest.json"
 #: bucket pointers, their dataChange stamps, and any file stats for
 #: exactly those buckets — plus a periodic ``<version>.checkpoint
 #: .json`` holding the fully-resolved manifest (every
-#: ``CHECKPOINT_EVERY``-th version, and always at version 1 /
-#: at a format-1 migration base). A reader resolves version V from
-#: the newest checkpoint ≤ V plus ≤CHECKPOINT_EVERY small delta
-#: replays. This is what makes the metadata plane scale: at 10^5
-#: buckets / 10^6 files, a commit writes bytes proportional to the
-#: BATCH (touched buckets), the pointer flip stays one tiny rename,
-#: and only every K-th commit pays the amortized full checkpoint.
+#: ``CHECKPOINT_EVERY``-th version, and always at version 1). A
+#: reader resolves version V from the newest checkpoint ≤ V plus
+#: ≤CHECKPOINT_EVERY small delta replays. This is what makes the
+#: metadata plane scale: at 10^5 buckets / 10^6 files, a commit
+#: writes bytes proportional to the BATCH (touched buckets), the
+#: pointer flip stays one tiny rename, and only every K-th commit
+#: pays the amortized full checkpoint.
 LOG_DIR = "_log"
 CHECKPOINT_EVERY = 8
 
@@ -68,17 +67,6 @@ CHECKPOINT_EVERY = 8
 #: in the files) and as partition column ``pb`` (drives the one-job
 #: split into per-bucket directories).
 _PARTITION_COL = "pb"
-
-#: committed manifests are retained under ``_history/<version>.json``
-#: (written right after each successful flip), which is what makes
-#: the lake a VERSIONED table: ``read_lake_snapshot(version=N)`` is
-#: time travel and ``lake_changes`` is a change-data-feed between two
-#: versions — both resolved purely through manifests, reading only
-#: the buckets whose pointers differ. ``retain_versions`` on the
-#: merge governs how many versions' data directories GC keeps (1 =
-#: live only, today's default; history JSON beyond the horizon is
-#: pruned too, so an unretained version fails fast and explicitly).
-HISTORY_DIR = "_history"
 
 #: single-writer guard: the merge takes a lock file for the duration
 #: of a commit, published via os.link of a pre-written body (atomic
@@ -216,8 +204,6 @@ def _clone_still_references(src_root: str, dst: str) -> bool:
     pointer = _read_pointer(dst)
     if pointer is None:
         return False  # clone deleted / never materialized: stale pin
-    if "buckets" in pointer:
-        return True  # format-1 fork we can't introspect: fail closed
     live = int(pointer["version"])
     floor = int(pointer.get("floor", 1))
     prefix = os.path.abspath(src_root).rstrip(os.sep) + os.sep
@@ -301,14 +287,33 @@ def _failpoint(name: str) -> None:
 
 
 def _read_pointer(lake_dir: str) -> dict | None:
-    """Raw commit-pointer JSON: a format-2 pointer ``{format, version,
-    floor}``, a format-1 FULL manifest (``buckets`` present), or None
-    for a lake with no manifest yet."""
+    """Raw commit-pointer JSON ``{format, version, floor}``, or None
+    for a lake with no manifest yet — the one place every open of a
+    lake goes through. Refuses the two layouts written before the
+    commit log (round 9) with a ``ValueError`` naming the layout: a
+    pointer carrying ``buckets`` is the format-1 monolithic manifest,
+    and root ``bucket=K`` dirs with no pointer are the pre-manifest
+    layout (treating that table as empty would let the next commit
+    replace it and GC its files). The dir is listed only when the
+    pointer is absent."""
     try:
         with open(os.path.join(lake_dir, MANIFEST_NAME)) as f:
-            return json.load(f)
+            pointer = json.load(f)
     except FileNotFoundError:
+        if glob.glob(os.path.join(glob.escape(lake_dir), "bucket=*")):
+            raise ValueError(
+                f"lake at {lake_dir} has the pre-manifest layout (root "
+                f"bucket= dirs, no {MANIFEST_NAME}), which is no longer "
+                "supported; rebuild the table into a new lake"
+            ) from None
         return None
+    if "buckets" in pointer:
+        raise ValueError(
+            f"lake at {lake_dir} has the format-1 monolithic manifest "
+            f"(the bucket map inside {MANIFEST_NAME}), which is no longer "
+            "supported; rebuild the table into a new lake"
+        )
+    return pointer
 
 
 def _delta_path(lake_dir: str, version: int) -> str:
@@ -422,12 +427,10 @@ def _no_retained_version(lake_dir: str, version: int, live) -> ValueError:
 def _resolve_version(
     lake_dir: str, pointer: dict, version: int, _retry: bool = True
 ) -> dict:
-    """Resolve a committed version of a format-2 lake: newest
+    """Resolve a committed version of a lake: newest
     checkpoint ≤ version, then replay the ≤CHECKPOINT_EVERY delta
     entries up to it. Versions below the pointer's retention ``floor``
-    fail fast (their log entries and data are GC'd); versions from a
-    migrated lake's format-1 era (older than the migration checkpoint)
-    fall back to their retained ``_history/`` JSONs.
+    fail fast (their log entries and data are GC'd).
 
     Reader-vs-GC contract: the log is listed and read with no lock, so
     a concurrent committer's GC can prune entries a slightly-stale
@@ -441,16 +444,11 @@ def _resolve_version(
     if version < int(pointer.get("floor", 1)):
         raise _no_retained_version(lake_dir, version, live_v)
     try:
+        # no checkpoint ≤ version: version 0's path fails the open
+        # below as a missing entry, like any pruned one
         cp = max(
-            (v for v in _checkpoint_versions(lake_dir) if v <= version), default=None
+            (v for v in _checkpoint_versions(lake_dir) if v <= version), default=0
         )
-        if cp is None:
-            # format-1 era of a migrated lake: the full manifest was
-            # retained under _history/ by the pre-migration commits
-            with open(
-                os.path.join(lake_dir, HISTORY_DIR, f"{version:010d}.json")
-            ) as f:
-                return json.load(f)
         with open(_checkpoint_path(lake_dir, cp)) as f:
             manifest = json.load(f)
         for v in range(cp + 1, version + 1):
@@ -459,7 +457,7 @@ def _resolve_version(
     except FileNotFoundError as e:
         if _retry:
             fresh = _read_pointer(lake_dir)
-            if fresh is not None and "buckets" not in fresh:
+            if fresh is not None:
                 return _resolve_version(lake_dir, fresh, version, _retry=False)
         raise ValueError(
             f"lake at {lake_dir}: commit log is missing an entry needed to "
@@ -470,36 +468,25 @@ def _resolve_version(
 
 
 def _read_manifest(lake_dir: str) -> dict | None:
-    """The LIVE resolved manifest (None when the lake has none):
-    format-2 pointers resolve through the commit log (one checkpoint +
+    """The LIVE resolved manifest (None when the lake has none),
+    resolved through the commit log: one checkpoint +
     ≤CHECKPOINT_EVERY small deltas — the Delta log/checkpoint read
-    path); format-1 pointers ARE the manifest."""
-    pointer = _read_pointer(lake_dir)
-    if pointer is None or "buckets" in pointer:
-        return pointer
-    return _resolve_version(lake_dir, pointer, int(pointer["version"]))
+    path."""
+    return _manifest_at(lake_dir, None)
 
 
 def _manifest_at(lake_dir: str, version: int | None) -> dict | None:
     """Manifest for a specific committed version (None → live),
-    resolved through the commit log (format 2) or ``_history/``
-    (format 1); unretained versions fail fast and explicitly."""
+    resolved through the commit log; unretained versions fail fast
+    and explicitly."""
     pointer = _read_pointer(lake_dir)
-    if pointer is not None and "buckets" not in pointer:
-        return _resolve_version(
-            lake_dir, pointer, int(pointer["version"]) if version is None else version
-        )
-    live = pointer
-    if version is None or (live is not None and live["version"] == version):
-        return live
-    path = os.path.join(lake_dir, HISTORY_DIR, f"{version:010d}.json")
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise _no_retained_version(
-            lake_dir, version, live["version"] if live else None
-        ) from None
+    if pointer is None:
+        if version is None:
+            return None
+        raise _no_retained_version(lake_dir, version, None)
+    return _resolve_version(
+        lake_dir, pointer, int(pointer["version"]) if version is None else version
+    )
 
 
 def _atomic_write_json(path: str, obj: dict, sync_dir: bool = False) -> None:
@@ -529,18 +516,6 @@ def _atomic_write_json(path: str, obj: dict, sync_dir: bool = False) -> None:
         except OSError:
             pass
         raise
-
-
-def _write_history(lake_dir: str, manifest: dict) -> None:
-    """Record a just-committed manifest under ``_history/``. Runs
-    AFTER the flip, so history ⊆ committed versions; a crash between
-    flip and this write is healed by the next merge (which re-records
-    the live manifest before building on it)."""
-    hist = os.path.join(lake_dir, HISTORY_DIR)
-    os.makedirs(hist, exist_ok=True)
-    _atomic_write_json(
-        os.path.join(hist, f"{manifest['version']:010d}.json"), manifest
-    )
 
 
 def _acquire_lock(lake_dir: str, wait_s: float = 0.0) -> str:
@@ -692,11 +667,10 @@ def _gc_unreferenced(
     retain_versions: int = 1,
     grace_seconds: float | None = None,
 ) -> None:
-    """Best-effort removal of commit dirs / legacy bucket dirs that no
-    RETAINED version references (orphans from crashed merges, versions
-    beyond the retention horizon), plus pruning of commit-log entries
-    below the newest checkpoint ≤ the retention floor and of
-    format-1-era ``_history`` JSONs below the floor — so an expired
+    """Best-effort removal of commit dirs that no RETAINED version
+    references (orphans from crashed merges, versions beyond the
+    retention horizon), plus pruning of commit-log entries below the
+    newest checkpoint ≤ the retention floor — so an expired
     time-travel read fails fast instead of hitting missing files.
     Runs only AFTER a successful flip; deletes only paths no retained
     version names. Failures are swallowed — an orphan is wasted
@@ -715,34 +689,28 @@ def _gc_unreferenced(
     # retained version is wrong data). Only the deletions themselves
     # are best-effort.
     pointer = _read_pointer(lake_dir)
-    if pointer is None or "buckets" in pointer:
-        return  # only the log-format flip calls GC; a torn state fails closed
+    if pointer is None:
+        return  # only the flip calls GC; a torn state fails closed
     floor, live_v = int(pointer.get("floor", 1)), int(pointer["version"])
     retained = []
     try:
         # forward fold: resolve the floor once (one checkpoint read),
         # then apply each retained delta exactly once — O(retained)
-        # small reads, not O(retained × checkpoint) re-resolutions.
-        # A version without a delta entry (a migrated lake's format-1
-        # era) resolves individually through its history fallback.
+        # small reads, not O(retained × checkpoint) re-resolutions
         m = None
         for v in range(floor, live_v + 1):
             if v == manifest["version"]:
                 m = manifest
             elif m is not None:
-                try:
-                    with open(_delta_path(lake_dir, v)) as f:
-                        m = _apply_delta(m, json.load(f))
-                except FileNotFoundError:
-                    m = _resolve_version(lake_dir, pointer, v)
+                with open(_delta_path(lake_dir, v)) as f:
+                    m = _apply_delta(m, json.load(f))
             else:
                 m = _resolve_version(lake_dir, pointer, v)
             retained.append(m)
     except (OSError, ValueError):
         return
     # prune the log below the newest checkpoint ≤ floor (everything at
-    # or above it is needed to resolve the floor version), and the
-    # format-1-era history JSONs below the floor
+    # or above it is needed to resolve the floor version)
     cp_floor = max((v for v in _checkpoint_versions(lake_dir) if v <= floor), default=None)
     log_root = os.path.join(lake_dir, LOG_DIR)
     try:
@@ -750,11 +718,6 @@ def _gc_unreferenced(
             for fn in os.listdir(log_root):
                 if fn.endswith(".json") and int(fn.split(".", 1)[0]) < cp_floor:
                     os.remove(os.path.join(log_root, fn))
-        hist_root = os.path.join(lake_dir, HISTORY_DIR)
-        if os.path.isdir(hist_root):
-            for fn in os.listdir(hist_root):
-                if fn.endswith(".json") and int(fn.split(".")[0]) < floor:
-                    os.remove(os.path.join(hist_root, fn))
     except (OSError, ValueError):
         pass
     live_commits = {
@@ -763,15 +726,9 @@ def _gc_unreferenced(
         for p in m["buckets"].values()
         if p.startswith("commits/")
     }
-    live_legacy = {
-        p for m in retained for p in m["buckets"].values() if p.startswith("bucket=")
-    }
     try:
         for d in _reclaimable_commit_dirs(lake_dir, live_commits, grace_seconds):
             shutil.rmtree(os.path.join(lake_dir, "commits", d), ignore_errors=True)
-        for d in os.listdir(lake_dir):
-            if d.startswith("bucket=") and d not in live_legacy:
-                shutil.rmtree(os.path.join(lake_dir, d), ignore_errors=True)
     except OSError:
         pass
 
@@ -815,20 +772,16 @@ def _reclaimable_commit_dirs(
     return out
 
 
-def _live_paths(lake_dir: str, manifest: dict | None, buckets=None) -> tuple[list[str], list[str]]:
-    """Resolve (legacy_paths, commit_paths) for ``buckets`` (all live
-    buckets when None). Legacy paths are pre-manifest root
-    ``bucket=K`` dirs — their bucket value is partition-encoded, so
-    they read with ``basePath`` inference; commit paths carry
-    ``bucket`` as a data column and read directly."""
+def _live_paths(lake_dir: str, manifest: dict | None, buckets=None) -> list[str]:
+    """The sorted bucket dirs of ``buckets`` (all live buckets when
+    None); each carries ``bucket`` as a data column."""
     if manifest is None:
-        return [], []
-    legacy, commits = [], []
-    for b, rel in manifest["buckets"].items():
-        if buckets is not None and int(b) not in buckets:
-            continue
-        (legacy if rel.startswith("bucket=") else commits).append(os.path.join(lake_dir, rel))
-    return sorted(legacy), sorted(commits)
+        return []
+    return sorted(
+        os.path.join(lake_dir, rel)
+        for b, rel in manifest["buckets"].items()
+        if buckets is None or int(b) in buckets
+    )
 
 
 _LAKE_COLS = ["entity_id", "last_seq", "last_ts", "last_type", "item", "bucket"]
@@ -858,8 +811,7 @@ def _epoch_core_types(lake_dir: str, manifest: dict | None):
 
     from lapidus_spark.sources.lake_batch import _ddl_of_arrow
 
-    legacy, commits = _live_paths(lake_dir, manifest, None)
-    for d in [*commits, *legacy]:
+    for d in _live_paths(lake_dir, manifest):
         try:
             names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
             if not names:
@@ -1037,24 +989,12 @@ def _read_live(
     and a TYPE-WIDENED epoch (round 10) mixes physical widths that
     ``mergeSchema`` cannot merge at all; the explicit schema handles
     both (missing columns null-fill, narrower files widen up)."""
-    legacy, commits = _live_paths(lake_dir, manifest, buckets)
-    commits += files
-    extras = _manifest_columns(manifest)
-    parts = []
-    if legacy:
-        parts.append(
-            spark.read.option("basePath", lake_dir)
-            .parquet(*legacy)
-            .withColumn("bucket", F.col("bucket").cast("int"))
-        )
-    if commits:
-        parts.append(_read_commit_files(spark, manifest, commits))
-    if not parts:
+    paths = [*_live_paths(lake_dir, manifest, buckets), *files]
+    if not paths:
         return None
-    parts = [_align_extras(p, extras) for p in parts]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = _align_extras(
+        _read_commit_files(spark, manifest, paths), _manifest_columns(manifest)
+    )
     return _apply_dv_mask(spark, df, manifest)
 
 
@@ -1132,23 +1072,6 @@ def _apply_dv_mask(spark, df: DataFrame, manifest: dict | None) -> DataFrame:
     )
 
 
-def _healed_manifest(lake_dir: str) -> dict | None:
-    """Live manifest, with the format-1 flip→history crash window
-    healed (the live manifest must be recorded in ``_history/`` before
-    any op builds the next version on it). Format-2 lakes have no such
-    window — the log entry is written BEFORE the pointer flip — so
-    healing is a plain resolve."""
-    pointer = _read_pointer(lake_dir)
-    if pointer is None:
-        return None
-    if "buckets" not in pointer:
-        return _resolve_version(lake_dir, pointer, int(pointer["version"]))
-    hist = os.path.join(lake_dir, HISTORY_DIR, f"{pointer['version']:010d}.json")
-    if not os.path.exists(hist):
-        _write_history(lake_dir, pointer)
-    return pointer
-
-
 def _validate_merge_args(n_buckets, retain_versions) -> None:
     if n_buckets is not None and (
         isinstance(n_buckets, bool) or not isinstance(n_buckets, int) or n_buckets < 1
@@ -1183,8 +1106,8 @@ def _publish_version(
     compact, rebucket): write ``rows`` (bucket column already set) for
     exactly the ``touched`` buckets into a FRESH ``commits/<version>``
     directory — never into live paths, so readers (and a replay after
-    a crash) are untouched — then atomically flip the manifest,
-    record it in ``_history/``, and GC beyond the retention horizon.
+    a crash) are untouched — then atomically flip the manifest and GC
+    beyond the retention horizon.
     ``replace_all`` swaps the ENTIRE bucket map (rebucket: the old
     layout's pointers must not survive) instead of updating the
     touched pointers.
@@ -1283,7 +1206,7 @@ def _flip_version(
     explicit bucket→rel map ``touched_rels`` for METADATA-ONLY commits
     — ``restore_lake``/``clone_lake`` repoint buckets at dirs staged
     by EARLIER commits, so there is no single fresh commit_rel), flip
-    atomically, record history, GC. Must run under the writer lock.
+    atomically, GC. Must run under the writer lock.
     ``manifest`` need not be the one the staged rows were computed
     against — an optimistic merge REBASES by flipping onto a newer
     manifest once it has proven (via the ``data_versions`` stamps)
@@ -1301,18 +1224,15 @@ def _flip_version(
        proportional to the BATCH, never to the table's bucket or file
        count — and derive the next full manifest from it via
        ``_apply_delta`` (writer and readers share the fold);
-    2. if the base is a format-1 monolith (or a legacy adoption),
-       checkpoint it into ``_log/`` first so replay has a base —
-       the in-place migration;
-    3. write the periodic checkpoint when due (version 1 and every
+    2. write the periodic checkpoint when due (version 1 and every
        ``CHECKPOINT_EVERY``-th commit — a deterministic rule, so a
        crashed writer's orphan checkpoint above the live pointer is
        always overwritten by whoever actually commits that version);
-    4. write the delta entry, then atomically flip the pointer (the
+    3. write the delta entry, then atomically flip the pointer (the
        ONE commit point — a crash before it leaves the old version
        fully live, the orphan log entries are overwritten by the
        next committer);
-    5. GC data and log beyond the retention floor."""
+    4. GC data and log beyond the retention floor."""
     version = (manifest["version"] if manifest else 0) + 1
     delta: dict = {
         "format": 2,
@@ -1352,25 +1272,7 @@ def _flip_version(
     log_dir = os.path.join(lake_dir, LOG_DIR)
     os.makedirs(log_dir, exist_ok=True)
     pointer = _read_pointer(lake_dir)
-    prev_floor = 1
-    if manifest is not None and (pointer is None or "buckets" in pointer):
-        # migrating a format-1 manifest (or an adopted legacy layout,
-        # synthesized version 0): checkpoint the base so replay has a
-        # floor; its older retained versions stay readable via their
-        # _history JSONs until they age past retention.
-        _atomic_write_json(
-            _checkpoint_path(lake_dir, manifest["version"]), manifest, sync_dir=True
-        )
-        if pointer is not None:
-            hist = os.path.join(lake_dir, HISTORY_DIR)
-            retained_v1 = [
-                int(fn.split(".")[0])
-                for fn in (os.listdir(hist) if os.path.isdir(hist) else [])
-                if fn.endswith(".json")
-            ]
-            prev_floor = min(retained_v1, default=manifest["version"])
-    elif pointer is not None:
-        prev_floor = int(pointer.get("floor", 1))
+    prev_floor = 1 if pointer is None else int(pointer.get("floor", 1))
     floor = max(prev_floor, version - retain_versions + 1)
     # catalog-aware floor (VERDICT r10 #2): per-commit GC must never
     # reclaim a table version a retained catalog entry still

@@ -32,7 +32,6 @@ from .log import (
     _align_extras,
     _bucket_content_changed,
     _flip_version,
-    _healed_manifest,
     _is_missing_file_error,
     _manifest_columns,
     _read_manifest,
@@ -204,7 +203,7 @@ def sync_snapshot_into_lake(
     )
     lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
     try:
-        manifest = log._healed_manifest(lake_dir)
+        manifest = _read_manifest(lake_dir)
         if _txn_already_applied(manifest, txn):
             # replayed snapshot epoch: skip BEFORE the full-table
             # retirement anti-join, not just inside the merge — a
@@ -479,7 +478,7 @@ def merge_into_lake(
     envelope = None
     current_all = None
     try:
-        manifest, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=True)
+        manifest, n_buckets = _resolve_base(lake_dir, n_buckets)
         if _txn_already_applied(manifest, txn):
             return {
                 "version": int(manifest["version"]),
@@ -724,15 +723,10 @@ def merge_into_lake(
             pass
 
 
-def _resolve_base(lake_dir: str, n_buckets: int | None, adopt_legacy: bool):
-    """Shared merge preamble: the healed base manifest plus the
-    resolved bucket count (pinned layout wins; a mismatch raises).
-    A pre-manifest legacy layout (root bucket=K dirs, no manifest) is
-    ADOPTED as version 0 on the locked path; the optimistic path
-    REFUSES it instead (``adopt_legacy=False``) — silently treating
-    the un-manifested table as empty would replace it with the batch
-    and GC the standing files."""
-    manifest = _healed_manifest(lake_dir)
+def _resolve_base(lake_dir: str, n_buckets: int | None):
+    """Shared merge preamble: the live base manifest plus the resolved
+    bucket count (pinned layout wins; a mismatch raises)."""
+    manifest = _read_manifest(lake_dir)
     if n_buckets is None:
         n_buckets = manifest["n_buckets"] if manifest else MERGE_LAKE_BUCKETS
     if manifest is not None and manifest["n_buckets"] != n_buckets:
@@ -742,27 +736,6 @@ def _resolve_base(lake_dir: str, n_buckets: int | None, adopt_legacy: bool):
             "the bucket layout only changes through rebucket_lake "
             "(pass n_buckets=None to adopt the pinned layout)"
         )
-    if manifest is None and os.path.isdir(lake_dir):
-        # pre-manifest layout (root bucket=K dirs from the r6 dynamic-
-        # overwrite scheme): adopt the existing dirs as the live set;
-        # subsequent merges migrate touched buckets into commit dirs.
-        legacy = sorted(
-            d for d in os.listdir(lake_dir) if d.startswith("bucket=") and "=" in d
-        )
-        if legacy:
-            if not adopt_legacy:
-                raise ValueError(
-                    f"lake at {lake_dir} has a pre-manifest legacy layout "
-                    f"({len(legacy)} root bucket= dirs, no {MANIFEST_NAME}); "
-                    "the optimistic merge cannot adopt it safely — run one "
-                    "locked merge_batch_into_lake first to migrate it"
-                )
-            manifest = {
-                "format": 1,
-                "version": 0,
-                "n_buckets": n_buckets,
-                "buckets": {d.split("=", 1)[1]: d for d in legacy},
-            }
     return manifest, n_buckets
 
 
@@ -1034,11 +1007,10 @@ def _stage_merge(
     commit dir. Touches no manifest.
 
     ``locked``: the caller holds the writer lock across staging AND
-    flip, so the base cannot move — a pre-manifest legacy layout is
-    adopted, and the commit dir takes the plain name ``commits/<v>``
-    (GC reclaims a crashed one at once). Unlocked staging refuses
-    legacy layouts and names its dir ``commits/<v>.<nonce>``: writers
-    never collide, and GC's staging grace spares it until the flip.
+    flip, so the base cannot move, and the commit dir takes the plain
+    name ``commits/<v>`` (GC reclaims a crashed one at once). Unlocked
+    staging names its dir ``commits/<v>.<nonce>``: writers never
+    collide, and GC's staging grace spares it until the flip.
 
     One exchange, no cache: raw batch rows flow into the staging
     write's one hash aggregation. The touched set comes from one
@@ -1051,7 +1023,7 @@ def _stage_merge(
     batch can touch, read under the manifest this merge resolves (the
     predicate merge's persisted pruned read; see
     ``_merged_for_batch``)."""
-    base, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=locked)
+    base, n_buckets = _resolve_base(lake_dir, n_buckets)
     if _txn_already_applied(base, txn):
         return _Staged(base, n_buckets, [])  # replayed batch: the marker makes it FREE
     updates = _snapshot_shape(batch_df, n_buckets, extra_cols)
@@ -1303,14 +1275,11 @@ def merge_batch_optimistic(
     fails and retries against the fresh manifest (run concurrent
     writers with ``retain_versions >= 2`` to make that window a full
     version wide; same posture as Delta VACUUM vs in-flight reads).
-    Requires a manifested lake (or an empty/new dir); pre-manifest
-    legacy layouts migrate via one locked merge first.
 
     Returns the committed manifest — or, for an empty batch, the
     base manifest unchanged (None only if the lake is empty too): an
     empty batch commits nothing, and the return mirrors what a reader
-    would see. Refuses pre-manifest legacy layouts (run one locked
-    merge first — see ``_resolve_base``). ``_race_hook(attempt)`` is
+    would see. ``_race_hook(attempt)`` is
     a test seam invoked between staging and flip — deterministic
     interleave injection.
 
@@ -1379,7 +1348,7 @@ def merge_batch_optimistic(
                 pending = staged
                 continue
             try:
-                cur = _healed_manifest(lake_dir)
+                cur = _read_manifest(lake_dir)
                 if _txn_already_applied(cur, txn):
                     # a same-app sibling committed this (or a later)
                     # version mid-race: applying ours on top would be
@@ -1482,8 +1451,8 @@ def merge_lake_sink(
     lock is detected dead and broken) — or pass
     ``concurrency="optimistic"`` to let multiple sinks share the
     lake, staging unlocked and locking only the manifest flip
-    (``merge_batch_optimistic``). Committed manifests are
-    retained under ``_history/`` within the ``retain_versions``
+    (``merge_batch_optimistic``). Committed versions are
+    retained in the commit log within the ``retain_versions``
     horizon, giving ``read_lake_snapshot(version=...)`` time travel
     and ``lake_changes`` a bucket-pruned change-data-feed.
     ``compact_every=K`` runs ``compact_lake`` in-line after every

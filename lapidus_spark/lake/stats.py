@@ -18,7 +18,6 @@ from lapidus_spark.session import broadcast_threshold
 
 from . import log
 from .log import (
-    HISTORY_DIR,
     _bucket_content_changed,
     _delta_path,
     _epoch_iso,
@@ -262,7 +261,7 @@ def _write_bloom_sidecar(
 ) -> None:
     """Build per-file Bloom filters for the staged commit's declared
     columns and write them as ONE sidecar JSON at the commit-dir root
-    (``_bloom_index.json``: ``"bucket=B/file.parquet" → {col: {m, k,
+    (``_bloom_index.json``: ``"pb=B/file.parquet" → {col: {m, k,
     hex}}``). Runs BEFORE the manifest flip — the dir is invisible
     until the flip, so a crash leaves an orphan dir, never a torn
     index.
@@ -367,7 +366,7 @@ def _write_bloom_sidecar(
     rows = (
         df.select(
             # input_file_name is a URI; the sidecar key is the last
-            # two path segments (bucket=B/file.parquet)
+            # two path segments (pb=B/file.parquet)
             F.regexp_extract(
                 F.input_file_name(), r"([^/]+=[^/]+/[^/]+)$", 1
             ).alias("key"),
@@ -400,19 +399,12 @@ def _write_bloom_sidecar(
 
 def _load_bloom_index(lake_dir: str, bucket_rel: str) -> dict:
     """The commit dir's bloom sidecar for a manifest bucket pointer
-    (``commits/<v>/bucket=B`` → the dir's ``_bloom_index.json``
+    (``commits/<v>/pb=B`` → the dir's ``_bloom_index.json``
     filtered to that bucket), ``{}`` when absent — fresh merges and
     pre-bloom commits simply have no filters. Pure file I/O,
     driver-side, one tiny JSON per DISTINCT commit dir (callers
     cache per read)."""
-    # a commit-dir pointer is "<root>/<bucket=B>"; a legacy root-dir
-    # pointer is a bare "bucket=B" with no slash — it contains
-    # "bucket=" too, so the layout guard must key on the SEPARATOR
-    # (ADVICE r12 #4: the old substring check passed legacy rels
-    # through to a ValueError on the 2-tuple unpack below)
-    root, sep, bucket_part = bucket_rel.rpartition("/")
-    if not sep or f"{_PARTITION_COL}=" not in bucket_part:
-        return {}
+    root, _, bucket_part = bucket_rel.rpartition("/")
     path = os.path.join(lake_dir, root, BLOOM_SIDECAR)
     try:
         with open(path) as fh:
@@ -465,9 +457,6 @@ def _file_may_match(entry, ranges: dict, sets: dict, fblooms: dict) -> bool:
     Bloom filter (each miss is proof of absence). An unmapped column
     or a bound that cannot compare with the stat keeps the file.
     NULL-safe: NULL never satisfies a range or a set predicate."""
-    if not isinstance(entry, dict):
-        entry = {"entity_id": entry}  # pre-round-9 bare-list form
-
     def stat(col):
         rng = entry.get(col)
         if rng is None or col != "last_ts":
@@ -511,8 +500,7 @@ def _plan_files(lake_dir: str, manifest: dict, ranges: dict, value_sets: dict) -
       (``lake_batch._bucket_of``, the pinned layout); each bucket is
       pruned against its RESIDENT keys only — a foreign key cannot
       live there. Without one, every manifest bucket is wanted.
-    - A legacy ``bucket=`` pointer, or a bucket without ``file_stats``
-      (fresh merges), reads whole.
+    - A bucket without ``file_stats`` (fresh merges) reads whole.
     - Each recorded file passes ``_file_may_match``; the commit dir's
       Bloom sidecar is read only when a set probes a column that can
       carry a filter (never ``entity_id`` or ``last_ts``).
@@ -547,7 +535,7 @@ def _plan_files(lake_dir: str, manifest: dict, ranges: dict, value_sets: dict) -
         if rel is None:
             continue  # never-written bucket: no rows
         stats = zone_maps.get(b)
-        if stats is None or rel.startswith("bucket="):
+        if stats is None:
             plan[b] = None
             continue
         b_sets = sets if keys is None else {**sets, "entity_id": keys}
@@ -581,11 +569,6 @@ def lake_version_at(lake_dir: str, ts) -> int:
     pointer = _read_pointer(lake_dir)
     if pointer is None:
         raise ValueError(f"lake at {lake_dir} has no manifest")
-    if "buckets" in pointer:
-        raise ValueError(
-            f"lake at {lake_dir} still carries a format-1 monolithic manifest "
-            "(no commit stamps); commit once (merge/compact) to migrate"
-        )
     floor, live_v = int(pointer.get("floor", 1)), int(pointer["version"])
     best, earliest = None, None
     for v in range(floor, live_v + 1):
@@ -593,7 +576,7 @@ def lake_version_at(lake_dir: str, ts) -> int:
             with open(_delta_path(lake_dir, v)) as fh:
                 at = json.load(fh).get("committed_at")
         except FileNotFoundError:
-            continue  # format-1 era of a migrated lake: unstamped
+            continue  # pruned by a concurrent commit's GC: not retained
         if at is None:
             continue
         earliest = at if earliest is None else min(earliest, at)
@@ -630,9 +613,8 @@ def describe_detail(lake_dir: str, version: int | None = None) -> dict:
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest to describe")
     pointer = _read_pointer(lake_dir) or {}
-    legacy, commits = _live_paths(lake_dir, manifest)
     nfiles = nbytes = nrows = 0
-    for d in legacy + commits:
+    for d in _live_paths(lake_dir, manifest):
         for f in sorted(os.listdir(d)):
             if not f.endswith(".parquet"):
                 continue
@@ -647,7 +629,7 @@ def describe_detail(lake_dir: str, version: int | None = None) -> dict:
         "size_bytes": nbytes,
         "num_rows": nrows,  # physical rows incl. tombstones
         "columns": [c["name"] for c in _manifest_columns(manifest)],
-        "floor": int(pointer.get("floor", 1)) if "buckets" not in pointer else 1,
+        "floor": int(pointer.get("floor", 1)),
     }
     if manifest.get("committed_at") is not None:
         out["committed_at"] = _epoch_iso(manifest["committed_at"])
@@ -726,8 +708,8 @@ def _planned_scan(
       equality or IN — whose planned files total at most
       ``spark.sql.autoBroadcastJoinThreshold`` bytes on disk (Spark's
       own bound for "small enough to hold on the driver"; ``-1`` turns
-      it off), with no deletion-vector entries and no legacy root
-      ``bucket=`` dir among its planned buckets, under an epoch whose
+      it off), with no deletion-vector entries among its planned
+      buckets, under an epoch whose
       types all map to Arrow. It is read EAGERLY on the driver and
       returned as a local relation: no Spark job.
     - **Scan**, otherwise: whole buckets and kept files go through one
@@ -776,7 +758,6 @@ def _driver_files(
       rule matches the UTC wall clock while ``log._apply_dv_mask``
       matches the session's, so a driver read could disagree with
       ``read_lake_snapshot`` in the same session);
-    - a planned bucket is a legacy root ``bucket=`` dir;
     - an epoch type (``extras``, ``ts_ddl``, ``item_ddl``) has no
       Arrow mapping."""
     from lapidus_spark.sources.lake_batch import _snapshot_arrow_schema
@@ -797,7 +778,7 @@ def _driver_files(
             rel = buckets.get(b)
             if rel is None:
                 continue
-            if dvs.get(b) or rel.startswith("bucket="):
+            if dvs.get(b):
                 return None
             if kept is None:
                 d = os.path.join(lake_dir, rel)
@@ -876,14 +857,13 @@ def lake_point_read(
 
     Which physical read runs (``_planned_scan``): when the planned files
     total at most ``spark.sql.autoBroadcastJoinThreshold`` bytes on
-    disk and no planned bucket carries deletion-vector entries or is a
-    legacy root ``bucket=`` dir, the files are read EAGERLY on the
-    driver with pyarrow and returned as a local relation — the lookup
-    and its collect launch no Spark job, and a GC landing after this
-    call cannot fail it. Otherwise (bigger plans, DV or legacy buckets,
-    or the threshold set to ``-1``) it is a lazy Spark file scan. Both
-    read the same files of the same manifest, so the rows are the
-    same."""
+    disk and no planned bucket carries deletion-vector entries, the
+    files are read EAGERLY on the driver with pyarrow and returned as
+    a local relation — the lookup and its collect launch no Spark job,
+    and a GC landing after this call cannot fail it. Otherwise (bigger
+    plans, DV buckets, or the threshold set to ``-1``) it is a lazy
+    Spark file scan. Both read the same files of the same manifest,
+    so the rows are the same."""
     manifest = _manifest_at(lake_dir, version)
     if manifest is None:
         raise ValueError(f"lake at {lake_dir} has no manifest for point reads")
@@ -943,7 +923,7 @@ def lake_skip_read(
     A read with an ``entity_id`` equality or IN is a keyed read and
     picks its physical read as ``lake_point_read`` does: under
     ``spark.sql.autoBroadcastJoinThreshold`` planned bytes, with no
-    deletion-vector or legacy bucket planned, it is read eagerly on the
+    deletion-vector bucket planned, it is read eagerly on the
     driver into a local relation (no Spark job, immune to a later GC);
     otherwise, and for every read without an ``entity_id`` set, it is
     a lazy Spark file scan."""
@@ -1144,19 +1124,26 @@ def describe_history(lake_dir: str, limit: int | None = None) -> list[dict]:
     operation kind (merge / compact / rebucket, inferred from the
     commit markers), layout, how many buckets the commit
     data-changed (0 for a compaction: physical-only), and whether it
-    is the live version. Driver-side JSON reads only — proportional
-    to the retention horizon, never the data. Versions GC'd past
-    ``retain_versions`` are absent by construction (their history
-    JSON is pruned with their data)."""
-
-    def hist_row(
-        v: int,
-        markers: dict,
-        n_buckets: int,
-        data_changed: int,
-        is_live: bool,
-        committed_at=None,
-    ) -> dict:
+    is the live version. Driver-side JSON reads only — one commit-log
+    delta per retained version (the delta already carries the op
+    markers and the touched-bucket count, so no full manifest is
+    resolved), never the data. Versions GC'd past
+    ``retain_versions`` are absent by construction (their log
+    entries are pruned with their data)."""
+    pointer = _read_pointer(lake_dir)
+    if pointer is None:
+        return []
+    floor, live_v = int(pointer.get("floor", 1)), int(pointer["version"])
+    out = []
+    for v in range(live_v, floor - 1, -1):
+        if limit is not None and len(out) >= limit:
+            break
+        try:
+            with open(_delta_path(lake_dir, v)) as fh:
+                delta = json.load(fh)
+        except FileNotFoundError:
+            continue  # pruned by a concurrent commit's GC: not retained
+        markers = delta.get("extra", {})
         if int(markers.get("rebucket", {}).get("version", -1)) == v:
             op = "rebucket"
         elif int(markers.get("compaction", {}).get("version", -1)) == v:
@@ -1168,88 +1155,14 @@ def describe_history(lake_dir: str, limit: int | None = None) -> list[dict]:
         row = {
             "version": v,
             "operation": op,
-            "n_buckets": n_buckets,
-            "data_changed_buckets": data_changed,
-            "is_live": is_live,
+            "n_buckets": delta["n_buckets"],
+            "data_changed_buckets": len(delta["touched"]) if delta["data_change"] else 0,
+            "is_live": v == live_v,
         }
-        if committed_at is not None:
-            row["committed_at"] = _epoch_iso(committed_at)
-        return row
-
-    pointer = _read_pointer(lake_dir)
-    if pointer is not None and "buckets" not in pointer:
-        # format 2: one row per retained commit-LOG entry — the delta
-        # already carries the op markers and the touched-bucket count,
-        # so no full manifest is resolved (O(retained) tiny JSON reads)
-        floor, live_v = int(pointer.get("floor", 1)), int(pointer["version"])
-        out = []
-        for v in range(live_v, floor - 1, -1):
-            if limit is not None and len(out) >= limit:
-                break
-            try:
-                with open(_delta_path(lake_dir, v)) as fh:
-                    delta = json.load(fh)
-            except FileNotFoundError:
-                # format-1 era of a migrated lake: its retained
-                # _history manifest still describes it
-                try:
-                    with open(
-                        os.path.join(lake_dir, HISTORY_DIR, f"{v:010d}.json")
-                    ) as fh:
-                        m = json.load(fh)
-                except FileNotFoundError:
-                    continue
-                dv = m.get("data_versions", {})
-                out.append(
-                    hist_row(
-                        v, m, m["n_buckets"],
-                        sum(1 for x in dv.values() if x == v), False,
-                    )
-                )
-                continue
-            out.append(
-                hist_row(
-                    v,
-                    delta.get("extra", {}),
-                    delta["n_buckets"],
-                    len(delta["touched"]) if delta["data_change"] else 0,
-                    v == live_v,
-                    committed_at=delta.get("committed_at"),
-                )
-            )
-        return out
-    live = pointer
-    hist = os.path.join(lake_dir, HISTORY_DIR)
-    try:
-        names = sorted(os.listdir(hist), reverse=True)
-    except FileNotFoundError:
-        names = []
-
-    def row(m: dict) -> dict:
-        v = m["version"]
-        return hist_row(
-            v,
-            m,
-            m["n_buckets"],
-            sum(1 for dv in m.get("data_versions", {}).values() if dv == v),
-            bool(live) and live["version"] == v,
-        )
-
-    out: list[dict] = []
-    # a writer killed between the flip and the history write leaves
-    # the LIVE version absent from _history/ until the next op heals
-    # it — report it anyway (the manifest is authoritative)
-    if live is not None and f"{live['version']:010d}.json" not in names:
-        out.append(row(live))
-    for fn in names:
-        if not fn.endswith(".json"):
-            continue
-        if limit is not None and len(out) >= limit:
-            break
-        with open(os.path.join(hist, fn)) as fh:
-            m = json.load(fh)
-        out.append(row(m))
-    return out[:limit] if limit is not None else out
+        if delta.get("committed_at") is not None:
+            row["committed_at"] = _epoch_iso(delta["committed_at"])
+        out.append(row)
+    return out
 
 
 class _ChangePlan(NamedTuple):
@@ -1384,7 +1297,7 @@ def _local_changes(spark, plan: _ChangePlan, row_changes: bool) -> DataFrame | N
     )
     if files is None:
         return None
-    part = LakeCDFPartition(None, None, *files)
+    part = LakeCDFPartition(None, *files)
     batches = _change_batches(part, row_changes, plan.ts_ddl, plan.item_ddl)
     return _change_frame(spark, plan, row_changes, batches)
 
@@ -1581,13 +1494,12 @@ def lake_changes(
     Which physical read runs (``_change_feed``): when both versions'
     changed files total at most ``spark.sql.autoBroadcastJoinThreshold``
     bytes on disk and no changed bucket carries deletion-vector
-    entries or is a legacy root ``bucket=`` dir, the files are read
-    EAGERLY on the driver and diffed by ``lake_source._change_batches``
-    (the Arrow diff behind ``lake_cdf`` and ``format("lake")``
-    changes) into a local relation — the feed and its collect launch
-    no Spark job, and a GC landing after this call cannot fail it.
-    Otherwise (bigger diffs, DV or legacy buckets, or the threshold
-    set to ``-1``) it is a lazy Spark full-outer join. Both return the
+    entries, the files are read EAGERLY on the driver and diffed by
+    ``lake_source._change_batches`` (the Arrow diff behind
+    ``lake_cdf`` and ``format("lake")`` changes) into a local
+    relation — the feed and its collect launch no Spark job, and a GC
+    landing after this call cannot fail it. Otherwise (bigger diffs,
+    DV buckets, or the threshold set to ``-1``) it is a lazy Spark full-outer join. Both return the
     same rows, with ``last_ts`` and ``item`` at the new version's
     epoch types (``lake_batch._epoch_ddl``), also when nothing
     changed."""

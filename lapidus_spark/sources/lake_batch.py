@@ -41,10 +41,9 @@ Scale contract
   footer has it, so an INT96 ``timestamp`` lake is declared
   ``timestamp`` exactly like ``read_lake_snapshot`` returns it), zero
   data reads.
-- Snapshot partitions are one per live parquet FILE (commit dirs) or
-  one per legacy ``bucket=`` dir — the natural parallelism of the
-  table's physical layout; executors read their file(s) with
-  column-pruned pyarrow and emit Arrow batches.
+- Snapshot partitions are one per live parquet FILE — the natural
+  parallelism of the table's physical layout; executors read their
+  file(s) with column-pruned pyarrow and emit Arrow batches.
 - **Filter pushdown prunes I/O, never correctness**: ``pushFilters``
   returns every filter back to Spark (re-applied exactly), but uses
   equality/range predicates to skip work — entity keys hash to
@@ -329,16 +328,14 @@ def _pushed_ranges(filters) -> tuple[dict, dict]:
 class LakeFilePartition(InputPartition):
     """One snapshot read unit: the parquet files of one bucket slice,
     with everything the executor needs (epoch extras spec, declared
-    core types, the bucket's deletion-vector triples, and — for
-    legacy ``bucket=`` dirs — the path-encoded bucket value)."""
+    core types and the bucket's deletion-vector triples)."""
 
-    def __init__(self, files, extras, ts_ddl, item_ddl, dv, bucket=None):
+    def __init__(self, files, extras, ts_ddl, item_ddl, dv):
         self.files = files
         self.extras = extras
         self.ts_ddl = ts_ddl
         self.item_ddl = item_ddl
         self.dv = dv
-        self.bucket = bucket
 
 
 class LakeBatchReader(DataSourceReader):
@@ -380,10 +377,9 @@ class LakeBatchReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        """One partition per planned file (a legacy ``bucket=`` dir is
-        one partition): the pushed predicates go through
-        ``stats._plan_files``, the rule every pruned helper read uses,
-        so this relation opens the files the helpers open."""
+        """One partition per planned file: the pushed predicates go
+        through ``stats._plan_files``, the rule every pruned helper read
+        uses, so this relation opens the files the helpers open."""
         from lapidus_spark.lake.stats import _plan_files
 
         m = self.manifest
@@ -407,15 +403,6 @@ class LakeBatchReader(DataSourceReader):
             if not files:
                 continue
             dv = dvs.get(b_str, [])
-            if rel.startswith("bucket="):
-                # legacy layout: bucket is path-encoded, no zone maps
-                bucket = int(rel.split("=", 1)[1].split("/")[0])
-                parts.append(
-                    LakeFilePartition(
-                        files, self.extras, self.ts_ddl, self.item_ddl, dv, bucket
-                    )
-                )
-                continue
             parts.extend(
                 LakeFilePartition([f], self.extras, self.ts_ddl, self.item_ddl, dv)
                 for f in files
@@ -437,7 +424,6 @@ class LakeBatchReader(DataSourceReader):
                 partition.ts_ddl,
                 partition.item_ddl,
                 partition.dv,
-                bucket=partition.bucket,
             )
             for rb in out.to_batches():
                 if rb.num_rows:
@@ -458,7 +444,6 @@ def _aligned_file_table(
     ts_ddl: str,
     item_ddl: str,
     dv,
-    bucket=None,
     keep_tombstones: bool = False,
 ):
     """ONE stored parquet file as an Arrow table aligned to the
@@ -528,11 +513,7 @@ def _aligned_file_table(
         col("last_ts", schema.field("last_ts").type),
         col("last_type", pa.string()),
         col("item", schema.field("item").type),
-        (
-            pa.array([bucket] * len(tbl), pa.int32())
-            if bucket is not None
-            else col("bucket", pa.int32())
-        ),
+        col("bucket", pa.int32()),
     ]
     for c in extras:
         target = _arrow_type(c["type"])

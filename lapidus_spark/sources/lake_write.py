@@ -253,9 +253,7 @@ class LakeBatchWriter(DataSourceArrowWriter):
         try:
             if not staged_files:
                 return  # empty batch: no version, nothing staged
-            manifest, n_buckets = _resolve_base(
-                self.lake_dir, self.opt_n_buckets, adopt_legacy=False
-            )
+            manifest, n_buckets = _resolve_base(self.lake_dir, self.opt_n_buckets)
             if n_buckets != self.plan_n_buckets:
                 raise ValueError(
                     f"format('lake') write: table layout changed while the "

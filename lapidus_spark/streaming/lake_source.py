@@ -91,13 +91,12 @@ class LakeCDFPartition(InputPartition):
     (new) and ``ver - 1`` (old). The catalog feeds add the member
     table ``tbl`` and the catalog version ``cat_ver`` whose tx the
     step belongs to. A small ``lake_changes`` diff is ONE partition
-    with no ``ver`` and no ``bucket``, covering every changed bucket
-    of two arbitrary versions (``stats._local_changes``)."""
+    with no ``ver``, covering every changed bucket of two arbitrary
+    versions (``stats._local_changes``)."""
 
     def __init__(
         self,
         ver: int | None,
-        bucket: int | None,
         new_files: list,
         old_files: list,
         new_dv=(),
@@ -106,7 +105,6 @@ class LakeCDFPartition(InputPartition):
         cat_ver: int | None = None,
     ):
         self.ver = ver
-        self.bucket = bucket
         self.new_files = new_files
         self.old_files = old_files
         self.new_dv = list(new_dv)
@@ -117,9 +115,7 @@ class LakeCDFPartition(InputPartition):
 
 def _bucket_files(lake_dir: str, manifest: dict | None, bucket: int) -> list:
     """Driver-side: the parquet files backing one bucket of one
-    committed version (manifest pointers are dirs; commit dirs carry
-    ``bucket`` as a data column, legacy ``bucket=K`` dirs encode it in
-    the path — the diff needs neither, only the entity columns)."""
+    committed version (manifest pointers are dirs)."""
     if manifest is None:
         return []
     rel = manifest["buckets"].get(str(bucket))
@@ -216,7 +212,6 @@ def _plan_version_steps(
             parts.append(
                 LakeCDFPartition(
                     v,
-                    b,
                     _bucket_files(lake_dir, m_new, b),
                     _bucket_files(lake_dir, m_old, b),
                     new_dv=m_new.get("deletion_vectors", {}).get(b_str, ()),
@@ -281,10 +276,7 @@ def _change_batches(
 
     def side(files, dv):
         tables = [
-            _aligned_file_table(
-                f, [], ts_ddl, item_ddl, dv,
-                bucket=part.bucket, keep_tombstones=True,
-            )
+            _aligned_file_table(f, [], ts_ddl, item_ddl, dv, keep_tombstones=True)
             for f in files
         ] or [_snapshot_arrow_schema([], ts_ddl, item_ddl).empty_table()]
         return pa.concat_tables(tables).select(["entity_id", *_CHANGE_COLS])

@@ -58,7 +58,6 @@ from lapidus_spark.lake.catalog import (  # noqa: F401
 from lapidus_spark.lake.log import (  # noqa: F401
     CHECKPOINT_EVERY,
     GC_GRACE_SECONDS,
-    HISTORY_DIR,
     LOCK_NAME,
     LOCKED_WAIT_S,
     LOG_DIR,
@@ -85,7 +84,6 @@ from lapidus_spark.lake.log import (  # noqa: F401
     _failpoint,
     _flip_version,
     _gc_unreferenced,
-    _healed_manifest,
     _is_missing_file_error,
     _live_paths,
     _manifest_at,
@@ -101,7 +99,6 @@ from lapidus_spark.lake.log import (  # noqa: F401
     _resolve_version,
     _stage_commit,
     _validate_merge_args,
-    _write_history,
 )
 from lapidus_spark.lake.merge import (  # noqa: F401
     _evolved_schema,

@@ -393,14 +393,29 @@ def test_probe_kind_guards_are_conservative(spark):
     assert not _bloom_might_contain({**empty, "t": "bigint"}, 42)
 
 
-def test_load_bloom_index_legacy_rel_guard(tmp_path):
-    """ADVICE r12 #4: a legacy root-dir pointer is a bare 'bucket=B'
-    — it CONTAINS 'bucket=' so a substring guard passed it through to
-    a ValueError on the path split. The guard must key on the
-    separator and return {} for any non-commit-dir layout."""
-    assert _load_bloom_index(str(tmp_path), "bucket=3") == {}
-    assert _load_bloom_index(str(tmp_path), "commits/7/bucket=3") == {}
-    assert _load_bloom_index(str(tmp_path), "no-bucket-here/x") == {}
+def test_load_bloom_index_legacy_rel_guard(spark, tmp_path):
+    """A bare 'bucket=B' pointer (a root-dir rel) only ever existed in
+    a format-1 manifest, which is refused when the lake is opened, so
+    a Bloom probe never reaches ``_load_bloom_index`` with one. A
+    commit-dir rel without a sidecar loads no filters."""
+    import json
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    (lake / M.MANIFEST_NAME).write_text(
+        json.dumps(
+            {
+                "format": 1,
+                "version": 1,
+                "n_buckets": 4,
+                "buckets": {"3": "bucket=3"},
+                "bloom_columns": ["tag"],
+            }
+        )
+    )
+    with pytest.raises(ValueError, match="format-1 monolithic manifest"):
+        M.lake_skip_read(spark, str(lake), {}, in_values={"tag": ["x"]})
+    assert _load_bloom_index(str(tmp_path), "commits/7/pb=3") == {}
 
 
 def test_skip_read_overflow_bound_falls_back(spark, tmp_path):

@@ -2,8 +2,10 @@
 pruned lake read — point, skip, time-window and ``format("lake")`` —
 consults. Pure Python over hand-built manifests: no Spark session.
 
-Pinned here: legacy manifest shapes (bare-list ``entity_id`` entries,
-root ``bucket=`` pointers), time bounds in every accepted form (tz-
+Pinned here: the retired pre-round-9 manifest shapes (bare-list
+``entity_id`` entries, root ``bucket=`` pointers) never reach the
+planner — opening such a lake raises — and a bucket without
+``file_stats`` reads whole; time bounds in every accepted form (tz-
 aware, ISO) and the ``ValueError`` for anything else, the conservative
 keeps (unmapped column, incomparable bound), Bloom all-miss versus a
 single hit, resident-key routing on power-of-two and odd layouts, the
@@ -18,6 +20,7 @@ from datetime import datetime, timedelta, timezone
 
 import pytest
 
+from lapidus_spark.lake import log
 from lapidus_spark.lake.stats import (
     BLOOM_SIDECAR,
     _bloom_probe_bits,
@@ -50,22 +53,29 @@ def _kept(plan: dict, lake: str, bucket: str) -> list[str] | None:
     return None if files is None else [os.path.relpath(f, lake) for f in files]
 
 
-def test_legacy_shapes_bare_list_entries_and_root_pointers():
-    lake = "/lake"
+def test_legacy_shapes_bare_list_entries_and_root_pointers(tmp_path):
+    """Bare-list ``entity_id`` stats and root ``bucket=`` pointers only
+    ever existed under the format-1 manifest and the pre-manifest
+    layout. Both are refused when the lake is opened, so the planner
+    only ever sees dict entries and commit-dir pointers."""
+    format1 = tmp_path / "format1"
+    format1.mkdir()
     m = _manifest(
         {"0": "commits/00003/pb=0", "1": "bucket=1"},
-        {
-            # pre-round-9 bare-list entity_id entries
-            "0": {"a.parquet": ["k00", "k09"], "b.parquet": ["k10", "k19"]},
-            # stats recorded for a legacy pointer are never trusted
-            "1": {"c.parquet": ["k00", "k00"]},
-        },
+        {"0": {"a.parquet": ["k00", "k09"]}, "1": {"c.parquet": ["k00", "k00"]}},
     )
-    plan = _plan_files(lake, m, {"entity_id": ("k12", "k15")}, {})
-    assert _kept(plan, lake, "0") == ["commits/00003/pb=0/b.parquet"]
-    assert plan["1"] is None  # legacy bucket= pointer: whole bucket
+    (format1 / log.MANIFEST_NAME).write_text(json.dumps({**m, "format": 1}))
+    with pytest.raises(ValueError, match="format-1 monolithic manifest"):
+        log._manifest_at(str(format1), None)
+    pre_manifest = tmp_path / "pre_manifest"
+    (pre_manifest / "bucket=1").mkdir(parents=True)
+    with pytest.raises(ValueError, match="pre-manifest layout"):
+        log._manifest_at(str(pre_manifest), None)
+    assert log._read_pointer(str(tmp_path / "absent")) is None
     # no file_stats at all: every bucket whole
-    assert _plan_files(lake, _manifest(m["buckets"]), {"item": ("a", "b")}, {}) == {
+    lake = "/lake"
+    buckets = {"0": "commits/00003/pb=0", "1": "commits/00004/pb=1"}
+    assert _plan_files(lake, _manifest(buckets), {"item": ("a", "b")}, {}) == {
         "0": None,
         "1": None,
     }

@@ -200,7 +200,7 @@ def test_diff_is_exact_above_2_53(tmp_path):
         new_f,
     )
     reader = LakeCDFStreamReader({"path": str(tmp_path)})
-    part = LakeCDFPartition(ver=2, bucket=0, new_files=[new_f], old_files=[old_f])
+    part = LakeCDFPartition(ver=2, new_files=[new_f], old_files=[old_f])
     batches = list(reader.read(part))
     assert len(batches) == 1
     rows = {

@@ -11,8 +11,8 @@ from-empty diff, ordinary merges, a compaction-only step, an epoch with
 an accreted extra column, a tombstone refreshed by a tombstone, a
 RESTORE with vanished keys and a rebucket; building and collecting a
 local feed launches no Spark job, reads eagerly, and opens the files
-the join reads; a deletion-vector bucket, a legacy root bucket and a
-plan over the threshold take the join; and an empty feed keeps the
+the join reads; a deletion-vector bucket and a plan over the threshold
+take the join; and an empty feed keeps the
 epoch's types."""
 
 from __future__ import annotations
@@ -190,20 +190,20 @@ def _plan_bytes(lake, a, b) -> int:
 
 
 def test_local_feed_falls_back_to_the_join(spark, tmp_path):
-    """A plan over the threshold, a bucket with deletion-vector entries
-    on either side and a legacy root ``bucket=`` dir each take the
-    join, and every feed equals the join path. A local feed is read
+    """A plan over the threshold and a bucket with deletion-vector
+    entries on either side each take the join, and every feed equals
+    the join path. A local feed is read
     eagerly, so removing its files before the collect cannot fail it."""
     lake = str(tmp_path / "lake")
     M.merge_batch_into_lake(_env(spark, keys=12), lake, n_buckets=16, **RETAIN)
     M.merge_batch_into_lake(_env(spark, 6, seq0=9_000, keys=12), lake, n_buckets=None, **RETAIN)
 
-    def check(a, b, local, where=None):
+    def check(a, b, local):
         for fn in FEEDS.values():
-            df = fn(spark, where or lake, from_version=a, to_version=b)
+            df = fn(spark, lake, from_version=a, to_version=b)
             assert _is_local(df) == local, (fn.__name__, a, b)
             with _conf(spark, THRESHOLD, "-1"):
-                assert _view(df) == _view(fn(spark, where or lake, from_version=a, to_version=b))
+                assert _view(df) == _view(fn(spark, lake, from_version=a, to_version=b))
 
     size = _plan_bytes(lake, 1, 2)
     with _conf(spark, THRESHOLD, str(size)):
@@ -233,19 +233,3 @@ def test_local_feed_falls_back_to_the_join(spark, tmp_path):
     for f in os.listdir(os.path.join(lake, rel)):
         os.remove(os.path.join(lake, rel, f))
     assert _rows(eager) == rows
-
-    legacy = str(tmp_path / "legacy")
-    (
-        M.snapshot_stream(_env(spark, keys=12))
-        .withColumn("bucket", F.pmod(F.xxhash64("entity_id"), F.lit(8)).cast("int"))
-        .write.partitionBy("bucket")
-        .parquet(legacy)
-    )
-    M.merge_batch_into_lake(_env(spark, 1, seq0=700, keys=12), legacy, n_buckets=8, **RETAIN)
-    m = M._read_manifest(legacy)
-    roots = {int(b) for b, rel in m["buckets"].items() if rel.startswith("bucket=")}
-    plain = next(f"k{i:03d}" for i in range(12) if _bucket_of(f"k{i:03d}", 8) not in roots)
-    assert roots
-    M.merge_batch_into_lake(one.withColumn("pk", F.lit(plain)), legacy, n_buckets=None, **RETAIN)
-    check(0, 1, False, legacy)  # root buckets planned
-    check(1, 2, True, legacy)  # only the plain bucket

@@ -8,8 +8,9 @@ log/checkpoint design on plain JSON. What these tests pin:
 - readers resolve ANY retained version from checkpoint + tail replay;
 - the checkpoint cadence is deterministic and GC prunes the log below
   the newest checkpoint ≤ the retention floor;
-- format-1 monoliths (the pre-log manifest) migrate in place on their
-  next commit, with their retained history still time-travelable;
+- format-1 monoliths (the pre-log manifest) are refused when opened,
+  by readers, writers and the admin commands alike, and left as they
+  are;
 - a crash between the log-entry write and the pointer flip leaves the
   old version fully live and the orphan entry is overwritten by the
   next committer.
@@ -153,7 +154,7 @@ def _demote_to_format1(lake: str) -> None:
     import shutil
 
     ptr = M._read_pointer(lake)
-    hist = os.path.join(lake, M.HISTORY_DIR)
+    hist = os.path.join(lake, "_history")
     os.makedirs(hist, exist_ok=True)
     for v in range(int(ptr["floor"]), int(ptr["version"]) + 1):
         m = M._resolve_version(lake, ptr, v)
@@ -165,12 +166,11 @@ def _demote_to_format1(lake: str) -> None:
     shutil.rmtree(os.path.join(lake, M.LOG_DIR))
 
 
-def test_format1_lake_migrates_in_place(spark, tmp_path):
-    """A pre-log lake (monolithic manifest + _history duplicates)
-    keeps reading as-is, and its next commit migrates it: base
-    checkpointed into _log/, the commit written as a delta + pointer,
-    format-1-era versions still time-traveling through their retained
-    history JSONs until the floor passes them."""
+def test_format1_lake_is_refused(spark, tmp_path):
+    """A pre-log lake (monolithic manifest + _history duplicates) is
+    refused when opened: a read, a merge, DESCRIBE HISTORY and VACUUM
+    each raise the ValueError naming the format-1 layout, and none of
+    them writes to the lake."""
     env = _env(spark)
     lake = str(tmp_path / "lake")
     for i in (0, 1):
@@ -178,26 +178,29 @@ def test_format1_lake_migrates_in_place(spark, tmp_path):
             env.filter(F.col("event_seq") % 3 == i), lake, retain_versions=4
         )
     _demote_to_format1(lake)
-    assert "buckets" in M._read_pointer(lake)  # really format 1 now
-    before = _rows(spark, lake)
-    assert _rows(spark, lake, version=1) is not None  # history read works
 
-    M.merge_batch_into_lake(
-        env.filter(F.col("event_seq") % 3 == 2), lake, retain_versions=4
-    )  # the migrating commit
-    ptr = M._read_pointer(lake)
-    assert ptr["format"] == 2 and ptr["version"] == 3 and ptr["floor"] == 1
-    assert 2 in M._checkpoint_versions(lake)  # the migration checkpoint
-    # all three eras resolve: v1 (format-1 history), v2 (checkpoint),
-    # v3 (delta replay); the live snapshot is the full-history LWW
-    oracle = str(tmp_path / "oracle")
-    M.merge_batch_into_lake(env, oracle)
-    assert _rows(spark, lake) == _rows(spark, oracle)
-    assert _rows(spark, lake, version=2) == before
-    assert M._manifest_at(lake, 1)["version"] == 1
-    hist = M.describe_history(lake)
-    assert [h["version"] for h in hist] == [3, 2, 1]
-    assert hist[0]["is_live"] and hist[0]["operation"] == "merge"
+    def tree():
+        out = {}
+        for root, _, files in os.walk(lake):
+            for fn in files:
+                with open(os.path.join(root, fn), "rb") as fh:
+                    out[os.path.relpath(os.path.join(root, fn), lake)] = fh.read()
+        return out
+
+    before = tree()
+    refusals = {
+        "read": lambda: M.read_lake_snapshot(spark, lake),
+        "time travel": lambda: M.read_lake_snapshot(spark, lake, version=1),
+        "merge": lambda: M.merge_batch_into_lake(
+            env.filter(F.col("event_seq") % 3 == 2), lake, retain_versions=4
+        ),
+        "describe_history": lambda: M.describe_history(lake),
+        "vacuum_lake": lambda: M.vacuum_lake(lake),
+    }
+    for name, op in refusals.items():
+        with pytest.raises(ValueError, match="format-1 monolithic manifest"):
+            op()
+        assert tree() == before, name
 
 
 def test_crash_between_log_entry_and_pointer_flip(spark, tmp_path, monkeypatch):

@@ -467,8 +467,8 @@ def test_occ_refuses_legacy_layout(spark, tmp_path):
     """A pre-manifest legacy lake (root bucket=K dirs, no manifest)
     must NOT be treated as empty by the optimistic merge — that would
     replace the standing table with the batch and GC its files. It
-    refuses with the migrate-via-locked-merge instruction; one locked
-    merge adopts the layout and unblocks optimistic writers."""
+    raises the ValueError naming the layout and leaves the standing
+    files untouched."""
     import lapidus_spark.streaming.materialize as M
 
     env = _env(spark)
@@ -481,14 +481,11 @@ def test_occ_refuses_legacy_layout(spark, tmp_path):
         .write.partitionBy("bucket")
         .parquet(lake)
     )
-    assert M._read_manifest(lake) is None
-    with pytest.raises(ValueError, match="locked merge_batch_into_lake first"):
+    before = sorted(os.listdir(lake))
+    assert any(d.startswith("bucket=") for d in before)
+    with pytest.raises(ValueError, match="pre-manifest layout"):
         M.merge_batch_optimistic(env.limit(5), lake)
-    # the standing files are untouched by the refusal
-    assert any(d.startswith("bucket=") for d in os.listdir(lake))
-    M.merge_batch_into_lake(env.filter(F.col("event_seq") % 2 == 0), lake)  # migrates
-    M.merge_batch_optimistic(env.filter(F.col("event_seq") % 2 == 1), lake)
-    assert _rows(spark, lake) == _oneshot(spark, tmp_path)
+    assert sorted(os.listdir(lake)) == before
 
 
 def test_occ_held_flip_lock_consumes_attempts_not_crash(spark, tmp_path):

@@ -18,7 +18,7 @@ come back as a local relation: the parity suite pins that they equal
 the scan path and the filtered snapshot in rows, schema and ``last_ts``
 values across lake shapes, key sets and session zones, launch no Spark
 job, open the files the scan would, and fall back to the scan on a
-deletion vector, a legacy root layout, or a plan over the threshold."""
+deletion vector or a plan over the threshold."""
 
 from __future__ import annotations
 
@@ -395,8 +395,8 @@ def test_local_lookup_opens_the_scan_files(spark, seven_bucket_lake, monkeypatch
 
 def test_local_lookup_falls_back_to_the_scan(spark, tmp_path):
     """A plan over the threshold, a bucket carrying deletion-vector
-    entries, a legacy root ``bucket=`` dir and an epoch column type the
-    Arrow alignment does not map each take the scan path, and every
+    entries and an epoch column type the Arrow alignment does not map
+    each take the scan path, and every
     read still equals the filtered snapshot. A local lookup is read
     eagerly, so removing its files afterwards cannot fail it."""
     lake = str(tmp_path / "lake")
@@ -430,24 +430,6 @@ def test_local_lookup_falls_back_to_the_scan(spark, tmp_path):
         for f in os.listdir(d):
             os.remove(os.path.join(d, f))
     assert _rows(eager) == rows and rows
-
-    legacy = str(tmp_path / "legacy")
-    (
-        M.snapshot_stream(_env(spark, keys=12))
-        .withColumn("bucket", F.pmod(F.xxhash64("entity_id"), F.lit(8)).cast("int"))
-        .write.partitionBy("bucket")
-        .parquet(legacy)
-    )
-    M.merge_batch_into_lake(_env(spark, 1, seq0=700, keys=12), legacy, n_buckets=8)
-    m = M._read_manifest(legacy)
-    roots = {int(b) for b, rel in m["buckets"].items() if rel.startswith("bucket=")}
-    plain = {int(b) for b in m["buckets"]} - roots
-    assert roots and plain
-    in_root = next(k for k in (f"k{i:03d}" for i in range(12)) if _bucket_of(k, 8) in roots)
-    in_plain = next(k for k in (f"k{i:03d}" for i in range(12)) if _bucket_of(k, 8) in plain)
-    lake = legacy
-    check([in_root, in_plain], False)
-    check([in_plain], True)
 
     lake = str(tmp_path / "array_extra")
     tagged = _env(spark, keys=12).withColumn("tags", F.array("item"))

@@ -1445,14 +1445,13 @@ def test_merge_lake_checkpoint_restart(spark, tmp_path):
 
 
 def test_merge_lake_refuses_batch_only_overwrite_on_unreadable_table(spark, tmp_path):
-    """If the lake has (pre-manifest legacy) bucket directories but
-    cannot be READ, the merge must RAISE — falling through to a
-    batch-only merge would commit a manifest pointing the affected
-    buckets at batch-only content, silently dropping previously
-    merged data. Only a truly absent table may take the first-batch
-    path; and because data is staged to a fresh commit dir and the
-    manifest never flips, the failed merge leaves the damaged-but-
-    live files byte-identical."""
+    """A dir holding root ``bucket=`` dirs but no manifest is a table
+    in the retired pre-manifest layout, not an absent one: the merge
+    must RAISE the layout refusal — falling through to a batch-only
+    merge would commit a manifest pointing the affected buckets at
+    batch-only content and GC the standing files. Only a truly absent
+    table may take the first-batch path, and the refused merge leaves
+    the standing (here unreadable) files byte-identical."""
     from pyspark.sql import functions as F
 
     from lapidus_spark.streaming.materialize import merge_batch_into_lake
@@ -1463,7 +1462,7 @@ def test_merge_lake_refuses_batch_only_overwrite_on_unreadable_table(spark, tmp_
     env = normalize_events(load_table(spark, SF_DIR, "events")).filter(
         F.col("event_seq") < 100
     )
-    with pytest.raises(Exception):
+    with pytest.raises(ValueError, match="pre-manifest layout"):
         merge_batch_into_lake(env, str(lake))
     # and the garbage "table" was not replaced by batch-only content
     assert (lake / "bucket=0" / "junk.parquet").read_text() == "this is not parquet"
@@ -1708,44 +1707,39 @@ def test_merge_lake_sigkill_mid_commit(spark, tmp_path):
     assert _lake_rows(spark, lake) == _lake_rows(spark, oneshot)
 
 
-def test_merge_lake_legacy_layout_adoption(spark, tmp_path):
+def test_merge_lake_refuses_pre_manifest_layout(spark, tmp_path):
     """A pre-manifest lake (r6's root bucket=K dynamic-overwrite
-    layout) is adopted in place: the first manifest merge reads the
-    legacy dirs via partition inference, migrates touched buckets
-    into commit dirs, keeps untouched legacy dirs live, and ends at
-    the same snapshot as a from-scratch merge of the full history."""
+    layout, no manifest) is refused when opened: the merge and a
+    snapshot read raise the ValueError naming the layout, and the
+    standing dirs are left exactly as they were."""
     import os
 
     from pyspark.sql import functions as F
 
     from lapidus_spark.streaming.materialize import (
-        _read_manifest,
         merge_batch_into_lake,
+        read_lake_snapshot,
         snapshot_stream,
     )
 
     env = normalize_events(load_table(spark, SF_DIR, "events"))
-    old_half = env.filter(F.col("event_seq") % 2 == 0)
     lake = str(tmp_path / "legacy_lake")
-    # reproduce the legacy layout exactly: snapshot + bucket as a
-    # PARTITION column at the lake root, no manifest
+    # the legacy layout: snapshot + bucket as a PARTITION column at
+    # the lake root, no manifest
     (
-        snapshot_stream(old_half)
+        snapshot_stream(env.filter(F.col("event_seq") % 2 == 0))
         .withColumn("bucket", F.pmod(F.xxhash64("entity_id"), F.lit(8)).cast("int"))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(lake)
     )
-    assert _read_manifest(lake) is None
-    assert any(d.startswith("bucket=") for d in os.listdir(lake))
-
-    merge_batch_into_lake(env.filter(F.col("event_seq") % 2 == 1), lake, n_buckets=8)
-    m = _read_manifest(lake)
-    assert m is not None and m["n_buckets"] == 8
-
-    oneshot = str(tmp_path / "oneshot")
-    merge_batch_into_lake(env, oneshot)
-    assert _lake_rows(spark, lake) == _lake_rows(spark, oneshot)
+    before = sorted(os.listdir(lake))
+    assert any(d.startswith("bucket=") for d in before)
+    with pytest.raises(ValueError, match="pre-manifest layout"):
+        merge_batch_into_lake(env.filter(F.col("event_seq") % 2 == 1), lake, n_buckets=8)
+    with pytest.raises(ValueError, match="pre-manifest layout"):
+        read_lake_snapshot(spark, lake)
+    assert sorted(os.listdir(lake)) == before
 
 
 @pytest.mark.slow
@@ -2584,10 +2578,14 @@ def test_merge_lake_auto_compaction_skips_manifestless_lake(spark, tmp_path):
     assert not os.path.exists(os.path.join(lake, MANIFEST_NAME))
 
 
-def test_compact_lake_valve_convergence(spark, tmp_path):
+@pytest.mark.parametrize("concurrency", ["locked", "optimistic"])
+def test_compact_lake_valve_convergence(spark, tmp_path, concurrency):
     """A valve-split bucket must not be re-counted as degraded by the
-    next same-valve compaction (no endless rewrite churn); changing
-    the valve re-arms the check once, then converges again."""
+    next same-valve compaction (no endless rewrite churn) on either
+    concurrency path — the check keys on the compaction's recorded
+    commit ``rel``, plain-named on the locked path and nonce-named on
+    the optimistic one; changing the valve re-arms the check once,
+    then converges again."""
     from pyspark.sql import functions as F
 
     from lapidus_spark.streaming.materialize import (
@@ -2605,15 +2603,15 @@ def test_compact_lake_valve_convergence(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
     before = _snapshot_rows(spark, lake)
 
-    r1 = compact_lake(spark, lake, max_records_per_file=2)
+    r1 = compact_lake(spark, lake, max_records_per_file=2, concurrency=concurrency)
     assert r1["compacted_buckets"] > 0
     # same valve again: buckets the valve split stay converged
-    r2 = compact_lake(spark, lake, max_records_per_file=2)
-    assert r2 == {"version": r1["version"], "compacted_buckets": 0}
+    r2 = compact_lake(spark, lake, max_records_per_file=2, concurrency=concurrency)
+    assert r2["version"] == r1["version"] and r2["compacted_buckets"] == 0
     # valve change re-arms exactly once, then converges
-    r3 = compact_lake(spark, lake)
+    r3 = compact_lake(spark, lake, concurrency=concurrency)
     assert r3["version"] == r1["version"] + 1 and r3["compacted_buckets"] > 0
-    assert compact_lake(spark, lake)["compacted_buckets"] == 0
+    assert compact_lake(spark, lake, concurrency=concurrency)["compacted_buckets"] == 0
     assert _snapshot_rows(spark, lake) == before
 
 
