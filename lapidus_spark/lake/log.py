@@ -286,34 +286,70 @@ def _failpoint(name: str) -> None:
         os.kill(os.getpid(), signal.SIGKILL)
 
 
+def _retired_layout(lake_dir: str, layout: str, detail: str) -> ValueError:
+    """The refusal of the two layouts written before the commit log
+    (round 9): ``layout`` is ``"pre-manifest layout"`` (root
+    ``bucket=K`` dirs, no pointer) or ``"format-1 monolithic
+    manifest"`` (the bucket map inside the pointer, retained versions
+    under ``_history/``)."""
+    return ValueError(
+        f"lake at {lake_dir} has the {layout} ({detail}), which is no "
+        "longer supported; rebuild the table into a new lake"
+    )
+
+
 def _read_pointer(lake_dir: str) -> dict | None:
     """Raw commit-pointer JSON ``{format, version, floor}``, or None
     for a lake with no manifest yet — the one place every open of a
     lake goes through. Refuses the two layouts written before the
-    commit log (round 9) with a ``ValueError`` naming the layout: a
-    pointer carrying ``buckets`` is the format-1 monolithic manifest,
-    and root ``bucket=K`` dirs with no pointer are the pre-manifest
-    layout (treating that table as empty would let the next commit
-    replace it and GC its files). The dir is listed only when the
-    pointer is absent."""
+    commit log (``_retired_layout``): a pointer carrying ``buckets``
+    is the format-1 monolithic manifest, and root ``bucket=K`` dirs
+    with no pointer are the pre-manifest layout (treating that table
+    as empty would let the next commit replace it and GC its files).
+    The dir is listed only when the pointer is absent. What such a
+    lake left inside a format-2 log is refused where a version is
+    resolved (``_refuse_carried_layout``)."""
     try:
         with open(os.path.join(lake_dir, MANIFEST_NAME)) as f:
             pointer = json.load(f)
     except FileNotFoundError:
         if glob.glob(os.path.join(glob.escape(lake_dir), "bucket=*")):
-            raise ValueError(
-                f"lake at {lake_dir} has the pre-manifest layout (root "
-                f"bucket= dirs, no {MANIFEST_NAME}), which is no longer "
-                "supported; rebuild the table into a new lake"
+            raise _retired_layout(
+                lake_dir, "pre-manifest layout",
+                f"root bucket= dirs, no {MANIFEST_NAME}",
             ) from None
         return None
     if "buckets" in pointer:
-        raise ValueError(
-            f"lake at {lake_dir} has the format-1 monolithic manifest "
-            f"(the bucket map inside {MANIFEST_NAME}), which is no longer "
-            "supported; rebuild the table into a new lake"
+        raise _retired_layout(
+            lake_dir, "format-1 monolithic manifest",
+            f"the bucket map inside {MANIFEST_NAME}",
         )
     return pointer
+
+
+def _refuse_carried_layout(lake_dir: str, manifest: dict) -> None:
+    """Refuse a resolved version that still carries a retired layout
+    under a format-2 pointer — what adopting a pre-manifest lake or
+    migrating a format-1 one in place left in the log: a bucket
+    pointing at a root ``bucket=K`` dir (current writers point every
+    bucket at a ``commits/`` dir, or at an absolute path for a
+    shallow clone) or a bare-list ``entity_id`` zone map (current
+    ones map column → range). One pass over the just-parsed maps; no
+    filesystem call."""
+    for b, rel in manifest["buckets"].items():
+        if not (rel.startswith("commits/") or os.path.isabs(rel)):
+            raise _retired_layout(
+                lake_dir, "pre-manifest layout",
+                f"version {manifest['version']} points bucket {b} at the "
+                f"root dir {rel}",
+            )
+    for b, files in manifest.get("file_stats", {}).items():
+        if not all(isinstance(e, dict) for e in files.values()):
+            raise _retired_layout(
+                lake_dir, "format-1 monolithic manifest",
+                f"version {manifest['version']} carries a bare-list zone "
+                f"map for bucket {b}",
+            )
 
 
 def _delta_path(lake_dir: str, version: int) -> str:
@@ -430,7 +466,9 @@ def _resolve_version(
     """Resolve a committed version of a lake: newest
     checkpoint ≤ version, then replay the ≤CHECKPOINT_EVERY delta
     entries up to it. Versions below the pointer's retention ``floor``
-    fail fast (their log entries and data are GC'd).
+    fail fast (their log entries and data are GC'd). A version that
+    still carries a retired layout (``_refuse_carried_layout``), or
+    that exists only as a format-1 ``_history/`` copy, is refused.
 
     Reader-vs-GC contract: the log is listed and read with no lock, so
     a concurrent committer's GC can prune entries a slightly-stale
@@ -459,11 +497,19 @@ def _resolve_version(
             fresh = _read_pointer(lake_dir)
             if fresh is not None:
                 return _resolve_version(lake_dir, fresh, version, _retry=False)
+        if os.path.exists(os.path.join(lake_dir, "_history", f"{version:010d}.json")):
+            # a version from before an in-place format-1 migration:
+            # it was never written to the log
+            raise _retired_layout(
+                lake_dir, "format-1 monolithic manifest",
+                f"version {version} is retained only under _history/",
+            ) from None
         raise ValueError(
             f"lake at {lake_dir}: commit log is missing an entry needed to "
             f"resolve version {version} ({e.filename}) — log corrupted "
             "(partial restore, manual deletion?)"
         ) from None
+    _refuse_carried_layout(lake_dir, manifest)
     return manifest
 
 

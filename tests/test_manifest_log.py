@@ -45,6 +45,16 @@ def _rows(spark, lake, version=None):
     )
 
 
+def _tree(lake: str) -> dict:
+    """Every file of the lake, path → bytes."""
+    out = {}
+    for root, _, files in os.walk(lake):
+        for fn in files:
+            with open(os.path.join(root, fn), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, fn), lake)] = fh.read()
+    return out
+
+
 def _one_entity(env, uid="1"):
     return env.filter(F.col("pk").cast("string") == uid)
 
@@ -178,16 +188,7 @@ def test_format1_lake_is_refused(spark, tmp_path):
             env.filter(F.col("event_seq") % 3 == i), lake, retain_versions=4
         )
     _demote_to_format1(lake)
-
-    def tree():
-        out = {}
-        for root, _, files in os.walk(lake):
-            for fn in files:
-                with open(os.path.join(root, fn), "rb") as fh:
-                    out[os.path.relpath(os.path.join(root, fn), lake)] = fh.read()
-        return out
-
-    before = tree()
+    before = _tree(lake)
     refusals = {
         "read": lambda: M.read_lake_snapshot(spark, lake),
         "time travel": lambda: M.read_lake_snapshot(spark, lake, version=1),
@@ -200,7 +201,86 @@ def test_format1_lake_is_refused(spark, tmp_path):
     for name, op in refusals.items():
         with pytest.raises(ValueError, match="format-1 monolithic manifest"):
             op()
-        assert tree() == before, name
+        assert _tree(lake) == before, name
+
+
+def _rewrite_log(lake: str, edit) -> None:
+    """Apply ``edit`` in place to every checkpoint and delta entry."""
+    log_dir = os.path.join(lake, M.LOG_DIR)
+    for fn in os.listdir(log_dir):
+        path = os.path.join(log_dir, fn)
+        with open(path) as f:
+            entry = json.load(f)
+        edit(entry)
+        M._atomic_write_json(path, entry)
+
+
+def test_retired_layouts_carried_in_the_log_are_refused(spark, tmp_path):
+    """What adopting a pre-manifest lake or migrating a format-1 lake
+    in place left behind a format-2 pointer is refused where a version
+    resolves: a bucket still pointing at a root bucket= dir (a read, a
+    merge and a compaction each raise and write nothing), a bare-list
+    zone map, and a version retained only as a _history/ copy."""
+    env = _env(spark)
+    lake = str(tmp_path / "adopted")
+    M.merge_batch_into_lake(env, lake, n_buckets=4)
+    b, rel = sorted(M._read_manifest(lake)["buckets"].items())[0]
+    os.rename(os.path.join(lake, rel), os.path.join(lake, f"bucket={b}"))
+
+    def adopt(entry):
+        for key in ("buckets", "touched"):
+            if b in entry.get(key, {}):
+                entry[key][b] = f"bucket={b}"
+
+    _rewrite_log(lake, adopt)
+    before = _tree(lake)
+    refusals = {
+        "read": lambda: M.read_lake_snapshot(spark, lake),
+        "merge": lambda: M.merge_batch_into_lake(_one_entity(env), lake),
+        "compact_lake": lambda: M.compact_lake(spark, lake),
+    }
+    for name, op in refusals.items():
+        with pytest.raises(ValueError, match="pre-manifest layout"):
+            op()
+        assert _tree(lake) == before, name
+
+    # in-place migration carried pre-round-9 bare-list entity_id zone
+    # maps into the log
+    lake = str(tmp_path / "migrated")
+    M.merge_batch_into_lake(env, lake, n_buckets=4, retain_versions=4)
+    M.compact_lake(
+        spark, lake, target_files_per_bucket=0, max_records_per_file=50,
+        retain_versions=4,
+    )
+
+    def bare_list(entry):
+        for files in entry.get("file_stats", {}).values():
+            for f, stats in files.items():
+                files[f] = stats["entity_id"]
+
+    _rewrite_log(lake, bare_list)
+    with pytest.raises(ValueError, match="format-1 monolithic manifest"):
+        M.read_lake_snapshot(spark, lake)
+
+    # ... and left its pre-migration versions under _history/ only:
+    # the live version resolves from the migration checkpoint
+    lake = str(tmp_path / "history")
+    for i in (0, 1):
+        M.merge_batch_into_lake(
+            env.filter(F.col("event_seq") % 2 == i), lake, retain_versions=4
+        )
+    live = _rows(spark, lake)
+    ptr = M._read_pointer(lake)
+    M._atomic_write_json(M._checkpoint_path(lake, 2), M._resolve_version(lake, ptr, 2))
+    os.makedirs(os.path.join(lake, "_history"))
+    M._atomic_write_json(
+        os.path.join(lake, "_history", f"{1:010d}.json"), M._resolve_version(lake, ptr, 1)
+    )
+    os.remove(M._checkpoint_path(lake, 1))
+    os.remove(M._delta_path(lake, 1))
+    assert _rows(spark, lake) == live
+    with pytest.raises(ValueError, match="format-1 monolithic manifest"):
+        M.read_lake_snapshot(spark, lake, version=1)
 
 
 def test_crash_between_log_entry_and_pointer_flip(spark, tmp_path, monkeypatch):
